@@ -14,11 +14,19 @@ Semantics preserved here without the graph framework:
 - ``ask_for_tag`` asks once; ``ensure_user`` runs the Phase-1 build ONCE
   per session (``:601-603`` — the reference keys on presence, not tag);
 - every question routes through the Phase-2 answer flow
-  (:mod:`qna_router`), which shares one memoized pair of table dicts —
-  the Spark DataFrames are lazy views, so "recompute" never happens
-  unless the caller invalidates;
+  (:mod:`qna_router`) over one memoized pair of table dicts;
 - ``stop`` / ``exit`` / ``quit`` (case-insensitive, stripped) end the
   loop BEFORE answering (``route_after_question``, ``:645-655``).
+
+The DataFrames are lazy, so memoizing the dicts alone would re-run each
+table's shuffles on every turn that ships it. ``ensure_user`` therefore
+marks every Phase-1 table it gets with ``.cache()`` (lazy: no build-time
+job), so each table is computed at most once per session and later
+turns read the cached rows. ``games_played`` for the enough-data check
+is read once, in ``ensure_user``: the tables cannot change within a
+session. ``close()`` unpersists the tables the session cached; the meta
+tables are shared across sessions and stay with their producer
+(``MetaDatasetBuilder.run`` caches the ones Q&A ships).
 
 I/O and LLM calls are injected callables so the loop tests offline
 (FIXTURES.md §A6); nothing here touches stdin or the network.
@@ -29,6 +37,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from clashroyale_datapipeline_agent_spark.plans.qna_router import answer_question
@@ -68,7 +77,8 @@ class CoachSession:
 
     ``build_meta`` / ``build_user`` are the expensive phase builders
     (typically :mod:`plans.pipeline` wrappers); each runs AT MOST once per
-    session — the invocation counts are observable for tests.
+    session — the invocation counts are observable for tests. The user
+    tables are cached until :meth:`close`.
     """
 
     build_meta: Callable[[], dict[str, DataFrame]]
@@ -80,8 +90,10 @@ class CoachSession:
     meta_builds: int = 0
     user_builds: int = 0
     player_tag: str | None = None
+    games_played: int | None = None
     _meta_tables: dict[str, DataFrame] | None = field(default=None, repr=False)
     _user_tables: dict[str, DataFrame] | None = field(default=None, repr=False)
+    _cached: list[DataFrame] = field(default_factory=list, repr=False)
 
     def ensure_meta(self) -> dict[str, DataFrame]:
         """Phase-0 memoization (``ensure_meta``, ``:557-560``)."""
@@ -92,12 +104,25 @@ class CoachSession:
 
     def ensure_user(self, player_tag: str) -> dict[str, DataFrame]:
         """Phase-1 memoization (``ensure_user``, ``:601-603``) — presence-
-        keyed like the reference (a new tag mid-session does NOT rebuild)."""
+        keyed like the reference (a new tag mid-session does NOT rebuild).
+
+        Caches every table not cached already (those belong to whoever
+        cached them) and reads ``games_played`` from the cached tables."""
         if self._user_tables is None:
             self.player_tag = player_tag
-            self._user_tables = self.build_user(player_tag)
+            tables = self.build_user(player_tag)
             self.user_builds += 1
+            for df in tables.values():
+                if df.storageLevel == StorageLevel.NONE:
+                    self._cached.append(df.cache())
+            self.games_played = self.games_played_fn(tables)
+            self._user_tables = tables
         return self._user_tables
+
+    def close(self) -> None:
+        """Release the tables this session cached (idempotent)."""
+        while self._cached:
+            self._cached.pop().unpersist()
 
     def answer_one(self, question: str) -> dict:
         """One qa_answer hop over the memoized tables."""
@@ -111,7 +136,7 @@ class CoachSession:
             answer=self.answer,
             user_tables=user_tables,
             meta_tables=meta_tables,
-            games_played=self.games_played_fn(user_tables),
+            games_played=self.games_played,
         )
 
 
@@ -127,20 +152,24 @@ def run_coach_loop(
     ``ask(prompt)`` supplies the human inputs (tag, then questions);
     ``emit(text)`` receives each answer. Returns the final state: the
     tag, per-question result dicts, and the build counts (which a test
-    asserts are exactly 1/1 after multiple questions).
+    asserts are exactly 1/1 after multiple questions). The session's
+    cached tables are released when the loop ends, however it ends.
     """
     session.ensure_meta()
     tag = ask(TAG_PROMPT)
-    session.ensure_user(tag)
 
     results: list[dict] = []
-    for _ in range(max_turns):
-        question = ask(QUESTION_PROMPT)
-        if is_stop(question):
-            break
-        result = session.answer_one(question)
-        emit(result["answer"])
-        results.append({"question": question, **result})
+    try:
+        session.ensure_user(tag)
+        for _ in range(max_turns):
+            question = ask(QUESTION_PROMPT)
+            if is_stop(question):
+                break
+            result = session.answer_one(question)
+            emit(result["answer"])
+            results.append({"question": question, **result})
+    finally:
+        session.close()
 
     return {
         "player_tag": session.player_tag,

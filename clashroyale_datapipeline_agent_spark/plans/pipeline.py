@@ -292,7 +292,9 @@ class MetaDatasetBuilder:
     # -- entry point --------------------------------------------------------
 
     def run(self, players: list[dict]) -> dict[str, DataFrame]:
-        """Execute the loop; returns the meta table catalog."""
+        """Execute the loop; returns the meta table catalog. ``battles``,
+        ``meta_deck_summary`` and ``meta_matchup_summary`` come back
+        cached (lazily) and stay cached until the caller unpersists them."""
         if self.bucket_table:
             self.spark.sql(f"DROP TABLE IF EXISTS {self.bucket_table}")
         elif self.staging.exists():
@@ -323,12 +325,14 @@ class MetaDatasetBuilder:
             "summary": ba.compute_summary(battles),
             "participants": participants,
             "deck_type_matchups": matchups,
+            # the two tables every Phase-2 session ships: cached here, by
+            # their producer, so each coach turn reads rows, not plans
             "meta_deck_summary": M.build_meta_deck_summary(
                 participants, min_games_per_type=self.min_per_type
-            ),
+            ).cache(),
             "meta_matchup_summary": M.build_matchup_summary(
                 matchups, min_matchup_games=30
-            ),
+            ).cache(),
             "deck_type_counts_my": M.compute_deck_type_counts(battles, "my"),
             "deck_type_counts_opp": M.compute_deck_type_counts(battles, "opp"),
         }

@@ -41,7 +41,7 @@ class CoachServer:
 
     ``port=0`` binds an ephemeral port (tests); :attr:`port` reports the
     bound one. ``start()`` serves on a daemon thread; ``close()`` shuts
-    down and joins.
+    down, joins and releases the session's cached tables.
     """
 
     def __init__(
@@ -69,6 +69,7 @@ class CoachServer:
         self._httpd.server_close()
         if self._thread is not None:
             self._thread.join(timeout=5)
+        self.session.close()
 
     # -- request handlers (called from server threads) ---------------------
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import sys
 import tempfile
+import zlib
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -41,9 +42,10 @@ def main() -> None:
     print("Phase 0: building the meta dataset …")
 
     def fetch_battlelog(tag: str) -> list[dict]:
-        # stands in for GET /players/{tag}/battlelog
+        # stands in for GET /players/{tag}/battlelog; crc32, unlike the
+        # per-process salted hash(), seeds the same battles in every run
         return generate_raw_battles(
-            n_players=1, battles_per_player=25, seed=abs(hash(tag)) % 10_000
+            n_players=1, battles_per_player=25, seed=zlib.crc32(tag.encode())
         )
 
     builder = MetaDatasetBuilder(

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import zlib
 
 import pytest
 
@@ -58,9 +59,10 @@ def test_summary_melt_is_stringly(catalog):
 # ---------------------------------------------------------------------------
 
 def _mk_fetcher(n_per_player: int = 25):
-    """Scripted battlelog source keyed by tag (deterministic)."""
+    """Scripted battlelog source keyed by tag (deterministic: crc32 is not
+    salted per process the way hash() is)."""
     def fetch(tag: str) -> list[dict]:
-        idx = abs(hash(tag)) % 1000
+        idx = zlib.crc32(tag.encode()) % 1000
         return generate_raw_battles(
             n_players=1, battles_per_player=n_per_player, seed=idx
         )
@@ -265,6 +267,176 @@ def test_coach_loop_stop_variants(catalog):
     state = run_coach_loop(session, ask=lambda p: next(script))
     assert state["results"] == []
     assert counters["meta"] == 1 and counters["user"] == 1
+
+
+#: one classifier output per route, each asking for every table the
+#: route can ship
+_ROUTE_NEEDS = {
+    "user": ("user", ["USER_SUMMARY", "USER_DECK_SUMMARY"]),
+    "matchup": ("matchup", ["USER_MATCHUP_SUMMARY"]),
+    "meta": ("meta", ["META_DECK_SUMMARY", "META_DECK_MATCHUPS"]),
+    "card": ("card", ["USER_CARD_SUMMARY", "OPPONENT_CARD_SUMMARY"]),
+    "other": ("other", []),
+}
+_LLM_TABLES = (
+    "user_summary",
+    "user_deck_summary",
+    "user_matchup_summary",
+    "user_card_summary",
+    "opponent_card_summary",
+)
+
+
+def _route_classify(question: str) -> str:
+    category, needs = _ROUTE_NEEDS[question.split(":", 1)[0]]
+    return json.dumps({"category": category, "data_needs": needs})
+
+
+def _player_tables(spark, seed: int) -> dict:
+    """A fresh Phase-1 build of one player's five LLM tables."""
+    catalog = run_user_pipeline(
+        raw_battles_df(spark, n_players=1, battles_per_player=25, seed=seed)
+    )
+    return {k: catalog[f"llm_{k}"] for k in _LLM_TABLES}
+
+
+@pytest.fixture(scope="module")
+def meta_catalog(spark, tmp_path_factory):
+    """One-pass Phase 0 over a plain parquet staging dir."""
+    return MetaDatasetBuilder(
+        spark,
+        _mk_fetcher(),
+        str(tmp_path_factory.mktemp("meta") / "staging"),
+        min_total_battles=10_000_000,
+        min_games_per_type=0,
+        initial_sample=6,
+        max_loops=0,
+        seed=5,
+        bucket_table=None,
+    ).run(generate_leaderboard(20))
+
+
+def _shipped_meta(meta_catalog) -> dict:
+    return {k: meta_catalog[k] for k in ("meta_deck_summary", "meta_matchup_summary")}
+
+
+def test_meta_build_caches_the_tables_qna_ships(meta_catalog):
+    from pyspark import StorageLevel
+
+    for name in ("battles", "meta_deck_summary", "meta_matchup_summary"):
+        assert meta_catalog[name].storageLevel != StorageLevel.NONE, name
+
+
+def test_coach_session_computes_each_table_once(spark, meta_catalog):
+    """Turns over a session read its cached tables: games_played is
+    computed once, every turn's state and context equal those of the
+    same answer_question call over uncached tables, and a repeated turn
+    launches one job per table it reads — no recompute of the tables."""
+    from pyspark import StorageLevel
+
+    from clashroyale_datapipeline_agent_spark.plans.coach import (
+        CoachSession,
+        default_games_played,
+    )
+
+    meta = _shipped_meta(meta_catalog)
+    contexts: list[str] = []
+
+    def answer(question: str, context: str) -> str:
+        contexts.append(context)
+        return f"A[{question}] ctx:{len(context)}"
+
+    # expected turns first, before any session table is cached
+    uncached = _player_tables(spark, seed=11)
+    games = default_games_played(uncached)
+    expected = {}
+    for route in _ROUTE_NEEDS:
+        question = f"{route}: how am I doing?"
+        state = qr.answer_question(
+            question, classify=_route_classify, answer=answer,
+            user_tables=uncached, meta_tables=meta, games_played=games,
+        )
+        expected[route] = (state, contexts.pop())
+
+    calls = []
+
+    def games_played_fn(tables):
+        calls.append(1)
+        return default_games_played(tables)
+
+    built = _player_tables(spark, seed=11)
+    session = CoachSession(
+        build_meta=lambda: meta,
+        build_user=lambda tag: built,
+        classify=_route_classify,
+        answer=answer,
+        games_played_fn=games_played_fn,
+    )
+    session.ensure_meta()
+    session.ensure_user("#TAG")
+    assert session.games_played == games
+
+    sc = spark.sparkContext
+    for round_no in range(3):
+        for route in _ROUTE_NEEDS:
+            question = f"{route}: how am I doing?"
+            group = f"coach-turn-{round_no}-{route}"
+            sc.setJobGroup(group, group)
+            try:
+                state = session.answer_one(question)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert (state, contexts.pop()) == expected[route], route
+            if round_no:
+                # the JSON reads each shipped table once; the user route
+                # also renders its two tables as lines
+                reads = len(state["context_tables"]) + (2 if route == "user" else 0)
+                jobs = sc.statusTracker().getJobIdsForGroup(group)
+                assert len(jobs) <= reads, (route, len(jobs), reads)
+    assert len(calls) == 1
+
+    session.close()
+    for name, df in built.items():
+        assert df.storageLevel == StorageLevel.NONE, name
+    for name, df in meta.items():
+        assert df.storageLevel != StorageLevel.NONE, name
+
+
+@pytest.mark.parametrize("stops", [True, False], ids=["stop-word", "input-ends"])
+def test_coach_loop_releases_the_session_cache(spark, meta_catalog, stops):
+    """run_coach_loop closes its session when it ends, also when a turn
+    raises; a table cached before the session is not the session's."""
+    from pyspark import StorageLevel
+
+    from clashroyale_datapipeline_agent_spark.plans.coach import (
+        CoachSession,
+        run_coach_loop,
+    )
+
+    meta = _shipped_meta(meta_catalog)
+    pre_cached = spark.range(3).cache()
+    built = {**_player_tables(spark, seed=12), "pre_cached": pre_cached}
+    session = CoachSession(
+        build_meta=lambda: meta,
+        build_user=lambda tag: built,
+        classify=_route_classify,
+        answer=lambda q, ctx: "ok",
+    )
+    inputs = iter(["#TAG", "user: hi", "card: hi"] + (["stop"] if stops else []))
+    try:
+        if stops:
+            state = run_coach_loop(session, ask=lambda p: next(inputs))
+            assert len(state["results"]) == 2
+        else:
+            with pytest.raises(StopIteration):
+                run_coach_loop(session, ask=lambda p: next(inputs))
+        for name in _LLM_TABLES:
+            assert built[name].storageLevel == StorageLevel.NONE, name
+        assert pre_cached.storageLevel != StorageLevel.NONE
+        for name, df in meta.items():
+            assert df.storageLevel != StorageLevel.NONE, name
+    finally:
+        pre_cached.unpersist()
 
 
 def test_rendered_context_matches_reference_fstrings(spark):

@@ -93,3 +93,24 @@ def test_error_paths(served):
     assert _call(srv.port, "/qna", raw=b"{not json")[0] == 400
     assert _call(srv.port, "/qna", {"question": "  "})[0] == 400
     assert _call(srv.port, "/session", {})[0] == 400
+
+
+def test_close_releases_the_session_cache(spark):
+    """CoachServer.close() releases the tables the session cached."""
+    from pyspark import StorageLevel
+
+    user = {"user_summary": spark.range(2)}
+    session = CoachSession(
+        build_meta=lambda: {"meta_deck_summary": spark.range(4)},
+        build_user=lambda tag: user,
+        classify=lambda q: json.dumps({"category": "meta", "data_needs": []}),
+        answer=lambda q, ctx: f"A[{q}]",
+        games_played_fn=lambda tables: 100,
+    )
+    srv = CoachServer(session).start()
+    try:
+        assert _call(srv.port, "/session", {"player_tag": "#ABC"})[0] == 200
+        assert user["user_summary"].storageLevel != StorageLevel.NONE
+    finally:
+        srv.close()
+    assert user["user_summary"].storageLevel == StorageLevel.NONE

@@ -234,3 +234,21 @@ def test_scaling_fit_clamps_and_monotone_gate():
     assert sm._is_monotone([1.0, 2.8, 9.5])
     assert sm._is_monotone([5.0, 4.6, 9.0])  # small inversion = noise
     assert not sm._is_monotone([14.7, 8.8, 54.1])  # the r11 reject case
+
+
+def test_streaming_bench_batches_cover_gapped_ids():
+    """Micro-batch slicing of tools/streaming_bench.py: with ids that
+    start above 0 and have gaps, every id still lands in exactly one
+    batch (a gap can leave one empty, which is why the tool reports the
+    counted rows of each batch)."""
+    from streaming_bench import id_ranges
+
+    ids = [7, 8, 9, 15, 16, 40, 41, 42, 43, 97, 98, 120]
+    ranges = id_ranges(min(ids), max(ids), 4)
+    assert len(ranges) == 4
+    assert ranges[0][0] == min(ids) and ranges[-1][1] == max(ids) + 1
+    assert all(a[1] == b[0] for a, b in zip(ranges, ranges[1:]))
+    counts = [sum(start <= i < end for i in ids) for start, end in ranges]
+    assert counts == [5, 4, 0, 3] and sum(counts) == len(ids)
+    # a span narrower than the batch count still covers every id once
+    assert sum(e - s for s, e in id_ranges(3, 5, 8)) == 3

@@ -42,6 +42,15 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
+def id_ranges(lo: int, hi: int, batches: int) -> list[tuple[int, int]]:
+    """Half-open ``[start, end)`` id ranges splitting ``[lo, hi]`` into
+    ``batches`` contiguous slices: every id in the span lands in exactly
+    one slice, whatever the first id and however gapped the ids are."""
+    span = hi - lo + 1
+    cuts = [lo + i * span // batches for i in range(batches + 1)]
+    return list(zip(cuts, cuts[1:]))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--batches", type=int, default=5)
@@ -65,17 +74,16 @@ def main() -> None:
     docs = load_star_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    n_docs = docs.count()
-    per = max(1, n_docs // args.batches)
+    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     # deterministic micro-batches by id range; materialized once so the
     # timed region is the store, not the slicing
     doc_batches = [
         docs.filter(
-            (F.col("doc_id") >= i * per)
-            & (F.col("doc_id") < (i + 1) * per)
+            (F.col("doc_id") >= start) & (F.col("doc_id") < end)
         ).localCheckpoint(eager=True)
-        for i in range(args.batches)
+        for start, end in id_ranges(lo, hi, args.batches)
     ]
+    rows_per_batch = [b.count() for b in doc_batches]
     hash_batches = [
         b.select(
             F.col("doc_id").alias("id"),
@@ -142,7 +150,7 @@ def main() -> None:
         "unit": "sec",
         "sf_dir": sf_dir,
         "batches": args.batches,
-        "rows_per_batch": per,
+        "rows_per_batch": rows_per_batch,
         "reps": args.reps,
         "steps": {
             k: {"min": min(v["all"]), "all": v["all"]}
