@@ -18,6 +18,8 @@ import shutil
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clashroyale_datapipeline_agent_spark.session import run_legs
+
 
 def dot_col(a: Column, b: Column) -> Column:
     """Native dot product of two array<float/double> columns."""
@@ -1332,8 +1334,6 @@ class IvfPqIndex:
             # serial loop paid full job latency per cell — then commit
             # serially under the one-journal crash protocol. Any staging
             # failure raises before the first commit.
-            from concurrent.futures import ThreadPoolExecutor
-
             def stage(c: int) -> tuple[int, list[str], str]:
                 part = os.path.join(base, f"cell={c}")
                 old = sorted(
@@ -1344,15 +1344,9 @@ class IvfPqIndex:
                 expected = sum(sm._footer_rows(f) for f in old)
                 staging = os.path.join(sm._tmp_dir(base), f"c{c}")
                 shutil.rmtree(staging, ignore_errors=True)
-                self.spark.sparkContext.setJobDescription(
-                    f"IvfPqIndex.compact: stage cell {c}"
+                self.spark.read.parquet(*old).coalesce(1).write.parquet(
+                    staging
                 )
-                try:
-                    self.spark.read.parquet(*old).coalesce(1).write.parquet(
-                        staging
-                    )
-                finally:
-                    self.spark.sparkContext.setJobDescription(None)
                 parts = _glob.glob(os.path.join(staging, "part-*.parquet"))
                 if len(parts) != 1:
                     raise RuntimeError(
@@ -1368,13 +1362,15 @@ class IvfPqIndex:
                     )
                 return c, old, parts[0]
 
-            if len(todo) <= 1:
-                staged = [stage(c) for c in todo]
-            else:
-                with ThreadPoolExecutor(
-                    max_workers=min(8, len(todo))
-                ) as pool:
-                    staged = list(pool.map(stage, todo))
+            staged = run_legs(
+                self.spark,
+                {
+                    f"IvfPqIndex.compact: stage cell {c}": (
+                        lambda c=c: stage(c)
+                    )
+                    for c in todo
+                },
+            )
             for c, old, staged_part in staged:
                 new_rel = (
                     f"cell={c}/part-00000-{_uuid.uuid4()}.c000.snappy.parquet"

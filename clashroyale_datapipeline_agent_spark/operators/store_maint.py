@@ -67,6 +67,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clashroyale_datapipeline_agent_spark.session import run_legs
+
 #: Spark's own bucket-file name convention: the LAST ``_<digits>`` group
 #: before the extensions is the bucket id (BucketingUtils.getBucketId).
 _BUCKET_FILE_RE = re.compile(r".*_(\d+)(?:\..*)?$")
@@ -341,43 +343,6 @@ def _commit_bucket(
     shutil.rmtree(os.path.dirname(staged_part), ignore_errors=True)
 
 
-def _stage_all(
-    spark: SparkSession,
-    location: str,
-    work: list[tuple[int, list[str], DataFrame, int]],
-    sort_cols: list[str],
-) -> list[tuple[int, list[str], str]]:
-    """Stage every bucket's replacement file, overlapping the per-bucket
-    Spark jobs from a small thread pool (guide §2.6 — jobs are
-    independent; job descriptions are thread-local so each staging is
-    labelled). Returns ``(bucket, old_files, staged_part)`` in the input
-    order. Raises (with no durable change anywhere) if ANY staging
-    fails — the serial commit loop runs only on a fully-verified set,
-    which is strictly safer than the old stage-and-commit-per-bucket
-    interleave."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def stage(item):
-        b, _old, df, expected = item
-        spark.sparkContext.setJobDescription(
-            f"store_maint: stage bucket {b}"
-        )
-        try:
-            return _stage_bucket(spark, location, b, df, expected, sort_cols)
-        finally:
-            spark.sparkContext.setJobDescription(None)
-
-    if len(work) <= 1:
-        staged = [stage(item) for item in work]
-    else:
-        with ThreadPoolExecutor(max_workers=min(8, len(work))) as pool:
-            staged = list(pool.map(stage, work))
-    return [
-        (b, old, part)
-        for (b, old, _df, _n), part in zip(work, staged)
-    ]
-
-
 # ---------------------------------------------------------------------------
 # Compaction
 # ---------------------------------------------------------------------------
@@ -408,18 +373,26 @@ def store_compact(
         # two-phase (round-13, guide §2.6): stage every bucket's
         # replacement concurrently (independent tiny Spark jobs — a
         # serial loop left the cluster idle per job), then commit
-        # serially under the one-journal crash protocol
-        work = [
-            (
-                b,
-                files[b],
-                spark.read.schema(schema).parquet(*files[b]),
-                sum(_footer_rows(f) for f in files[b]),
-            )
-            for b in todo
-        ]
-        for b, old, staged in _stage_all(spark, loc, work, lay["sort_cols"]):
-            _commit_bucket(loc, b, old, staged)
+        # serially under the one-journal crash protocol. Any staging
+        # failure raises before the first commit.
+        staged = run_legs(
+            spark,
+            {
+                f"store_maint: stage bucket {b}": (
+                    lambda b=b: _stage_bucket(
+                        spark,
+                        loc,
+                        b,
+                        spark.read.schema(schema).parquet(*files[b]),
+                        sum(_footer_rows(f) for f in files[b]),
+                        lay["sort_cols"],
+                    )
+                )
+                for b in todo
+            },
+        )
+        for b, part in zip(todo, staged):
+            _commit_bucket(loc, b, files[b], part)
     spark.sql(f"REFRESH TABLE {table}")
     return {"compacted": todo, "skipped": skipped}
 
@@ -496,47 +469,41 @@ def store_retention_sweep(
             old = files.get(b, [])
             if not old:
                 return (b, old, None, 0)
-            spark.sparkContext.setJobDescription(
-                f"store_maint: retention probe/stage bucket {b}"
+            before = sum(_footer_rows(f) for f in old)
+            bucket_df = spark.read.schema(schema).parquet(*old)
+            matched = (
+                bucket_df.join(d, list(d.columns), "left_semi").count()
+                if verify
+                else None
             )
-            try:
-                before = sum(_footer_rows(f) for f in old)
-                bucket_df = spark.read.schema(schema).parquet(*old)
-                matched = (
-                    bucket_df.join(d, list(d.columns), "left_semi").count()
-                    if verify
-                    else None
-                )
-                keep = bucket_df.join(d, list(d.columns), "left_anti")
-                if matched == 0:
+            keep = bucket_df.join(d, list(d.columns), "left_anti")
+            if matched == 0:
+                return (b, old, None, 0)
+            if matched is None:
+                # without the verify join we still must not rewrite
+                # a bucket nothing matched in (byte-stability
+                # contract): count the keep side once and compare
+                # footers
+                kept_n = keep.count()
+                if kept_n == before:
                     return (b, old, None, 0)
-                if matched is None:
-                    # without the verify join we still must not rewrite
-                    # a bucket nothing matched in (byte-stability
-                    # contract): count the keep side once and compare
-                    # footers
-                    kept_n = keep.count()
-                    if kept_n == before:
-                        return (b, old, None, 0)
-                    expected = kept_n
-                else:
-                    expected = before - matched
-                staged = _stage_bucket(
-                    spark, loc, b, keep, expected, lay["sort_cols"]
+                expected = kept_n
+            else:
+                expected = before - matched
+            staged = _stage_bucket(
+                spark, loc, b, keep, expected, lay["sort_cols"]
+            )
+            return (b, old, staged, before - expected)
+
+        results = run_legs(
+            spark,
+            {
+                f"store_maint: retention probe/stage bucket {b}": (
+                    lambda b=b: probe_and_stage(b)
                 )
-                return (b, old, staged, before - expected)
-            finally:
-                spark.sparkContext.setJobDescription(None)
-
-        if len(affected) <= 1:
-            results = [probe_and_stage(b) for b in affected]
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(8, len(affected))
-            ) as pool:
-                results = list(pool.map(probe_and_stage, affected))
+                for b in affected
+            },
+        )
 
         # phase 2: commit serially, in bucket order, under the
         # one-journal crash protocol

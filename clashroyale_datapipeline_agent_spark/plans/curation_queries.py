@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clashroyale_datapipeline_agent_spark.plans.star_queries import _t, register
+from clashroyale_datapipeline_agent_spark.session import run_legs
 
 # DuckDB-side whitespace tokenization ≡ operators/text.tokens_col
 # (split on \s+ runs after trim/lower, drop empties).
@@ -302,10 +303,10 @@ def semantic_dedup_multiprobe_stats(
     # zero full GCs and max GC pause 17 ms, so the r13 stall does not
     # reproduce on the current tree and the overlap ships. If a stall
     # recurs, the probe captures the blocked JVM thread in the act.
-    def census_leg():
-        spark.sparkContext.setJobDescription("multiprobe_stats: census")
-        try:
-            return pairs.agg(
+    census, n_vectors, n_pruned_single, n_pruned_multi = run_legs(
+        spark,
+        {
+            "multiprobe_stats: census": lambda: pairs.agg(
                 cnt(F.col("is_true")).alias("n_true_pairs"),
                 cnt(F.col("in_single")).alias("single_candidate_pairs"),
                 cnt(F.col("in_multi")).alias("multi_candidate_pairs"),
@@ -315,59 +316,20 @@ def semantic_dedup_multiprobe_stats(
                 cnt(F.col("is_true") & F.col("in_multi")).alias(
                     "multi_captured"
                 ),
-            ).collect()[0]
-        finally:
-            spark.sparkContext.setJobDescription(None)
-
-    def count_leg():
-        spark.sparkContext.setJobDescription("multiprobe_stats: n_vectors")
-        try:
-            return assigned.count()
-        finally:
-            spark.sparkContext.setJobDescription(None)
-
-    def prune_leg():
-        spark.sparkContext.setJobDescription("multiprobe_stats: prune replay")
-        try:
-            return int(
+            ).collect()[0],
+            "multiprobe_stats: n_vectors": assigned.count,
+            "multiprobe_stats: prune replay": lambda: int(
                 semantic_dedup_prune(v, seeds, threshold=0.3)
                 .agg(F.sum(F.col("pruned").cast("long")))
                 .collect()[0][0]
-            )
-        finally:
-            spark.sparkContext.setJobDescription(None)
-
-    def multi_leg():
-        spark.sparkContext.setJobDescription(
-            "multiprobe_stats: multiprobe replay"
-        )
-        try:
-            return int(
+            ),
+            "multiprobe_stats: multiprobe replay": lambda: int(
                 semantic_dedup_multiprobe(v, seeds, threshold=0.3)
                 .agg(F.sum(F.col("pruned").cast("long")))
                 .collect()[0][0]
-            )
-        finally:
-            spark.sparkContext.setJobDescription(None)
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = [
-            pool.submit(t)
-            for t in (census_leg, count_leg, prune_leg, multi_leg)
-        ]
-        # await every leg before raising so a sibling leg's failure is
-        # never silently discarded (the _overlap discipline)
-        results, errors = [], []
-        for f in futs:
-            try:
-                results.append(f.result())
-            except Exception as e:  # noqa: BLE001 — re-raised below
-                errors.append(e)
-        if errors:
-            raise errors[0]
-    census, n_vectors, n_pruned_single, n_pruned_multi = results
+            ),
+        },
+    )
     row = (
         int(n_vectors), int(census["n_true_pairs"]),
         int(census["single_candidate_pairs"]),

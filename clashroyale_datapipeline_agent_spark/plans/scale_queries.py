@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clashroyale_datapipeline_agent_spark.plans.star_queries import _t, register
+from clashroyale_datapipeline_agent_spark.session import run_legs
 
 HEXP = "'0123456789abcdef'"
 HEX_CHARS = "0123456789abcdef"
@@ -1600,8 +1601,6 @@ def dedup_lsh_band_sweep_xx(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     from clashroyale_datapipeline_agent_spark.operators.dedup import (
         shingles_col,
     )
@@ -1609,63 +1608,48 @@ def dedup_lsh_band_sweep_xx(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread_if_narrow,
     )
 
-    def xx_leg():
-        spark.sparkContext.setJobDescription("band_sweep_xx: xx full-corpus leg")
-        try:
-            return {
-                r["config"]: r
-                for r in _lsh_sweep(
-                    spark, sf_dir,
-                    F.array(*[_mh_xx(i) for i in range(_LSH_N_HASHES)]),
-                    F.lit(True),
-                ).collect()
-            }
-        finally:
-            spark.sparkContext.setJobDescription(None)
-
-    def md5_leg():
-        spark.sparkContext.setJobDescription("band_sweep_xx: md5 slice leg")
-        try:
-            return {
-                r["config"]: r
-                for r in _lsh_sweep(
-                    spark, sf_dir,
-                    F.array(*[_mh_md5(i) for i in range(_LSH_N_HASHES)]),
-                    F.col("doc_id") % 4 == 0,
-                ).collect()
-            }
-        finally:
-            spark.sparkContext.setJobDescription(None)
+    def sweep(minhash, keep) -> dict:
+        return {
+            r["config"]: r
+            for r in _lsh_sweep(
+                spark, sf_dir,
+                F.array(*[minhash(i) for i in range(_LSH_N_HASHES)]),
+                keep,
+            ).collect()
+        }
 
     def exact_leg():
-        spark.sparkContext.setJobDescription("band_sweep_xx: exact-dup census leg")
-        try:
-            d = spread_if_narrow(_t(spark, sf_dir, "documents"))
-            return int(
-                d.filter(F.size(shingles_col(F.col("text"), 3)) > 0)
-                .groupBy(F.md5("text").alias("fp"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(
-                    F.coalesce(
-                        F.sum(F.floor(F.col("n") * (F.col("n") - 1) / 2)),
-                        F.lit(0),
-                    ).cast("bigint")
-                )
-                .collect()[0][0]
+        d = spread_if_narrow(_t(spark, sf_dir, "documents"))
+        return int(
+            d.filter(F.size(shingles_col(F.col("text"), 3)) > 0)
+            .groupBy(F.md5("text").alias("fp"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(
+                F.coalesce(
+                    F.sum(F.floor(F.col("n") * (F.col("n") - 1) / 2)),
+                    F.lit(0),
+                ).cast("bigint")
             )
-        finally:
-            spark.sparkContext.setJobDescription(None)
+            .collect()[0][0]
+        )
 
     # the three legs are INDEPENDENT driver-blocking computations
     # (xx full-corpus sweep, md5 quarter-slice sweep, exact-dup
     # census); overlapping them from driver threads (guide §2.6) turns
     # sum-of-legs wall-clock into max-of-legs — each leg's eager
     # checkpoints and collects leave the cluster idle otherwise
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fx, fm, fe = (
-            pool.submit(xx_leg), pool.submit(md5_leg), pool.submit(exact_leg)
-        )
-        xx, md5, exact_pairs = fx.result(), fm.result(), fe.result()
+    xx, md5, exact_pairs = run_legs(
+        spark,
+        {
+            "band_sweep_xx: xx full-corpus leg": lambda: sweep(
+                _mh_xx, F.lit(True)
+            ),
+            "band_sweep_xx: md5 slice leg": lambda: sweep(
+                _mh_md5, F.col("doc_id") % 4 == 0
+            ),
+            "band_sweep_xx: exact-dup census leg": exact_leg,
+        },
+    )
 
     cfgs = [c for c, _, _ in _LSH_CONFIGS]
     xc = {c: int(xx[c]["n_candidates"]) if c in xx else 0 for c in cfgs}
@@ -2256,48 +2240,15 @@ def dedup_band_store_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = f"t_band_maint_{_uuid.uuid4().hex[:8]}"
 
     def counts(phase: str) -> list[tuple]:
-        spark.sparkContext.setJobDescription(f"band_maint: screen {phase}")
-        try:
-            out = dedup_incremental_neardup_bucketed(
-                spark, batch, tbl, batch_keys=batch_keys
-            )
-            return [
-                (phase, r["source"], r["status"], r["n"])
-                for r in out.groupBy("source", "status")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-                .collect()
-            ]
-        finally:
-            spark.sparkContext.setJobDescription(None)
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _overlap(*thunks):
-        # READ-ONLY lifecycle steps between two mutations are
-        # independent driver-blocking legs; overlap them (guide §2.6)
-        # so each mutation waits on max-of-legs, not sum-of-legs.
-        # Job descriptions set inside the legs are thread-local in the
-        # JVM because PySpark's pinned-thread mode (default since 3.2)
-        # maps each Python thread to its own JVM thread; without it the
-        # labels could cross-tag, which is cosmetic only. All legs are
-        # awaited before any failure propagates, so a sibling leg's
-        # failure is never silently discarded mid-flight.
-        with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-            futs = [pool.submit(t) for t in thunks]
-            results, errors = [], []
-            for f in futs:
-                try:
-                    results.append(f.result())
-                except Exception as e:  # noqa: BLE001 — re-raised below
-                    errors.append(e)
-            if errors:
-                if len(errors) > 1:
-                    raise RuntimeError(
-                        f"{len(errors)} overlapped legs failed: "
-                        + "; ".join(repr(e) for e in errors)
-                    ) from errors[0]
-                raise errors[0]
-            return results
+        out = dedup_incremental_neardup_bucketed(
+            spark, batch, tbl, batch_keys=batch_keys
+        )
+        return [
+            (phase, r["source"], r["status"], r["n"])
+            for r in out.groupBy("source", "status")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+            .collect()
+        ]
 
     try:
         write_lsh_band_store(
@@ -2307,20 +2258,35 @@ def dedup_band_store_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             hist_keys.filter(F.col("id") % 2 == 1), tbl,
             num_buckets=8, mode="append",
         )
+        # READ-ONLY lifecycle steps between two mutations are
+        # independent driver-blocking legs; overlap them (guide §2.6)
+        # so each mutation waits on max-of-legs, not sum-of-legs.
         # screen + footer readout (store reads) + the survivor min
         # (hist-only, store-independent) all precede the first mutation
-        pre, stats0, first_survivor = _overlap(
-            lambda: counts("a_pre"),
-            lambda: sm.store_file_stats(spark, tbl).collect(),
-            lambda: hist.filter(F.col("doc_id") % 5 != 1)
-            .agg(F.min("doc_id"))
-            .collect()[0][0],
+        pre, stats0, first_survivor = run_legs(
+            spark,
+            {
+                "band_maint: screen a_pre": lambda: counts("a_pre"),
+                "band_maint: footer stats a_pre": lambda: sm.store_file_stats(
+                    spark, tbl
+                ).collect(),
+                "band_maint: first survivor": lambda: hist.filter(
+                    F.col("doc_id") % 5 != 1
+                )
+                .agg(F.min("doc_id"))
+                .collect()[0][0],
+            },
         )
         rows0 = sum(r["n_rows"] for r in stats0)
         sm.store_compact(spark, tbl, max_files=1)
-        rows1_stats, post_raw = _overlap(
-            lambda: sm.store_file_stats(spark, tbl).collect(),
-            lambda: counts("x"),
+        rows1_stats, post_raw = run_legs(
+            spark,
+            {
+                "band_maint: footer stats x": lambda: sm.store_file_stats(
+                    spark, tbl
+                ).collect(),
+                "band_maint: screen x": lambda: counts("x"),
+            },
         )
         rows1 = sum(r["n_rows"] for r in rows1_stats)
         rows_conserved = rows1 == rows0
@@ -2384,16 +2350,23 @@ def dedup_band_store_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         # set equality in ONE job (round-13): both sides are distinct,
         # so |A\B| + |B\A| = rows of the full-outer join where either
         # side is absent — the two exceptAll counts collapsed into one
-        mismatches, post_retention = _overlap(
-            lambda: store_keys.withColumn("_s", F.lit(True))
+        mismatch_rows = (
+            store_keys.withColumn("_s", F.lit(True))
             .join(
                 survivor_keys.withColumn("_v", F.lit(True)),
                 "band_key",
                 "full_outer",
             )
             .filter(F.col("_s").isNull() | F.col("_v").isNull())
-            .count(),
-            lambda: counts("c_post_retention"),
+        )
+        mismatches, post_retention = run_legs(
+            spark,
+            {
+                "band_maint: retention membership": mismatch_rows.count,
+                "band_maint: screen c_post_retention": lambda: counts(
+                    "c_post_retention"
+                ),
+            },
         )
         retention_membership_exact = mismatches == 0
     finally:

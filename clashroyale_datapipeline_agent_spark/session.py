@@ -10,12 +10,31 @@ Scale notes (100 TB design target):
   cluster set it ~2-3x total cores and let AQE coalesce.
 - Arrow is enabled for the few driver-boundary conversions (plots, LLM
   context) and for pandas UDFs (vectorized batch transfer).
+
+Concurrent legs: :func:`run_legs` is the one way the engine overlaps
+independent driver-blocking Spark work (staging writes, census collects).
+Its contract:
+
+- ``run_legs(spark, {label: thunk})`` returns the thunks' results in the
+  dict's order; ``{}`` returns ``[]``.
+- One leg runs inline on the caller's thread; two or more run on a pool
+  of ``min(8, n)`` threads.
+- Every leg's jobs carry the caller's job group (each pooled leg is
+  wrapped separately in ``pyspark.inheritable_thread_target``) and the
+  job description ``label``, by convention ``query: step``. The
+  description the thread had before is restored afterwards.
+- Every leg is awaited before anything is raised. One failure re-raises
+  that leg's exception unchanged; several raise one ``RuntimeError``
+  naming each ``label: repr(error)``, chained from the first.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -78,3 +97,46 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_legs(spark: SparkSession, legs: dict[str, Callable[[], Any]]) -> list:
+    """Run independent legs concurrently and return their results in
+    ``legs`` order (contract in the module docstring)."""
+    sc = spark.sparkContext
+
+    def labelled(label: str, thunk: Callable[[], Any]) -> Callable[[], Any]:
+        def leg():
+            prev = sc.getLocalProperty("spark.job.description")
+            sc.setJobDescription(label)
+            try:
+                return thunk()
+            finally:
+                sc.setJobDescription(prev)
+
+        return leg
+
+    if len(legs) <= 1:
+        return [labelled(label, thunk)() for label, thunk in legs.items()]
+    # one wrap per leg: a wrap clones the caller's local properties once,
+    # so a wrapper shared across threads would share one properties
+    # object and the legs' descriptions would overwrite each other
+    with ThreadPoolExecutor(max_workers=min(8, len(legs))) as pool:
+        futs = [
+            pool.submit(inheritable_thread_target(spark)(labelled(label, thunk)))
+            for label, thunk in legs.items()
+        ]
+    # leaving the pool awaited every leg, so no failure is raised while a
+    # sibling is still running
+    errors = [
+        (label, e)
+        for label, f in zip(legs, futs)
+        if (e := f.exception()) is not None
+    ]
+    if len(errors) == 1:
+        raise errors[0][1]
+    if errors:
+        raise RuntimeError(
+            f"{len(errors)} of {len(legs)} legs failed: "
+            + "; ".join(f"{label}: {e!r}" for label, e in errors)
+        ) from errors[0][1]
+    return [f.result() for f in futs]

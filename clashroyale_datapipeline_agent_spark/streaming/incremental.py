@@ -18,6 +18,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clashroyale_datapipeline_agent_spark.session import run_legs
+
 COUNTER_SCHEMA = "deck_type string, games bigint, wins bigint, losses bigint, draws bigint"
 
 
@@ -289,15 +291,9 @@ class _BatchLogStore:
                     # zero rows: a segment with no files IS the fold
                     return None
                 before = self._footer_rows(files)
-                self.spark.sparkContext.setJobDescription(
-                    f"compact {self.root.name}/{sub} -> seg={new_hi}"
-                )
-                try:
-                    self.spark.read.parquet(
-                        *[str(f) for f in files]
-                    ).write.parquet(str(tmp))
-                finally:
-                    self.spark.sparkContext.setJobDescription(None)
+                self.spark.read.parquet(
+                    *[str(f) for f in files]
+                ).write.parquet(str(tmp))
                 after = self._footer_rows(self._pq_files(tmp))
                 if after != before:
                     shutil.rmtree(tmp, ignore_errors=True)
@@ -315,25 +311,15 @@ class _BatchLogStore:
             # staging failure raises BEFORE the marker is touched;
             # orphan tmp dirs of successful sibling legs are rolled
             # back by _recover_segments on the next maintenance call.
-            # Job descriptions are thread-local under PySpark's
-            # pinned-thread mode (default since 3.2).
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(self._subs)) as pool:
-                futs = [pool.submit(_stage, sub) for sub in self._subs]
-                results, errors = [], []
-                for f in futs:
-                    try:
-                        results.append(f.result())
-                    except Exception as e:  # noqa: BLE001 — re-raised below
-                        errors.append(e)
-                if errors:
-                    if len(errors) > 1:
-                        raise RuntimeError(
-                            f"{len(errors)} staging legs failed: "
-                            + "; ".join(repr(e) for e in errors)
-                        ) from errors[0]
-                    raise errors[0]
+            results = run_legs(
+                self.spark,
+                {
+                    f"compact {self.root.name}/{sub} -> seg={new_hi}": (
+                        lambda sub=sub: _stage(sub)
+                    )
+                    for sub in self._subs
+                },
+            )
             staged: list[tuple[Path, Path]] = [r for r in results if r]
             # COMMIT: atomically replace the marker; everything after
             # this line is completed by _recover_segments if we crash

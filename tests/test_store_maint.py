@@ -143,6 +143,39 @@ def test_compact_untouched_buckets_byte_stable_and_noop(spark):
         spark.sql("DROP TABLE IF EXISTS t_maint_stab")
 
 
+def test_compact_staging_jobs_stay_in_callers_job_group(spark):
+    """Concurrent bucket staging launches its jobs from pool threads;
+    every one of them must still carry the caller's job group, so no
+    job of the compaction is left ungrouped."""
+    from clashroyale_datapipeline_agent_spark.operators.dedup import (
+        lsh_band_keys,
+        write_lsh_band_store,
+    )
+
+    keys = lsh_band_keys(_hist_docs(spark))
+    write_lsh_band_store(
+        keys.filter(F.col("id") % 2 == 0), "t_maint_group", num_buckets=8
+    )
+    write_lsh_band_store(
+        keys.filter(F.col("id") % 2 == 1), "t_maint_group",
+        num_buckets=8, mode="append",
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup("g-store-compact", "store_compact under a group")
+        try:
+            res = sm.store_compact(spark, "t_maint_group", max_files=1)
+        finally:
+            sc.setJobGroup(None, None)
+        assert len(res["compacted"]) >= 2  # staged from a pool
+        assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+        assert tracker.getJobIdsForGroup("g-store-compact")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_maint_group")
+
+
 def test_retention_sweep_superseded_hashes(spark):
     """Keep-policy retention on the (band_key, h) Hamming key-map
     store: removed assets' rows are swept, survivors keep vetoing,

@@ -1375,6 +1375,39 @@ def test_neardup_store_single_signing_keys_identical(spark, tmp_path):
         assert got == want, f"keys log of batch {bid} drifted"
 
 
+def test_neardup_store_compact_jobs_stay_in_callers_job_group(
+    spark, tmp_path
+):
+    """`compact()` stages its two sub-stores (keys, docs) from pool
+    threads; every staging job must still carry the caller's job group,
+    so no job of the fold is left ungrouped."""
+    from clashroyale_datapipeline_agent_spark.streaming.incremental import (
+        NearDupBandStore,
+    )
+
+    store = NearDupBandStore(spark, str(tmp_path / "nd_group"))
+    for bid in (0, 1):
+        store.apply_batch(
+            spark.createDataFrame(
+                [(10 * bid + i, f"batch {bid} document {i} words w{bid}{i}")
+                 for i in range(4)],
+                "doc_id long, text string",
+            ),
+            bid,
+        )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g-neardup-compact", "NearDupBandStore.compact")
+    try:
+        res = store.compact()
+    finally:
+        sc.setJobGroup(None, None)
+    assert res["folded"] == [0]
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert tracker.getJobIdsForGroup("g-neardup-compact")
+
+
 def test_hamming_verified_legacy_guard_fires_once(spark, tmp_path):
     """Round-14: the NULL-h legacy-layout guard runs once per store
     instance (it was one O(history) job per micro-batch). It must

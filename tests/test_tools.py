@@ -252,3 +252,21 @@ def test_streaming_bench_batches_cover_gapped_ids():
     assert counts == [5, 4, 0, 3] and sum(counts) == len(ids)
     # a span narrower than the batch count still covers every id once
     assert sum(e - s for s, e in id_ranges(3, 5, 8)) == 3
+
+
+def test_concurrent_legs_only_through_run_legs():
+    """One way to run concurrent legs: only ``session.run_legs`` may
+    build a thread pool or clear a job description; everywhere else
+    goes through it, so every leg keeps its caller's job group."""
+    import re
+
+    pkg = Path(__file__).resolve().parents[1] / "clashroyale_datapipeline_agent_spark"
+    pool = re.compile(r"^\s*(from|import)\s+concurrent\.futures\b", re.M)
+    clear = re.compile(r"setJobDescription\(\s*None\s*\)")
+    offenders = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if p.name != "session.py"
+        and (pool.search(p.read_text()) or clear.search(p.read_text()))
+    ]
+    assert offenders == []

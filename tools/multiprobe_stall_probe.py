@@ -5,7 +5,8 @@ Round 13 measured the query's four post-checkpoint legs (all-pairs
 census, row count, two prune-operator replays) overlapped from driver
 threads: min dropped 5.4 → 3.2 s but ~1/3 of reps stalled 20–56 s, and
 the change was reverted without a root cause. This probe reproduces the
-overlap shape under a WATCHDOG: any rep that exceeds ``--stall-sec``
+overlap shape, launched through the same ``session.run_legs`` the query
+uses, under a WATCHDOG: any rep that exceeds ``--stall-sec``
 (default 15) gets a full JVM thread dump (``jcmd Thread.print``) and a
 Python ``faulthandler`` dump written to ``--out`` while the stall is
 in progress, so the blocked thread is caught in the act instead of
@@ -68,7 +69,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from clashroyale_datapipeline_agent_spark.session import get_spark
+    from clashroyale_datapipeline_agent_spark.session import get_spark, run_legs
 
     extra = {}
     if args.gc_log:
@@ -135,37 +136,26 @@ def main() -> None:
         )
         cnt = lambda c: F.sum(F.when(c, 1).otherwise(0)).cast("bigint")  # noqa: E731
 
-        def census_leg():
-            spark.sparkContext.setJobDescription("probe: census")
-            return pairs.agg(
+        return {
+            "probe: census": lambda: pairs.agg(
                 cnt(F.col("is_true")).alias("n_true_pairs"),
                 cnt(F.col("in_single")).alias("single_candidate_pairs"),
                 cnt(F.col("in_multi")).alias("multi_candidate_pairs"),
                 cnt(F.col("is_true") & F.col("in_single")).alias("sc"),
                 cnt(F.col("is_true") & F.col("in_multi")).alias("mc"),
-            ).collect()[0]
-
-        def count_leg():
-            spark.sparkContext.setJobDescription("probe: count")
-            return assigned.count()
-
-        def prune_leg():
-            spark.sparkContext.setJobDescription("probe: prune replay")
-            return int(
+            ).collect()[0],
+            "probe: count": assigned.count,
+            "probe: prune replay": lambda: int(
                 semantic_dedup_prune(v, seeds, threshold=0.3)
                 .agg(F.sum(F.col("pruned").cast("long")))
                 .collect()[0][0]
-            )
-
-        def multi_leg():
-            spark.sparkContext.setJobDescription("probe: multiprobe replay")
-            return int(
+            ),
+            "probe: multiprobe replay": lambda: int(
                 semantic_dedup_multiprobe(v, seeds, threshold=0.3)
                 .agg(F.sum(F.col("pruned").cast("long")))
                 .collect()[0][0]
-            )
-
-        return [census_leg, count_leg, prune_leg, multi_leg]
+            ),
+        }
 
     def dump(tag: str) -> None:
         ts = time.strftime("%H%M%S")
@@ -204,13 +194,9 @@ def main() -> None:
         w = threading.Thread(target=watchdog, daemon=True)
         w.start()
         if args.mode == "overlap":
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=4) as pool:
-                futs = [pool.submit(t) for t in legs]
-                res = [f.result() for f in futs]
+            res = run_legs(spark, legs)
         else:
-            res = [t() for t in legs]
+            res = [run_legs(spark, {k: t})[0] for k, t in legs.items()]
         dt = time.perf_counter() - t0
         done.set()
         if dt > args.stall_sec:
