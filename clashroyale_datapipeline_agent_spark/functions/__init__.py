@@ -4,11 +4,7 @@ from clashroyale_datapipeline_agent_spark.functions.common import (  # noqa: F40
     normalize_tag,
     win_rate,
 )
-from clashroyale_datapipeline_agent_spark.functions.cards import (  # noqa: F401
-    card_meta_map,
-    classify_deck_col,
-    deck_feature_cols,
-)
+from clashroyale_datapipeline_agent_spark.functions.cards import classify_deck_col  # noqa: F401
 from clashroyale_datapipeline_agent_spark.functions.classify_oracle import (  # noqa: F401
     classify_deck_oracle,
 )

@@ -3,11 +3,18 @@
 The reference classifies a deck with a per-row Python dict lookup + rule
 cascade (``/root/reference/src/analytics/deck_type.py:38-152``). Here the
 121-row card dimension becomes a **map literal** folded into the plan, and
-the cascade becomes a ``when`` chain over array expressions — zero shuffle,
-zero Python, fully whole-stage-codegen'd. (The broadcast-join formulation of
-J1 lives in ``operators/card_stats.py`` where per-card rows are wanted
-anyway; for per-deck features the map literal is strictly better: no
-explode/re-agg round trip.)
+the cascade becomes a ``CASE WHEN`` chain over array expressions — zero
+shuffle, zero Python, fully whole-stage-codegen'd. (The broadcast-join
+formulation of J1 lives in ``operators/card_stats.py`` where per-card rows
+are wanted anyway; for per-deck features the map literal is strictly
+better: no explode/re-agg round trip.)
+
+The cascade is generated once per process as SQL text and handed to
+``F.expr``: building the same tree from ``F.lit``/``F.transform`` Column
+calls cost ~1,700 py4j round trips per deck column (several per map entry,
+flag name and lambda), which Phase 1 and Phase 0 paid on every plan they
+built. Double literals carry a ``D`` suffix so the expression types equal
+the ``F.lit(float)`` ones (a bare ``3.0`` is a DECIMAL in SQL).
 
 Fidelity notes (the subtle bits, per SURVEY.md §7.4):
 - avg_elixir divides by 8.0 regardless of how many elixirs resolved
@@ -26,7 +33,6 @@ Fidelity notes (the subtle bits, per SURVEY.md §7.4):
 from __future__ import annotations
 
 from functools import lru_cache
-from pathlib import Path
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -41,93 +47,63 @@ ARCHETYPE_BEATDOWN = "Beatdown"
 ARCHETYPE_HYBRID = "Hybrid"
 
 
-def card_meta_map(path: str | Path | None = None) -> Column:
-    """The card elixir dimension as a flat ``map<string,int>`` literal.
+def _sql_str(value: str) -> str:
+    """A SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    Only elixir needs a value lookup; the three boolean flags compile to
-    ``isin`` literal lists instead (9/22/7 names), keeping the classify
-    expression tree small enough for whole-stage codegen (a map-of-structs
-    formulation blew past comfortable codegen size once referenced from
-    every feature). The card with null elixir is simply omitted — same
-    semantics as the reference's isinstance-drop (``deck_type.py:51-53``).
-    For dimensions too big to inline, use the broadcast-join path.
+
+@lru_cache(maxsize=8)
+def _classify_sql(cards: str) -> str:
+    """The F1 cascade over the deck column ``cards`` as SQL text.
+
+    Mirrors ``_precompute_deck_values`` + ``classify_deck``
+    (``deck_type.py:38-152``) including its quirks (see module docstring).
+    Only elixir needs a value lookup, so the dimension inlines as a flat
+    ``map<string,int>`` (the null-elixir card omitted, same semantics as
+    the reference's isinstance-drop); the three boolean flags compile to
+    ``IN`` lists (9/22/7 names). Flag counts are per card *instance*
+    (duplicates count twice), matching the reference's per-meta iteration —
+    hence ``filter`` + ``IN``, not ``array_intersect`` (which would dedup).
     """
-    rows = load_card_metadata_rows(path)
-    entries: list[Column] = []
-    for r in rows:
-        if r["elixir"] is None:
-            continue
-        entries.append(F.lit(r["name"]))
-        entries.append(F.lit(int(r["elixir"])))
-    return F.create_map(*entries)
-
-
-@lru_cache(maxsize=4)
-def _flag_names(path: str | None = None) -> dict[str, tuple[str, ...]]:
-    rows = load_card_metadata_rows(path)
-    return {
-        flag: tuple(r["name"] for r in rows if r[flag])
-        for flag in ("is_bait_piece", "is_bridge_spam_piece", "is_big_tank")
-    }
-
-
-def deck_feature_cols(cards: Column, meta_map: Column) -> dict[str, Column]:
-    """The classifier's precomputed per-deck features as columns.
-
-    Mirrors ``_precompute_deck_values`` (``deck_type.py:38-82``) including
-    its quirks (see module docstring). ``cards`` is ``array<string>``.
-    Flag counts are per card *instance* (duplicates count twice), matching
-    the reference's per-meta iteration — hence ``filter``+``isin``, not
-    ``array_intersect`` (which would dedup).
-    """
-    flags = _flag_names()
-    elixirs = F.filter(
-        F.transform(cards, lambda c: F.element_at(meta_map, c)),
-        lambda e: e.isNotNull(),
+    rows = load_card_metadata_rows()
+    deck = f"`{cards}`"
+    elixir_map = ", ".join(
+        f"{_sql_str(r['name'])}, {int(r['elixir'])}" for r in rows if r["elixir"] is not None
     )
-    n_elixirs = F.size(elixirs)
-    avg_elixir = F.when(n_elixirs == 0, F.lit(3.0)).otherwise(
-        F.aggregate(elixirs, F.lit(0.0), lambda acc, x: acc + x) / F.lit(8.0)
+    elixirs = (
+        f"filter(transform({deck}, c -> element_at(map({elixir_map}), c)), e -> e IS NOT NULL)"
     )
-    four_cycle = F.when(n_elixirs == 0, F.lit(12.0)).otherwise(
-        F.aggregate(
-            F.slice(F.array_sort(elixirs), 1, 4),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    avg_elixir = (
+        f"CASE WHEN size({elixirs}) = 0 THEN 3.0D"
+        f" ELSE aggregate({elixirs}, 0.0D, (acc, x) -> acc + x) / 8.0D END"
+    )
+    four_cycle = (
+        f"CASE WHEN size({elixirs}) = 0 THEN 12.0D"
+        f" ELSE aggregate(slice(array_sort({elixirs}), 1, 4), 0.0D, (acc, x) -> acc + x) END"
     )
 
-    def _flag_count(flag: str) -> Column:
-        names = flags[flag]
-        return F.size(F.filter(cards, lambda c: c.isin(*names)))
+    def flag_count(flag: str) -> str:
+        names = ", ".join(_sql_str(r["name"]) for r in rows if r[flag])
+        return f"size(filter({deck}, c -> c IN ({names})))"
 
-    return {
-        "avg_elixir": avg_elixir,
-        "four_card_cycle_cost": four_cycle,
-        "has_xbow": F.array_contains(cards, "X-Bow"),
-        "has_mortar": F.array_contains(cards, "Mortar"),
-        "bait_pieces": _flag_count("is_bait_piece"),
-        "bridge_spam_count": _flag_count("is_bridge_spam_piece"),
-        "big_tank_count": _flag_count("is_big_tank"),
-    }
+    cascade = [
+        (f"{deck} IS NULL OR size({deck}) = 0", ARCHETYPE_HYBRID),
+        (f"array_contains({deck}, 'X-Bow') OR array_contains({deck}, 'Mortar')", ARCHETYPE_SIEGE),
+        (f"{flag_count('is_bait_piece')} >= 3", ARCHETYPE_BAIT),
+        (f"{four_cycle} <= 9", ARCHETYPE_CYCLE),
+        (f"{flag_count('is_bridge_spam_piece')} >= 2", ARCHETYPE_BRIDGE_SPAM),
+        (f"{flag_count('is_big_tank')} >= 1 AND {avg_elixir} >= 3.5D", ARCHETYPE_BEATDOWN),
+    ]
+    whens = " ".join(f"WHEN {cond} THEN {_sql_str(label)}" for cond, label in cascade)
+    return f"CASE {whens} ELSE {_sql_str(ARCHETYPE_HYBRID)} END"
 
 
-def classify_deck_col(cards: Column, meta_map: Column | None = None) -> Column:
-    """Archetype of an ``array<string>`` deck column — the F1 cascade.
+def classify_deck_col(cards: str) -> Column:
+    """Archetype of the ``array<string>`` deck column named ``cards`` — the
+    F1 cascade.
 
     Parity: ``classify_deck`` (``deck_type.py:85-152``). Empty/null deck ->
     Hybrid (``:97-98``; null arrays only arise from malformed rows, which the
     reference would have skipped upstream).
     """
-    if meta_map is None:
-        meta_map = card_meta_map()
-    v = deck_feature_cols(cards, meta_map)
-    return (
-        F.when(cards.isNull() | (F.size(cards) == 0), F.lit(ARCHETYPE_HYBRID))
-        .when(v["has_xbow"] | v["has_mortar"], F.lit(ARCHETYPE_SIEGE))
-        .when(v["bait_pieces"] >= 3, F.lit(ARCHETYPE_BAIT))
-        .when(v["four_card_cycle_cost"] <= 9, F.lit(ARCHETYPE_CYCLE))
-        .when(v["bridge_spam_count"] >= 2, F.lit(ARCHETYPE_BRIDGE_SPAM))
-        .when((v["big_tank_count"] >= 1) & (v["avg_elixir"] >= 3.5), F.lit(ARCHETYPE_BEATDOWN))
-        .otherwise(F.lit(ARCHETYPE_HYBRID))
-    )
+    return F.expr(_classify_sql(cards))

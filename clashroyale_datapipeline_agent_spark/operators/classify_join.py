@@ -2,8 +2,9 @@
 alternative to the literal-expression classifier (SURVEY.md §2.3 J1).
 
 ``functions/cards.classify_deck_col`` inlines the 121-card dimension into
-the plan (zero shuffle — the default). This variant is the shape you need
-when the dimension does NOT fit in literals (say, a 10M-row item table):
+the plan as a map literal in its generated SQL text (zero shuffle — the
+default). This variant is the shape you need when the dimension does NOT
+fit in literals (say, a 10M-row item table):
 
     explode(cards) → broadcast left-outer join dim → groupBy(row id)
     re-aggregating the classifier features → cascade

@@ -39,8 +39,8 @@ def build_participant_table(battles: DataFrame) -> DataFrame:
         & F.col("result").isin("win", "loss", "draw")
     ).withColumns(
         {
-            "_my_type": classify_deck_col(F.col("my_cards")),
-            "_opp_type": classify_deck_col(F.col("opp_cards")),
+            "_my_type": classify_deck_col("my_cards"),
+            "_opp_type": classify_deck_col("opp_cards"),
         }
     )
 
@@ -86,8 +86,8 @@ def compute_symmetric_matchups(battles: DataFrame) -> DataFrame:
     map-side only (no extra shuffle beyond the final groupBy).
     """
     typed = battles.select(
-        classify_deck_col(F.col("my_cards")).alias("_my_type"),
-        classify_deck_col(F.col("opp_cards")).alias("_opp_type"),
+        classify_deck_col("my_cards").alias("_my_type"),
+        classify_deck_col("opp_cards").alias("_opp_type"),
         "result",
     )
     # POV doubling via explode, NOT a union: union branches are separate
@@ -138,7 +138,7 @@ def compute_deck_type_counts(battles: DataFrame, side: str) -> DataFrame:
     """
     col = "my_cards" if side == "my" else "opp_cards"
     counts = (
-        battles.select(classify_deck_col(F.col(col)).alias("deck_type"))
+        battles.select(classify_deck_col(col).alias("deck_type"))
         .groupBy("deck_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -181,8 +181,8 @@ def combined_type_counts_single_scan(battles: DataFrame) -> DataFrame:
     doubled = battles.select(
         F.explode(
             F.array(
-                classify_deck_col(F.col("my_cards")),
-                classify_deck_col(F.col("opp_cards")),
+                classify_deck_col("my_cards"),
+                classify_deck_col("opp_cards"),
             )
         ).alias("deck_type")
     )

@@ -162,7 +162,7 @@ def cr_classify_archetype_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL transcription of the classifier cascade."""
     decks = _battles_full(spark, sf_dir).select("my_cards", "result")
     typed = decks.select(
-        classify_deck_col(F.col("my_cards")).alias("deck_type"), "result"
+        classify_deck_col("my_cards").alias("deck_type"), "result"
     )
     out = typed.groupBy("deck_type").agg(*counter_aggs())
     return out.select(

@@ -2,7 +2,9 @@
 re-expressed as lazily-planned DataFrame DAGs + a driver loop.
 
 - Phase 1 (user analytics): one linear DAG over a cached normalized scan —
-  ``user_analytics_tables`` + ``user_llm_tables``.
+  ``user_analytics_tables`` + ``user_llm_tables``. Its input is one
+  player's battlelog (a few dozen rows from the API), cached on a single
+  partition, so every table is one Spark job once the cache is filled.
 - Phase 0 (meta builder): iterative accumulate-and-recompute driver loop —
   ``MetaDatasetBuilder`` with the stopping predicate of
   ``meta_workflow.py:378-464``. Battles accumulate in a parquet staging dir
@@ -50,8 +52,17 @@ def user_analytics_tables(battles: DataFrame) -> dict[str, DataFrame]:
 
     The reference recomputes deck classification 4×; here ``with_deck_types``
     runs once on the cached input and every aggregate shares it.
+
+    Contract: ``battles`` is one player's battlelog, a few dozen rows. It is
+    cached on ONE partition: ``SinglePartition`` satisfies every downstream
+    aggregate, global sort and window, so no Exchange sits above the cached
+    relation and each table collects in a single job (no shuffle stage, no
+    range-sort sampling job). ``repartition(1)``, not ``coalesce(1)``: the
+    scan below it keeps its parallelism, which matters for a Python-list
+    source whose per-partition Python-worker cost would otherwise run
+    serially.
     """
-    battles = battles.cache()
+    battles = battles.repartition(1).cache()
     typed = ba.with_deck_types(battles)
 
     summary = ba.compute_summary(battles)

@@ -6,7 +6,6 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from clashroyale_datapipeline_agent_spark.functions import (
     classify_deck_col,
@@ -53,7 +52,7 @@ def classified(spark):
     )
     got = {
         r["idx"]: r["archetype"]
-        for r in df.select("idx", classify_deck_col(F.col("cards")).alias("archetype")).collect()
+        for r in df.select("idx", classify_deck_col("cards").alias("archetype")).collect()
     }
     return decks, got
 
@@ -74,6 +73,26 @@ def test_priority_invariants(classified):
 def test_all_archetypes_reachable(classified):
     decks, got = classified
     assert {"Siege", "Bait", "Cycle", "Bridge Spam", "Beatdown", "Hybrid"} <= set(got.values())
+
+
+def test_every_card_in_the_dimension(spark):
+    """Each card as an 8-copy deck and in a mixed deck: every map entry and
+    every flag list of the generated cascade is exercised."""
+    names = [r["name"] for r in load_card_metadata_rows()]
+    n = len(names)
+    decks = []
+    for i, name in enumerate(names):
+        decks.append([name] * 8)
+        decks.append([name] + [names[(i + 17 * k) % n] for k in range(1, 8)])
+    df = spark.createDataFrame(
+        [(i, d) for i, d in enumerate(decks)], "idx int, cards array<string>"
+    )
+    got = {
+        r["idx"]: r["archetype"]
+        for r in df.select("idx", classify_deck_col("cards").alias("archetype")).collect()
+    }
+    for i, deck in enumerate(decks):
+        assert got[i] == classify_deck_oracle(deck), f"deck {i}: {deck}"
 
 
 def test_join_classifier_matches_expression(spark, classified):

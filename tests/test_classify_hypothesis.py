@@ -7,7 +7,6 @@ from __future__ import annotations
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from clashroyale_datapipeline_agent_spark.functions import (
     classify_deck_col,
@@ -30,7 +29,7 @@ def classify_batch(spark):
         df = spark.createDataFrame(
             [(i, d) for i, d in enumerate(decks)], "i int, cards array<string>"
         )
-        rows = df.select("i", classify_deck_col(F.col("cards")).alias("a")).collect()
+        rows = df.select("i", classify_deck_col("cards").alias("a")).collect()
         return [r["a"] for r in sorted(rows, key=lambda r: r["i"])]
 
     return run

@@ -515,6 +515,45 @@ def test_answer_question_includes_rendered_text(catalog):
 # Bucketed battle store (SCALE.md wiring: VERDICT r1 item 6)
 # ---------------------------------------------------------------------------
 
+def _exec_plan_nodes(node):
+    """Class names of an executed plan's operators, descending through AQE
+    wrappers and query stages but not into a cached relation's plan (an
+    ``InMemoryTableScanExec`` has no children)."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _exec_plan_nodes(node.executedPlan())
+    out = [name]
+    if name.endswith("QueryStageExec"):
+        return out + _exec_plan_nodes(node.plan())
+    kids = node.children()
+    for i in range(kids.size()):
+        out += _exec_plan_nodes(kids.apply(i))
+    return out
+
+
+def test_phase1_tables_one_job_each_no_exchange(spark):
+    """A player's catalog is cached on one partition: the first table's
+    collect fills the cache, every other table is a single job, and no LLM
+    table's final plan shuffles above the cached relation (a plain
+    ``cache()`` ran 25 jobs here: AQE shuffle stages and range-sort
+    sampling over a few dozen rows)."""
+    tables = _player_tables(spark, seed=21)
+    sc = spark.sparkContext
+    group = "phase1-one-job-per-table"
+    sc.setJobGroup(group, group)
+    try:
+        for df in tables.values():
+            df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 7, len(jobs)
+    for name, df in tables.items():
+        nodes = _exec_plan_nodes(df._jdf.queryExecution().executedPlan())
+        assert "InMemoryTableScanExec" in nodes, (name, nodes)
+        assert not [n for n in nodes if "Exchange" in n], (name, nodes)
+
+
 def test_meta_loop_bucketed_store_no_exchange(spark, tmp_path):
     """The DEFAULT Phase-0 staging path is the bucketed store: without any
     opt-in, the per-player most-recent-k window (W1) over the staged table

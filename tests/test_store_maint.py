@@ -170,7 +170,9 @@ def test_compact_staging_jobs_stay_in_callers_job_group(spark):
         finally:
             sc.setJobGroup(None, None)
         assert len(res["compacted"]) >= 2  # staged from a pool
-        assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+        # only new ids count: the status store evicts its oldest 100 jobs
+        # whenever it passes 1,000, so ids seen before may be gone
+        assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
         assert tracker.getJobIdsForGroup("g-store-compact")
     finally:
         spark.sql("DROP TABLE IF EXISTS t_maint_group")

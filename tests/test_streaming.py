@@ -1404,7 +1404,9 @@ def test_neardup_store_compact_jobs_stay_in_callers_job_group(
     finally:
         sc.setJobGroup(None, None)
     assert res["folded"] == [0]
-    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    # only new ids count: the status store evicts its oldest 100 jobs
+    # whenever it passes 1,000, so ids seen before may be gone
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
     assert tracker.getJobIdsForGroup("g-neardup-compact")
 
 
