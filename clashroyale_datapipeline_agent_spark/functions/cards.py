@@ -37,6 +37,7 @@ from functools import lru_cache
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from clashroyale_datapipeline_agent_spark.functions.common import sql_str
 from clashroyale_datapipeline_agent_spark.sources.readers import load_card_metadata_rows
 
 ARCHETYPE_SIEGE = "Siege"
@@ -47,13 +48,8 @@ ARCHETYPE_BEATDOWN = "Beatdown"
 ARCHETYPE_HYBRID = "Hybrid"
 
 
-def _sql_str(value: str) -> str:
-    """A SQL string literal."""
-    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 @lru_cache(maxsize=8)
-def _classify_sql(cards: str) -> str:
+def classify_deck_sql(cards: str) -> str:
     """The F1 cascade over the deck column ``cards`` as SQL text.
 
     Mirrors ``_precompute_deck_values`` + ``classify_deck``
@@ -68,7 +64,7 @@ def _classify_sql(cards: str) -> str:
     rows = load_card_metadata_rows()
     deck = f"`{cards}`"
     elixir_map = ", ".join(
-        f"{_sql_str(r['name'])}, {int(r['elixir'])}" for r in rows if r["elixir"] is not None
+        f"{sql_str(r['name'])}, {int(r['elixir'])}" for r in rows if r["elixir"] is not None
     )
     elixirs = (
         f"filter(transform({deck}, c -> element_at(map({elixir_map}), c)), e -> e IS NOT NULL)"
@@ -83,7 +79,7 @@ def _classify_sql(cards: str) -> str:
     )
 
     def flag_count(flag: str) -> str:
-        names = ", ".join(_sql_str(r["name"]) for r in rows if r[flag])
+        names = ", ".join(sql_str(r["name"]) for r in rows if r[flag])
         return f"size(filter({deck}, c -> c IN ({names})))"
 
     cascade = [
@@ -94,8 +90,8 @@ def _classify_sql(cards: str) -> str:
         (f"{flag_count('is_bridge_spam_piece')} >= 2", ARCHETYPE_BRIDGE_SPAM),
         (f"{flag_count('is_big_tank')} >= 1 AND {avg_elixir} >= 3.5D", ARCHETYPE_BEATDOWN),
     ]
-    whens = " ".join(f"WHEN {cond} THEN {_sql_str(label)}" for cond, label in cascade)
-    return f"CASE {whens} ELSE {_sql_str(ARCHETYPE_HYBRID)} END"
+    whens = " ".join(f"WHEN {cond} THEN {sql_str(label)}" for cond, label in cascade)
+    return f"CASE {whens} ELSE {sql_str(ARCHETYPE_HYBRID)} END"
 
 
 def classify_deck_col(cards: str) -> Column:
@@ -106,4 +102,4 @@ def classify_deck_col(cards: str) -> Column:
     Hybrid (``:97-98``; null arrays only arise from malformed rows, which the
     reference would have skipped upstream).
     """
-    return F.expr(_classify_sql(cards))
+    return F.expr(classify_deck_sql(cards))

@@ -2,6 +2,11 @@
 
 All native expressions — no Python UDFs — so they stay inside whole-stage
 codegen and never block predicate pushdown.
+
+The win-rate and POV-flip rules are defined once, as SQL fragments
+(``win_rate_sql``, ``flip_result_sql``) that the Phase 1 operators splice
+into their statements; ``win_rate`` and ``flip_result`` wrap the same text
+in ``F.expr`` for callers that build Columns.
 """
 
 from __future__ import annotations
@@ -10,17 +15,27 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def flip_result(result: Column) -> Column:
-    """POV flip: win<->loss, draw (and anything else) unchanged.
+def sql_str(value: str) -> str:
+    """A SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def flip_result_sql(result: str) -> str:
+    """POV flip of the SQL expression ``result``: win<->loss, draw (and
+    anything else) unchanged.
 
     Parity: ``/root/reference/src/analytics/meta_analytics.py:32-38`` (dup at
     ``meta_standardize.py:22-28``). Draws never flip.
     """
     return (
-        F.when(result == "win", F.lit("loss"))
-        .when(result == "loss", F.lit("win"))
-        .otherwise(result)
+        f"CASE WHEN ({result}) = 'win' THEN 'loss'"
+        f" WHEN ({result}) = 'loss' THEN 'win' ELSE ({result}) END"
     )
+
+
+def flip_result(result: str) -> Column:
+    """:func:`flip_result_sql` as a Column; ``result`` is SQL text."""
+    return F.expr(flip_result_sql(result))
 
 
 def normalize_tag(tag: Column, *, url: bool = False) -> Column:
@@ -35,18 +50,24 @@ def normalize_tag(tag: Column, *, url: bool = False) -> Column:
     return F.concat(F.lit(prefix), bare)
 
 
-def win_rate(wins: Column, games: Column) -> Column:
-    """``wins/games`` with the reference's divide-by-zero convention.
+def win_rate_sql(wins: str, games: str) -> str:
+    """``wins/games`` over two SQL expressions, with the reference's
+    divide-by-zero convention.
 
     Two reference idioms (ternary -> 0.0 at ``user_analytics.py:80``; pandas
     ``.where(games>0, 1)`` divisor at ``meta_analytics.py:86``) produce the
-    same value (0/1 == 0.0); unified here as ``otherwise(0.0)`` per
-    SURVEY.md §2.2 P10.
+    same value (0/1 == 0.0); unified here as ``ELSE 0.0`` per SURVEY.md §2.2
+    P10. ``0.0D`` is a DOUBLE literal (a bare ``0.0`` is a DECIMAL in SQL).
     """
     return (
-        F.when(games > 0, wins.cast("double") / games.cast("double"))
-        .otherwise(F.lit(0.0))
+        f"CASE WHEN ({games}) > 0"
+        f" THEN CAST({wins} AS DOUBLE) / CAST({games} AS DOUBLE) ELSE 0.0D END"
     )
+
+
+def win_rate(wins: str, games: str) -> Column:
+    """:func:`win_rate_sql` as a Column; ``wins`` and ``games`` are SQL text."""
+    return F.expr(win_rate_sql(wins, games))
 
 
 def advantage_label(wr: Column, margin: float = 0.05) -> Column:

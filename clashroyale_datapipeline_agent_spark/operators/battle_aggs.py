@@ -16,35 +16,85 @@ Sort parity note: the reference sorts with Python's stable sort and
 order among full ties. Distributed sorts have no insertion order, so every
 ordering here carries the group key as a final tiebreaker — documented
 deviation, required for deterministic output (SURVEY.md §7.4 risk #3).
+
+Every operator is a SQL text builder ``*_sql(src, ...)`` over the input
+relation ``src`` — a ``{name}`` placeholder that ``spark.sql`` binds to a
+DataFrame argument, or another builder's statement in parentheses — and
+the DataFrame functions run one builder as one ``spark.sql`` statement.
+Phase 1 (``plans/pipeline.py``) nests builders so that each of its tables
+is ONE statement over the cached battles: one analysed DataFrame and a
+handful of py4j round trips per table, where the same plan built from
+Column calls cost hundreds. Texts are generated once per process per
+parameter set (``lru_cache``); SQL text and Column calls compile to the
+same Catalyst plan.
+
+``spark.sql`` binds a DataFrame argument as a temporary view and drops it
+after analysis, and dropping a view whose plan is a cached plan uncaches
+that plan: cache an input after building the tables over it, as
+``plans/pipeline.py`` does, or pass a projection of it.
 """
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from clashroyale_datapipeline_agent_spark.functions.cards import classify_deck_col
-from clashroyale_datapipeline_agent_spark.functions.common import flip_result, win_rate
+from clashroyale_datapipeline_agent_spark.functions.cards import classify_deck_sql
+from clashroyale_datapipeline_agent_spark.functions.common import (
+    flip_result_sql,
+    sql_str,
+    win_rate_sql,
+)
+
+
+def _counters(result: str) -> list[tuple[str, str]]:
+    """(name, aggregate SQL) of the counter block over column ``result``."""
+    r = f"`{result}`"
+    games = "count(1)"
+    wins = f"sum(CASE WHEN {r} = 'win' THEN 1 ELSE 0 END)"
+    return [
+        ("games", games),
+        ("wins", wins),
+        ("losses", f"sum(CASE WHEN {r} = 'loss' THEN 1 ELSE 0 END)"),
+        ("draws", f"sum(CASE WHEN NOT {r} IN ('win', 'loss') THEN 1 ELSE 0 END)"),
+        ("win_rate", win_rate_sql(wins, games)),
+    ]
+
+
+def counter_sql(result: str = "result") -> str:
+    """The shared counter block games/wins/losses/draws/win_rate as a SQL
+    select list. Any token but ``win``/``loss`` counts as a draw (the
+    reference's else-branch); a null result counts nowhere but ``games``."""
+    return ", ".join(f"{expr} AS {name}" for name, expr in _counters(result))
 
 
 def counter_aggs(result: str = "result") -> list[Column]:
-    """The shared counter block: games/wins/losses/draws/win_rate.
+    """:func:`counter_sql` as aggregate Columns, for ``groupBy().agg``."""
+    return [F.expr(f"{expr} AS {name}") for name, expr in _counters(result)]
 
-    The counters are SQL text, one ``F.expr`` each: the equivalent Column
-    calls cost ~240 py4j round trips per block, and a Phase 1 build runs
-    eight blocks. Any token but ``win``/``loss`` counts as a draw (the
-    reference's else-branch); a null result counts nowhere but ``games``.
+
+def _result_sql(flip: bool) -> str:
+    return flip_result_sql("result") if flip else "result"
+
+
+def _double_sql(value: float) -> str:
+    """A DOUBLE literal equal to the Python float ``value``."""
+    return f"CAST({sql_str(repr(float(value)))} AS DOUBLE)"
+
+
+@lru_cache(maxsize=4)
+def summary_sql(src: str) -> str:
+    def count(token: str) -> str:
+        return f"coalesce(sum(CASE WHEN result = '{token}' THEN 1 ELSE 0 END), 0)"
+
+    return f"""
+        SELECT count(1) AS games_played, {count('win')} AS wins,
+               {count('loss')} AS losses, {count('draw')} AS draws,
+               {win_rate_sql(count('win'), 'count(1)')} AS win_rate
+        FROM {src}
     """
-    r = f"`{result}`"
-    games = F.expr("count(1)")
-    wins = F.expr(f"sum(CASE WHEN {r} = 'win' THEN 1 ELSE 0 END)")
-    return [
-        games.alias("games"),
-        wins.alias("wins"),
-        F.expr(f"sum(CASE WHEN {r} = 'loss' THEN 1 ELSE 0 END) AS losses"),
-        F.expr(f"sum(CASE WHEN NOT {r} IN ('win', 'loss') THEN 1 ELSE 0 END) AS draws"),
-        win_rate(wins, games).alias("win_rate"),
-    ]
 
 
 def compute_summary(battles: DataFrame) -> DataFrame:
@@ -52,31 +102,29 @@ def compute_summary(battles: DataFrame) -> DataFrame:
 
     One row even on empty input (zeros), matching the reference's empty-dict
     contract. Global agg: partial counters per partition, single final merge.
+    Draws count only an explicit ``draw`` here.
     """
-    r = F.col("result")
-    games = F.count(F.lit(1))
-    wins = F.sum(F.when(r == "win", 1).otherwise(0))
-    losses = F.sum(F.when(r == "loss", 1).otherwise(0))
-    draws = F.sum(F.when(r == "draw", 1).otherwise(0))
-    return battles.agg(
-        games.alias("games_played"),
-        F.coalesce(wins, F.lit(0)).alias("wins"),
-        F.coalesce(losses, F.lit(0)).alias("losses"),
-        F.coalesce(draws, F.lit(0)).alias("draws"),
-        win_rate(F.coalesce(wins, F.lit(0)), games).alias("win_rate"),
-    )
+    return battles.sparkSession.sql(summary_sql("{battles}"), battles=battles)
 
 
-def _exploded_card_results(battles: DataFrame, side: str, flip: bool) -> DataFrame:
-    """A2/A3 input: one row per (card, result) occurrence.
-
-    Parity: ``user_analytics.py:291-307`` — every card of every battle
-    contributes a row; the opponent side flips win/loss per row.
+def _keyed_counters_sql(
+    src: str, key: str, key_sql: str, flip: bool, min_games: int, where: str = ""
+) -> str:
+    """The counter block per ``key`` (the SQL ``key_sql`` of a ``src`` row),
+    HAVING games >= ``min_games``; ``where`` filters the rows first."""
+    return f"""
+        SELECT * FROM (
+            SELECT {key}, {counter_sql()} FROM (
+                SELECT {key_sql} AS {key}, {_result_sql(flip)} AS result
+                FROM {src} {where}
+            ) GROUP BY {key}
+        ) WHERE games >= {int(min_games)}
     """
-    result = flip_result(F.col("result")) if flip else F.col("result")
-    return battles.select(
-        F.explode(side).alias("card"), result.alias("result")
-    )
+
+
+@lru_cache(maxsize=16)
+def card_performance_sql(src: str, side: str, flip: bool, min_games: int) -> str:
+    return _keyed_counters_sql(src, "card", f"explode(`{side}`)", flip, min_games)
 
 
 def compute_card_performance(
@@ -86,32 +134,45 @@ def compute_card_performance(
     """A2 (mine) / A3 (opponent, POV-flipped) — card-level stats.
 
     explode → hash-agg by card → HAVING games >= min_games
-    (``user_analytics.py:240-322``). The explode multiplies rows 8× *before*
+    (``user_analytics.py:240-322``): every card of every battle contributes
+    a row, and the opponent side flips win/loss per row
+    (``user_analytics.py:291-307``). The explode multiplies rows 8× *before*
     the shuffle, but partial aggregation collapses them to ≤121 keys per
     partition, so the shuffle is tiny at any scale.
 
-    Returns the stats unsorted; apply :func:`order_best_first` /
-    :func:`order_worst_first` (the reference's desc list and its
+    Returns the stats unsorted; order them with :func:`best_first_sql` /
+    :func:`worst_first_sql` (the reference's desc list and its
     ``reversed()`` dual).
     """
     if flip is None:
         flip = side == "opp_cards"
-    rows = _exploded_card_results(battles, side, flip)
-    return (
-        rows.groupBy("card")
-        .agg(*counter_aggs())
-        .filter(F.col("games") >= min_games)
+    return battles.sparkSession.sql(
+        card_performance_sql("{battles}", side, flip, min_games), battles=battles
     )
 
 
-def order_best_first(stats: DataFrame, key: str = "card") -> DataFrame:
+@lru_cache(maxsize=16)
+def best_first_sql(src: str, key: str) -> str:
     """O1 — (win_rate, games) desc; final key tiebreak for determinism."""
-    return stats.orderBy(F.desc("win_rate"), F.desc("games"), F.asc(key))
+    return f"SELECT * FROM {src} ORDER BY win_rate DESC, games DESC, `{key}` ASC"
+
+
+@lru_cache(maxsize=16)
+def worst_first_sql(src: str, key: str) -> str:
+    """O2 — the ``reversed(desc)`` dual = full ascending sort."""
+    return f"SELECT * FROM {src} ORDER BY win_rate ASC, games ASC, `{key}` DESC"
 
 
 def order_worst_first(stats: DataFrame, key: str = "card") -> DataFrame:
-    """O2 — the ``reversed(desc)`` dual = full ascending sort."""
-    return stats.orderBy(F.asc("win_rate"), F.asc("games"), F.desc(key))
+    """:func:`worst_first_sql` over ``stats``."""
+    return stats.sparkSession.sql(worst_first_sql("{stats}", key), stats=stats)
+
+
+@lru_cache(maxsize=16)
+def deck_performance_sql(src: str, side: str, flip: bool, min_games: int) -> str:
+    return _keyed_counters_sql(
+        src, "deck", f"array_sort(coalesce(`{side}`, array()))", flip, min_games
+    )
 
 
 def compute_deck_performance(
@@ -127,16 +188,54 @@ def compute_deck_performance(
     """
     if flip is None:
         flip = side == "opp_cards"
-    result = flip_result(F.col("result")) if flip else F.col("result")
-    keyed = battles.select(
-        F.array_sort(F.coalesce(F.col(side), F.array())).alias("deck"),
-        result.alias("result"),
+    return battles.sparkSession.sql(
+        deck_performance_sql("{battles}", side, flip, min_games), battles=battles
     )
-    return (
-        keyed.groupBy("deck")
-        .agg(*counter_aggs())
-        .filter(F.col("games") >= min_games)
+
+
+@lru_cache(maxsize=16)
+def user_deck_matchups_sql(
+    src: str, overall: str | float, min_games: int, winrate_delta: float
+) -> tuple[str, str]:
+    """The (tough, easy) statements. ``overall`` is the overall win rate,
+    or a relation (SQL text) holding it in a ``win_rate`` column."""
+    stats = _keyed_counters_sql(
+        src, "deck", "array_sort(opp_cards)", False, min_games,
+        "WHERE size(coalesce(opp_cards, array())) > 0",
     )
+    if isinstance(overall, str):
+        # 1-row contract: the ref relation is a scalar carrier (overall
+        # WR). Aggregating it to (row_count, first(win_rate)) keeps the
+        # catalog ONE lazy plan (the round-3 fix — no mid-build driver
+        # action) while FAILING LOUDLY at execution if the contract is
+        # violated (round-5 ADVICE: limit(1) silently kept an arbitrary,
+        # partition-order-dependent row). The agg is always exactly one
+        # row, so the cross join cannot duplicate stats rows.
+        threshold = (
+            "CASE WHEN _wr_rows = 1 THEN _overall_wr ELSE raise_error(concat("
+            "'overall_win_rate frame must contain exactly one row (scalar "
+            "carrier), got ', CAST(_wr_rows AS STRING))) END"
+        )
+        source = f"""
+            /*+ BROADCAST(ref) */ deck, games, wins, losses, draws, win_rate
+            FROM ({stats}) stats CROSS JOIN (
+                SELECT count(1) AS _wr_rows, first(win_rate) AS _overall_wr
+                FROM {overall}
+            ) ref
+        """
+    else:
+        threshold = _double_sql(overall)
+        source = f"* FROM ({stats}) stats"
+    delta = _double_sql(winrate_delta)
+    tough = f"""
+        SELECT {source} WHERE win_rate <= ({threshold}) - {delta}
+        ORDER BY win_rate ASC, games ASC, deck ASC
+    """
+    easy = f"""
+        SELECT {source} WHERE win_rate >= ({threshold}) + {delta}
+        ORDER BY win_rate DESC, games DESC, deck ASC
+    """
+    return tough, easy
 
 
 def compute_user_deck_matchups(
@@ -156,55 +255,29 @@ def compute_user_deck_matchups(
     plan with no mid-build action (a round-3 VERDICT nit: the scalar
     collect forced an extra job per catalog build).
     """
-    stats = (
-        battles.filter(F.size(F.coalesce(F.col("opp_cards"), F.array())) > 0)
-        .select(F.array_sort("opp_cards").alias("deck"), "result")
-        .groupBy("deck")
-        .agg(*counter_aggs())
-        .filter(F.col("games") >= min_games)
-    )
+    frames = {"battles": battles}
     if isinstance(overall_win_rate, DataFrame):
-        # 1-row contract: the ref frame is a scalar carrier (overall WR).
-        # Aggregating it to (row_count, first(win_rate)) keeps the catalog
-        # ONE lazy plan (the round-3 fix — no mid-build driver action)
-        # while FAILING LOUDLY at execution if the contract is violated
-        # (round-5 ADVICE: limit(1) silently kept an arbitrary,
-        # partition-order-dependent row). The agg is always exactly one
-        # row, so the crossJoin cannot duplicate stats rows.
-        ref = F.broadcast(
-            overall_win_rate.agg(
-                F.count(F.lit(1)).alias("_wr_rows"),
-                F.first("win_rate").alias("_overall_wr"),
-            )
-        )
-        stats = stats.crossJoin(ref)
-        overall = F.when(
-            F.col("_wr_rows") == 1, F.col("_overall_wr")
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "overall_win_rate frame must contain exactly one "
-                        "row (scalar carrier), got "
-                    ),
-                    F.col("_wr_rows").cast("string"),
-                )
-            )
-        )
+        overall: str | float = "{ref}"
+        frames["ref"] = overall_win_rate
     else:
-        overall = F.lit(float(overall_win_rate))
-    _aux = ["_wr_rows", "_overall_wr"]
-    tough = (
-        stats.filter(F.col("win_rate") <= overall - winrate_delta)
-        .drop(*_aux)
-        .orderBy(F.asc("win_rate"), F.asc("games"), F.asc("deck"))
-    )
-    easy = (
-        stats.filter(F.col("win_rate") >= overall + winrate_delta)
-        .drop(*_aux)
-        .orderBy(F.desc("win_rate"), F.desc("games"), F.asc("deck"))
+        overall = float(overall_win_rate)
+    tough, easy = (
+        battles.sparkSession.sql(text, **frames)
+        for text in user_deck_matchups_sql("{battles}", overall, min_games, winrate_delta)
     )
     return tough, easy
+
+
+@lru_cache(maxsize=4)
+def deck_types_sql(src: str) -> str:
+    def typed(side: str) -> str:
+        return f"CASE WHEN size({side}) = 8 THEN {classify_deck_sql(side)} END"
+
+    return f"""
+        SELECT *, {typed('my_cards')} AS my_deck_type,
+               {typed('opp_cards')} AS opp_deck_type
+        FROM {src}
+    """
 
 
 def with_deck_types(battles: DataFrame) -> DataFrame:
@@ -215,15 +288,18 @@ def with_deck_types(battles: DataFrame) -> DataFrame:
     every downstream agg (the reference recomputes it 4×; Spark caching of
     this projection collapses that).
     """
-    def typed(side: str) -> Column:
-        return F.when(F.size(side) == 8, classify_deck_col(side))
+    return battles.sparkSession.sql(deck_types_sql("{battles}"), battles=battles)
 
-    return battles.withColumns(
-        {
-            "my_deck_type": typed("my_cards"),
-            "opp_deck_type": typed("opp_cards"),
-        }
-    )
+
+@lru_cache(maxsize=8)
+def deck_type_summary_sql(src: str, side: str) -> str:
+    col = f"`{side}_deck_type`"
+    return f"""
+        SELECT `type`, {counter_sql()} FROM (
+            SELECT {col} AS `type`, {_result_sql(side == 'opp')} AS result
+            FROM {src} WHERE {col} IS NOT NULL
+        ) GROUP BY `type`
+    """
 
 
 def compute_deck_type_summary(
@@ -235,14 +311,20 @@ def compute_deck_type_summary(
     ``opp_deck_type`` (see :func:`with_deck_types`); null types (non-8-card
     decks) are skipped exactly like the reference's ``my_type = None`` path.
     """
-    col = f"{side}_deck_type"
-    result = flip_result(F.col("result")) if side == "opp" else F.col("result")
-    return (
-        typed_battles.filter(F.col(col).isNotNull())
-        .select(F.col(col).alias("type"), result.alias("result"))
-        .groupBy("type")
-        .agg(*counter_aggs())
+    return typed_battles.sparkSession.sql(
+        deck_type_summary_sql("{typed}", side), typed=typed_battles
     )
+
+
+@lru_cache(maxsize=8)
+def deck_type_matchups_sql(src: str, min_games: int) -> str:
+    return f"""
+        SELECT * FROM (
+            SELECT my_deck_type, opp_deck_type, {counter_sql()} FROM {src}
+            WHERE my_deck_type IS NOT NULL AND opp_deck_type IS NOT NULL
+            GROUP BY my_deck_type, opp_deck_type
+        ) WHERE games >= {int(min_games)}
+    """
 
 
 def compute_deck_type_matchups(
@@ -254,20 +336,21 @@ def compute_deck_type_matchups(
     Long-format output — the reference's nested dict exists only at its API
     boundary; Spark keeps the matrix relational (pivot only for display).
     """
+    return typed_battles.sparkSession.sql(
+        deck_type_matchups_sql("{typed}", min_games), typed=typed_battles
+    )
+
+
+@lru_cache(maxsize=4)
+def matchups_order_sql(src: str) -> str:
+    """O4 — (games, win_rate) desc + key tiebreak
+    (``user_analytics.py:94-96``)."""
     return (
-        typed_battles.filter(
-            F.col("my_deck_type").isNotNull() & F.col("opp_deck_type").isNotNull()
-        )
-        .groupBy("my_deck_type", "opp_deck_type")
-        .agg(*counter_aggs())
-        .filter(F.col("games") >= min_games)
+        f"SELECT * FROM {src} ORDER BY games DESC, win_rate DESC,"
+        " my_deck_type ASC, opp_deck_type ASC"
     )
 
 
 def order_matchups(matchups: DataFrame) -> DataFrame:
-    """O4 — (games, win_rate) desc + key tiebreak
-    (``user_analytics.py:94-96``)."""
-    return matchups.orderBy(
-        F.desc("games"), F.desc("win_rate"),
-        F.asc("my_deck_type"), F.asc("opp_deck_type"),
-    )
+    """:func:`matchups_order_sql` over ``matchups``."""
+    return matchups.sparkSession.sql(matchups_order_sql("{stats}"), stats=matchups)

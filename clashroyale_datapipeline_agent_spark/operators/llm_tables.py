@@ -3,13 +3,25 @@
 The Phase-2 prep nodes project analytics tables into compact row tables for
 the coach LLM (``/root/reference/src/workflows/user_workflow.py:39-205``).
 Pure DataFrame transforms; serialization (``toJSON`` + truncation) happens
-only at the driver boundary.
+only at the driver boundary. The Phase 1 operators here are SQL text
+builders over an input relation ``src`` (see ``operators/battle_aggs.py``),
+generated once per process.
 """
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from clashroyale_datapipeline_agent_spark.functions.common import sql_str
+
+
+@lru_cache(maxsize=8)
+def metric_value_sql(src: str, columns: tuple[str, ...]) -> str:
+    pairs = ", ".join(f"{sql_str(c)}, CAST(`{c}` AS STRING)" for c in columns)
+    return f"SELECT stack({len(columns)}, {pairs}) AS (metric, value) FROM {src}"
 
 
 def summary_to_metric_value(summary: DataFrame) -> DataFrame:
@@ -19,29 +31,23 @@ def summary_to_metric_value(summary: DataFrame) -> DataFrame:
     mixed-type (ints + float); relational form casts to string — documented
     convention (SURVEY.md §7.4 risk #5).
     """
-    cols = summary.columns
-    stack_args: list = []
-    for c in cols:
-        stack_args.append(F.lit(c))
-        stack_args.append(F.col(c).cast("string"))
-    return summary.select(
-        F.stack(F.lit(len(cols)), *stack_args).alias("metric", "value")
+    return summary.sparkSession.sql(
+        metric_value_sql("{summary}", tuple(summary.columns)), summary=summary
     )
 
 
-def tag_role_union(
-    parts: list[tuple[DataFrame, str]], role_col: str = "role"
-) -> DataFrame:
-    """U1 — union tables tagged with a literal role column.
+@lru_cache(maxsize=8)
+def role_union_sql(parts: tuple[tuple[str, str], ...], role_col: str = "role") -> str:
+    """U1 — UNION ALL of (relation, role) ``parts``, each tagged with its
+    literal role in column ``role_col``. The relations' columns must line
+    up by position.
 
     Parity: best∪worst cards / tough∪easy opponent cards with ``role`` tags
     (``user_workflow.py:120-162``, ``:164-205``).
     """
-    tagged = [df.withColumn(role_col, F.lit(role)) for df, role in parts]
-    out = tagged[0]
-    for t in tagged[1:]:
-        out = out.unionByName(t)
-    return out
+    return " UNION ALL ".join(
+        f"SELECT *, {sql_str(role)} AS `{role_col}` FROM {src}" for src, role in parts
+    )
 
 
 def reconcile_column_aliases(

@@ -9,6 +9,8 @@ battle table grows.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -17,6 +19,7 @@ from clashroyale_datapipeline_agent_spark.functions.common import (
     advantage_label,
     flip_result,
     win_rate,
+    win_rate_sql,
 )
 from clashroyale_datapipeline_agent_spark.operators.battle_aggs import counter_aggs
 from clashroyale_datapipeline_agent_spark.schemas import ARCHETYPES
@@ -61,7 +64,7 @@ def build_participant_table(battles: DataFrame) -> DataFrame:
                 F.struct(
                     F.lit("opp").alias("role"),
                     F.col("_opp_type").alias("deck_type"),
-                    flip_result(F.col("result")).alias("result"),
+                    flip_result("result").alias("result"),
                 ),
             )
         ).alias("s"),
@@ -107,7 +110,7 @@ def compute_symmetric_matchups(battles: DataFrame) -> DataFrame:
                 F.struct(
                     F.col("_opp_type").alias("deck_type"),
                     F.col("_my_type").alias("opp_type"),
-                    flip_result(F.col("result")).alias("result"),
+                    flip_result("result").alias("result"),
                 ),
             )
         ).alias("s")
@@ -239,7 +242,7 @@ def build_meta_deck_summary(
         "wins",
         "losses",
         "draws",
-        win_rate(F.col("wins"), F.col("games")).alias("win_rate"),
+        win_rate("wins", "games").alias("win_rate"),
         (F.col("games") >= min_games_per_type).alias("sample_ok"),
     ).orderBy(F.desc("games"), F.asc("deck_type"))
 
@@ -271,6 +274,23 @@ def build_matchup_summary(
     )
 
 
+@lru_cache(maxsize=4)
+def _user_deck_summary_sql(min_games_per_deck: int) -> str:
+    # Bounded global window — post-aggregation, <= 6 archetype rows at any
+    # scale (see build_meta_deck_summary). The WindowExec warning is noise.
+    return f"""
+        SELECT deck_type, games, games / sum(games) OVER () AS user_share,
+               wins, losses, draws, {win_rate_sql("wins", "games")} AS win_rate,
+               games >= {int(min_games_per_deck)} AS sample_ok
+        FROM (
+            SELECT my_deck_type AS deck_type, sum(games) AS games,
+                   sum(wins) AS wins, sum(losses) AS losses, sum(draws) AS draws
+            FROM {{matchups}} GROUP BY my_deck_type
+        )
+        ORDER BY games DESC, deck_type ASC
+    """
+
+
 def build_user_deck_summary(
     deck_type_matchups: DataFrame, *, min_games_per_deck: int = 20
 ) -> DataFrame:
@@ -279,28 +299,11 @@ def build_user_deck_summary(
     Parity: ``user_llm_tables.py:8-84``. This is literally partial/final
     re-aggregation: summing A6's per-(my,opp) counters by my_deck_type.
     ``win_rate`` is recomputed from summed counters, matching the reference.
+    One SQL statement, like the Phase 1 tables it reads.
     """
-    agg = deck_type_matchups.groupBy(
-        F.col("my_deck_type").alias("deck_type")
-    ).agg(
-        F.sum("games").alias("games"),
-        F.sum("wins").alias("wins"),
-        F.sum("losses").alias("losses"),
-        F.sum("draws").alias("draws"),
+    return deck_type_matchups.sparkSession.sql(
+        _user_deck_summary_sql(min_games_per_deck), matchups=deck_type_matchups
     )
-    # Bounded global window — post-aggregation, <= 6 archetype rows at any
-    # scale (see build_meta_deck_summary). The WindowExec warning is noise.
-    total = Window.partitionBy()
-    return agg.select(
-        "deck_type",
-        "games",
-        (F.col("games") / F.sum("games").over(total)).alias("user_share"),
-        "wins",
-        "losses",
-        "draws",
-        win_rate(F.col("wins"), F.col("games")).alias("win_rate"),
-        (F.col("games") >= min_games_per_deck).alias("sample_ok"),
-    ).orderBy(F.desc("games"), F.asc("deck_type"))
 
 
 def most_recent_per_player(battles: DataFrame, k: int = 10) -> DataFrame:

@@ -2,105 +2,82 @@
 
 The reference walks raw battlelog dicts row-at-a-time
 (``/root/reference/src/analytics/battle_filters.py:100-124``). Here the same
-semantics are a ``filter().select()`` pair that Catalyst fuses into one
-whole-stage-codegen'd scan stage; on parquet/JSON sources the mode-id
-predicate and the 5-of-~30 column projection push into the scan.
+semantics are one SQL statement, a filtered projection that Catalyst fuses
+into one whole-stage-codegen'd scan stage; on parquet/JSON sources the
+mode-id predicate and the 5-of-~30 column projection push into the scan.
+The statement text is generated once per process.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from functools import lru_cache
 
+from pyspark.sql import DataFrame
+
+from clashroyale_datapipeline_agent_spark.functions.common import sql_str
 from clashroyale_datapipeline_agent_spark.schemas import (
     BATTLE_TIME_FORMAT,
     RANKED_1V1_MODE_IDS,
 )
 
 
-def ranked_1v1_predicate() -> Column:
-    """P1 — pure-1v1 + whitelisted gameMode.id.
-
-    Parity: ``is_ranked_1v1_battle`` (``battle_filters.py:10-35``): team and
-    opponent must be 1-element lists (null array => not a list => reject) and
-    ``gameMode.id`` must be whitelisted (null => reject, as ``None not in
-    whitelist``).
-    """
-    return (
-        (F.size("team") == 1)
-        & (F.size("opponent") == 1)
-        & F.col("gameMode.id").isin(*RANKED_1V1_MODE_IDS)
-    )
-
-
-def _side_cards(side: Column) -> Column:
-    """Card names of one participant: keep entries whose RAW name is non-null
-    and non-empty, then trim.
+def _side_cards_sql(side: str) -> str:
+    """Card names of one participant (``side`` is SQL text for its struct):
+    keep entries whose RAW name is non-null and non-empty, then trim.
 
     Parity: ``battle_filters.py:76-86`` — the truthiness filter runs on the
     un-stripped name, so a whitespace-only name survives as ``""`` after the
     strip. Preserved bit-for-bit (it only matters for malformed feeds, but
     the oracle fixtures exercise it).
     """
-    cards = F.coalesce(side.getField("cards"), F.array())
-    kept = F.filter(
-        cards,
-        lambda c: c.getField("name").isNotNull() & (c.getField("name") != ""),
-    )
-    return F.transform(kept, lambda c: F.trim(c.getField("name")))
+    kept = f"filter(coalesce({side}.cards, array()), c -> c.name IS NOT NULL AND c.name != '')"
+    return f"transform({kept}, c -> trim(c.name))"
 
 
-def result_from_crowns(my_crowns: Column, opp_crowns: Column) -> Column:
-    """P3 — crown comparison -> win/loss/draw (``battle_filters.py:38-49``).
-    Missing crowns default to 0 (``:71-72``)."""
-    my = F.coalesce(my_crowns, F.lit(0))
-    opp = F.coalesce(opp_crowns, F.lit(0))
-    return (
-        F.when(my > opp, F.lit("win"))
-        .when(my < opp, F.lit("loss"))
-        .otherwise(F.lit("draw"))
-    )
+@lru_cache(maxsize=1)
+def _ranked_1v1_sql() -> str:
+    """The P1 filter and P2/P3 projection over the raw view ``{raw}``.
 
-
-def normalize_battles(raw: DataFrame) -> DataFrame:
-    """P2 — project nested raw battles to the flat fact schema.
-
-    Output: ``battle_time, battle_ts, result, my_cards, opp_cards,
-    mode_name, player_tag`` (NORMALIZED_BATTLE). ``battle_ts`` is the parsed
-    CR timestamp — the reference keeps the string opaque and trusts API
-    ordering (``meta_workflow.py:329-331``); we make time-ordering explicit.
-
-    ``mode_name`` mirrors the reference's ``or`` chain
-    (``battle_filters.py:88-89``): empty-string gameMode.name falls through
-    to ``type``, and a missing ``type`` yields ``""`` (not null).
+    - P1 (``is_ranked_1v1_battle``, ``battle_filters.py:10-35``): team and
+      opponent must be 1-element lists (null array => not a list =>
+      reject) and ``gameMode.id`` must be whitelisted (null => reject, as
+      ``None not in whitelist``).
+    - P3 (``battle_filters.py:38-49``): crown comparison -> win/loss/draw;
+      missing crowns default to 0 (``:71-72``).
+    - ``battle_ts`` is the parsed CR timestamp — the reference keeps the
+      string opaque and trusts API ordering (``meta_workflow.py:329-331``);
+      we make time-ordering explicit.
+    - ``mode_name`` mirrors the reference's ``or`` chain
+      (``battle_filters.py:88-89``): empty-string gameMode.name falls
+      through to ``type``, and a missing ``type`` yields ``""`` (not null).
     """
-    my_side = F.element_at("team", 1)
-    opp_side = F.element_at("opponent", 1)
-    mode_name = F.coalesce(
-        F.when(F.col("gameMode.name") != "", F.col("gameMode.name")),
-        F.when(F.col("type") != "", F.col("type")),
-        F.lit(""),
-    )
-    return raw.select(
-        F.col("battleTime").alias("battle_time"),
-        F.to_timestamp("battleTime", BATTLE_TIME_FORMAT).alias("battle_ts"),
-        result_from_crowns(
-            my_side.getField("crowns"), opp_side.getField("crowns")
-        ).alias("result"),
-        _side_cards(my_side).alias("my_cards"),
-        _side_cards(opp_side).alias("opp_cards"),
-        mode_name.alias("mode_name"),
-        F.col("player_tag"),
-    )
+    my_side, opp_side = "element_at(team, 1)", "element_at(opponent, 1)"
+    my_crowns = f"coalesce({my_side}.crowns, 0)"
+    opp_crowns = f"coalesce({opp_side}.crowns, 0)"
+    mode_ids = ", ".join(str(int(i)) for i in RANKED_1V1_MODE_IDS)
+    return f"""
+        SELECT battleTime AS battle_time,
+               to_timestamp(battleTime, {sql_str(BATTLE_TIME_FORMAT)}) AS battle_ts,
+               CASE WHEN {my_crowns} > {opp_crowns} THEN 'win'
+                    WHEN {my_crowns} < {opp_crowns} THEN 'loss'
+                    ELSE 'draw' END AS result,
+               {_side_cards_sql(my_side)} AS my_cards,
+               {_side_cards_sql(opp_side)} AS opp_cards,
+               coalesce(CASE WHEN gameMode.name != '' THEN gameMode.name END,
+                        CASE WHEN `type` != '' THEN `type` END,
+                        '') AS mode_name,
+               player_tag
+        FROM {{raw}}
+        WHERE size(team) = 1 AND size(opponent) = 1 AND gameMode.id IN ({mode_ids})
+    """
 
 
 def filter_and_normalize_ranked_1v1(raw: DataFrame) -> DataFrame:
-    """P4 — fused filter + normalize (``battle_filters.py:100-124``).
-    Catalyst fuses the pair; no intermediate materialization."""
-    return normalize_battles(raw.filter(ranked_1v1_predicate()))
+    """P1-P4 — ranked-1v1 filter fused with the projection of nested raw
+    battles to the flat fact schema (``battle_filters.py:100-124``).
 
-
-def valid_deck_predicate(cards_col: str, deck_size: int = 8) -> Column:
-    """P6 — exactly-``deck_size`` guard used before deck-level stats
-    (``deck_type.py:231-247``, ``user_analytics.py:46-58``)."""
-    return F.size(cards_col) == deck_size
+    Output: ``battle_time, battle_ts, result, my_cards, opp_cards,
+    mode_name, player_tag`` (NORMALIZED_BATTLE). The card lists are never
+    null, so the 8-card guard of deck-level stats (P6) is ``size(...) = 8``.
+    """
+    return raw.sparkSession.sql(_ranked_1v1_sql(), raw=raw)

@@ -273,15 +273,15 @@ def cr_exact_deck_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.concat_ws("|", F.array_sort(F.col("alt_cards")))).alias("deck_key"),
         "result",
     )
-    games = F.count(F.lit(1))
-    wins = F.sum(F.when(F.col("result") == "win", 1).otherwise(0))
+    games = "count(1)"
+    wins = "sum(CASE WHEN result = 'win' THEN 1 ELSE 0 END)"
     from clashroyale_datapipeline_agent_spark.functions.common import win_rate
 
     return (
         decks.groupBy("deck_key")
         .agg(
-            games.cast("bigint").alias("games"),
-            wins.cast("bigint").alias("wins"),
+            F.expr(games).cast("bigint").alias("games"),
+            F.expr(wins).cast("bigint").alias("wins"),
             F.round(win_rate(wins, games), 4).alias("win_rate"),
         )
         .filter(F.col("games") >= 3)
@@ -1173,7 +1173,10 @@ def e2e_user_context_render(spark: SparkSession, sf_dir: str) -> DataFrame:
         render_deck_lines,
     )
 
-    battles = _battles_full(spark, sf_dir)
+    # a projection of the staged table, not the persisted frame itself: the
+    # operators bind their input as a temporary view, and dropping a view
+    # whose plan is a cached plan uncaches it
+    battles = _battles(spark, sf_dir)
 
     # Phase-1: A1 summary -> A14 melt with engine-stable value strings
     summary = compute_summary(battles)

@@ -5,6 +5,10 @@ re-expressed as lazily-planned DataFrame DAGs + a driver loop.
   ``user_analytics_tables`` + ``user_llm_tables``. Its input is one
   player's battlelog (a few dozen rows from the API), cached on a single
   partition, so every table is one Spark job once the cache is filled.
+  Every table is planned as ONE ``spark.sql`` statement, its text nested
+  from the operators' SQL builders and generated once per process, so a
+  player's build is 19 analysed DataFrames and ~110 py4j round trips
+  (the Column-built tables took 70 and ~4.1k).
 - Phase 0 (meta builder): iterative accumulate-and-recompute driver loop —
   ``MetaDatasetBuilder`` with the stopping predicate of
   ``meta_workflow.py:378-464``. Battles accumulate in a parquet staging dir
@@ -19,18 +23,21 @@ loop, and one router — plain driver code (SURVEY.md §7.1).
 from __future__ import annotations
 
 import shutil
-from collections.abc import Callable
+import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from functools import lru_cache
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from clashroyale_datapipeline_agent_spark import schemas
+from clashroyale_datapipeline_agent_spark.functions.common import sql_str
 from clashroyale_datapipeline_agent_spark.operators import battle_aggs as ba
 from clashroyale_datapipeline_agent_spark.operators import meta as M
 from clashroyale_datapipeline_agent_spark.operators.llm_tables import (
+    role_union_sql,
     summary_to_metric_value,
-    tag_role_union,
 )
 from clashroyale_datapipeline_agent_spark.operators.normalize import (
     filter_and_normalize_ranked_1v1,
@@ -46,12 +53,60 @@ REQUIRED_TYPES_LOWER = [a.lower() for a in schemas.REQUIRED_ARCHETYPES]
 # Phase 1 — user analytics
 # ---------------------------------------------------------------------------
 
+@lru_cache(maxsize=1)
+def _analytics_sql() -> dict[str, str]:
+    """Each Phase 1 analytics table as ONE statement over ``{battles}`` (the
+    cached normalized battles) or ``{typed}`` (them with deck types)."""
+    b, t = "{battles}", "{typed}"
+
+    def sub(text: str) -> str:
+        return f"({text})"
+
+    my_cards = sub(ba.card_performance_sql(b, "my_cards", False, 3))
+    opp_cards = sub(ba.card_performance_sql(b, "opp_cards", True, 3))
+    my_decks = sub(ba.deck_performance_sql(b, "my_cards", False, 3))
+    # the overall-WR threshold rides a 1-row broadcast join — the catalog
+    # stays one lazy plan, no mid-build collect (round-3 VERDICT nit)
+    tough_mu, easy_mu = ba.user_deck_matchups_sql(b, sub(ba.summary_sql(b)), 1, 0.0)
+    return {
+        "summary": ba.summary_sql(b),
+        "best_cards": ba.best_first_sql(my_cards, "card"),
+        "worst_cards": ba.worst_first_sql(my_cards, "card"),
+        "tough_opp_cards": ba.best_first_sql(opp_cards, "card"),
+        "easy_opp_cards": ba.worst_first_sql(opp_cards, "card"),
+        "best_decks": ba.best_first_sql(my_decks, "deck"),
+        "worst_decks": ba.worst_first_sql(my_decks, "deck"),
+        "tough_matchups": tough_mu,
+        "easy_matchups": easy_mu,
+        "my_deck_types": ba.best_first_sql(sub(ba.deck_type_summary_sql(t, "my")), "type"),
+        "opp_deck_types": ba.best_first_sql(sub(ba.deck_type_summary_sql(t, "opp")), "type"),
+        "deck_type_matchups": ba.matchups_order_sql(sub(ba.deck_type_matchups_sql(t, 1))),
+    }
+
+
+@contextmanager
+def _temp_view(df: DataFrame) -> Iterator[str]:
+    """The name of a temporary view of ``df`` for the block; the view is
+    dropped on exit, also when the block raises."""
+    name = f"_phase1_{uuid.uuid4().hex}"
+    df.createOrReplaceTempView(name)
+    try:
+        yield name
+    finally:
+        df.sparkSession.catalog.dropTempView(name)
+
+
 def user_analytics_tables(battles: DataFrame) -> dict[str, DataFrame]:
     """The full Phase-1 analytics catalog (``user_analytics.py:401-469``)
     as named DataFrames over one cached normalized battle table.
 
-    The reference recomputes deck classification 4×; here ``with_deck_types``
-    runs once on the cached input and every aggregate shares it.
+    The reference recomputes deck classification 4×; here the deck types
+    are one projection of the cached input (``deck_types_sql``) that every
+    deck-type aggregate reads.
+
+    Each table is one ``spark.sql`` statement (one analysed DataFrame), its
+    text nested from the ``battle_aggs`` builders once per process; the
+    statements share one temporary view of each of their two inputs.
 
     Contract: ``battles`` is one player's battlelog, a few dozen rows. It is
     cached on ONE partition: ``SinglePartition`` satisfies every downstream
@@ -62,65 +117,56 @@ def user_analytics_tables(battles: DataFrame) -> dict[str, DataFrame]:
     source whose per-partition Python-worker cost would otherwise run
     serially.
     """
-    battles = battles.repartition(1).cache()
-    typed = ba.with_deck_types(battles)
+    battles = battles.repartition(1)
+    spark = battles.sparkSession
+    with _temp_view(battles) as battles_view:
+        typed = spark.sql(ba.deck_types_sql("{battles}").format(battles=battles_view))
+        with _temp_view(typed) as typed_view:
+            tables = {
+                name: spark.sql(text.format(battles=battles_view, typed=typed_view))
+                for name, text in _analytics_sql().items()
+            }
+    # cached only once the views are gone: dropping a view whose plan is a
+    # cached plan uncaches it. The tables' plans pick the cache up when
+    # they are first optimized.
+    battles.cache()
+    return tables
 
-    summary = ba.compute_summary(battles)
 
-    my_cards = ba.compute_card_performance(battles, "my_cards")
-    opp_cards = ba.compute_card_performance(battles, "opp_cards")
-    my_decks = ba.compute_deck_performance(battles, "my_cards")
-    opp_decks = ba.compute_deck_performance(battles, "opp_cards")
-    # the overall-WR threshold rides a 1-row broadcast join — the catalog
-    # stays one lazy plan, no mid-build collect (round-3 VERDICT nit)
-    tough_mu, easy_mu = ba.compute_user_deck_matchups(battles, summary)
+def _card_rows_sql(table: str) -> str:
+    """The LLM card projection of the analytics table ``table``."""
+    return f"""(
+        SELECT card, games, wins, losses, draws, win_rate, card AS card_name,
+               {sql_str(table)} AS source
+        FROM {{{table}}}
+    )"""
+
+
+@lru_cache(maxsize=1)
+def _card_summary_sql() -> dict[str, str]:
+    def union(*parts: tuple[str, str]) -> str:
+        return role_union_sql(tuple((_card_rows_sql(table), role) for table, role in parts))
 
     return {
-        "summary": summary,
-        "best_cards": ba.order_best_first(my_cards),
-        "worst_cards": ba.order_worst_first(my_cards),
-        "tough_opp_cards": ba.order_best_first(opp_cards),
-        "easy_opp_cards": ba.order_worst_first(opp_cards),
-        "best_decks": ba.order_best_first(my_decks, key="deck"),
-        "worst_decks": ba.order_worst_first(my_decks, key="deck"),
-        "tough_matchups": tough_mu,
-        "easy_matchups": easy_mu,
-        "my_deck_types": ba.order_best_first(
-            ba.compute_deck_type_summary(typed, "my"), key="type"
-        ),
-        "opp_deck_types": ba.order_best_first(
-            ba.compute_deck_type_summary(typed, "opp"), key="type"
-        ),
-        "deck_type_matchups": ba.order_matchups(ba.compute_deck_type_matchups(typed)),
+        "user_card_summary": union(("best_cards", "best"), ("worst_cards", "worst")),
+        "opponent_card_summary": union(("tough_opp_cards", "tough"), ("easy_opp_cards", "easy")),
     }
 
 
 def user_llm_tables(analytics: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """Phase-1 LLM projections (``user_workflow.py:39-205`` + A12/A13)."""
-    card_cols = ["card", "games", "wins", "losses", "draws", "win_rate"]
-
-    def with_card_name(df: DataFrame) -> DataFrame:
-        return df.select(*card_cols).withColumn("card_name", F.col("card"))
-
-    user_card = tag_role_union(
-        [
-            (with_card_name(analytics["best_cards"]).withColumn("source", F.lit("best_cards")), "best"),
-            (with_card_name(analytics["worst_cards"]).withColumn("source", F.lit("worst_cards")), "worst"),
-        ]
-    )
-    opp_card = tag_role_union(
-        [
-            (with_card_name(analytics["tough_opp_cards"]).withColumn("source", F.lit("tough_opp_cards")), "tough"),
-            (with_card_name(analytics["easy_opp_cards"]).withColumn("source", F.lit("easy_opp_cards")), "easy"),
-        ]
-    )
+    """Phase-1 LLM projections (``user_workflow.py:39-205`` + A12/A13), one
+    statement each."""
     matchups = analytics["deck_type_matchups"]
+    spark = matchups.sparkSession
     return {
         "user_summary": summary_to_metric_value(analytics["summary"]),
         "user_deck_summary": M.build_user_deck_summary(matchups),
         "user_matchup_summary": matchups,
-        "user_card_summary": user_card,
-        "opponent_card_summary": opp_card,
+        # spark.sql binds only the analytics tables a statement names
+        **{
+            name: spark.sql(text, **analytics)
+            for name, text in _card_summary_sql().items()
+        },
     }
 
 
@@ -328,12 +374,17 @@ class MetaDatasetBuilder:
             more = self._sample_tags(players, self.increment_sample)
             self._ingest(more)
 
-        battles = self.staged_battles().cache()
+        battles = self.staged_battles()
+        # built before the cache: compute_summary binds its input as a
+        # temporary view, and dropping a view whose plan is a cached plan
+        # uncaches it (the summary picks the cache up when first optimized)
+        summary = ba.compute_summary(battles)
+        battles.cache()
         participants = M.build_participant_table(battles)
         matchups = M.compute_symmetric_matchups(battles)
         return {
             "battles": battles,
-            "summary": ba.compute_summary(battles),
+            "summary": summary,
             "participants": participants,
             "deck_type_matchups": matchups,
             # the two tables every Phase-2 session ships: cached here, by

@@ -200,13 +200,13 @@ def p10_win_rate_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a high-cardinality key. Partial aggregation collapses rows before the
     shuffle; the division is exact (ints) so only a stabilizing round(4)."""
     o = _t(spark, sf_dir, "orders")
-    games = F.count(F.lit(1))
-    wins = F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0))
+    games = "count(1)"
+    wins = "sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)"
     return (
         o.groupBy("o_custkey")
         .agg(
-            games.cast("bigint").alias("games"),
-            wins.cast("bigint").alias("wins"),
+            F.expr(games).cast("bigint").alias("games"),
+            F.expr(wins).cast("bigint").alias("wins"),
             F.round(win_rate(wins, games), 4).alias("win_rate"),
         )
         .filter(F.col("games") >= 3)
@@ -237,11 +237,11 @@ def p9_advantage_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P9 — win-rate banding (favored/even/unfavored, ±0.05 around 0.5)
     re-aggregated per label (A12-style partial/final re-agg)."""
     o = _t(spark, sf_dir, "orders")
-    games = F.count(F.lit(1))
-    wins = F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0))
+    games = "count(1)"
+    wins = "sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)"
     wr = (
         o.groupBy("o_custkey")
-        .agg(games.alias("games"), win_rate(wins, games).alias("win_rate"))
+        .agg(F.expr(games).alias("games"), win_rate(wins, games).alias("win_rate"))
         .filter(F.col("games") >= 3)
     )
     return wr.groupBy(
@@ -442,17 +442,17 @@ def a7_symmetric_pair_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct(
                     F.col("supp_nation").alias("deck_type"),
                     F.col("cust_nation").alias("opp_type"),
-                    flip_result(F.col("result")).alias("result"),
+                    flip_result("result").alias("result"),
                 ),
             )
         ).alias("s")
     ).select("s.deck_type", "s.opp_type", "s.result")
     r = F.col("result")
-    games = F.count(F.lit(1))
-    wins = F.sum(F.when(r == "win", 1).otherwise(0))
+    games = "count(1)"
+    wins = "sum(CASE WHEN result = 'win' THEN 1 ELSE 0 END)"
     return doubled.groupBy("deck_type", "opp_type").agg(
-        games.cast("bigint").alias("games"),
-        wins.cast("bigint").alias("wins"),
+        F.expr(games).cast("bigint").alias("games"),
+        F.expr(wins).cast("bigint").alias("wins"),
         F.sum(F.when(r == "loss", 1).otherwise(0)).cast("bigint").alias("losses"),
         F.sum(F.when(~r.isin("win", "loss"), 1).otherwise(0)).cast("bigint").alias("draws"),
         F.round(win_rate(wins, games), 4).alias("win_rate"),
@@ -486,11 +486,10 @@ def a9_role_tagged_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders")
     result = (
-        F.when(F.col("o_orderstatus") == "F", "win")
-        .when(F.col("o_orderstatus") == "O", "loss")
-        .otherwise("draw")
+        "CASE WHEN o_orderstatus = 'F' THEN 'win'"
+        " WHEN o_orderstatus = 'O' THEN 'loss' ELSE 'draw' END"
     )
-    my = o.select(F.lit("my").alias("role"), result.alias("result"))
+    my = o.select(F.lit("my").alias("role"), F.expr(result).alias("result"))
     opp = o.select(F.lit("opp").alias("role"), flip_result(result).alias("result"))
     return (
         my.unionByName(opp)

@@ -159,8 +159,8 @@ class _BatchLogStore:
 
     spark: SparkSession
     root: Path
-    #: (sub-log name, pinned read schema) pairs — schema used when a
-    #: fold source holds zero parquet files
+    #: names of the store's sub-logs (one dir each under ``root``) that
+    #: ``compact()`` folds; the first one's batch ids set the cutoff
     _subs: tuple[str, ...] = ()
 
     def _seg_state(self) -> dict | None:
@@ -561,9 +561,13 @@ class HammingBandStore(_BatchLogStore):
             hamming_key_map,
         )
 
+        # the screens read the batch in several branches (four in the
+        # verified screen); materialize it once, so an upstream hasher
+        # (a mapInPandas, say) runs once per micro-batch, not per branch
+        batch_hashes = batch_hashes.select("id", "h").localCheckpoint(eager=True)
         if self.max_dist is None:
             screened = dedup_incremental_hamming(
-                batch_hashes.select("id", "h"),
+                batch_hashes,
                 self.read_keys(exclude_batch=batch_id),
                 bands=self.bands,
                 bits=self.bits,
@@ -598,7 +602,7 @@ class HammingBandStore(_BatchLogStore):
                     )
                 self._legacy_checked = True
             screened = dedup_incremental_hamming_verified(
-                batch_hashes.select("id", "h"),
+                batch_hashes,
                 key_map,
                 bands=self.bands,
                 bits=self.bits,

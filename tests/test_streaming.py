@@ -1328,6 +1328,45 @@ def test_streaming_hamming_verified_admission_and_replay(spark, tmp_path):
     assert {r["id"] for r in store.admitted().collect()} == got
 
 
+@pytest.mark.parametrize("max_dist", [None, 6], ids=["screen", "verified"])
+def test_hamming_store_hashes_each_batch_row_once(spark, tmp_path, max_dist):
+    """apply_batch materializes the batch before screening it, so a
+    mapInPandas hasher upstream runs once per batch row, although the
+    screens read the batch in several branches (four in the verified
+    one)."""
+    import hashlib
+
+    from clashroyale_datapipeline_agent_spark.streaming.incremental import (
+        HammingBandStore,
+    )
+
+    hashed = spark.sparkContext.accumulator(0)
+
+    def hasher(batches):
+        for pdf in batches:
+            hashed.add(len(pdf))
+            # 64-bit hashes whose 16-bit bands are all distinct for ids 0-29
+            pdf["h"] = [
+                int.from_bytes(
+                    hashlib.blake2b(str(i).encode(), digest_size=8).digest(),
+                    "big",
+                    signed=True,
+                )
+                for i in pdf["id"]
+            ]
+            yield pdf
+
+    store = HammingBandStore(spark, str(tmp_path / "ham"), max_dist=max_dist)
+    for batch_id, first in enumerate((0, 10)):  # ids 10-19 come twice
+        before = hashed.value
+        batch = spark.range(first, first + 20, numPartitions=2).mapInPandas(
+            hasher, "id long, h long"
+        )
+        store.apply_batch(batch, batch_id)
+        assert hashed.value - before == 20, (batch_id, hashed.value - before)
+    assert sorted(r["id"] for r in store.admitted().collect()) == list(range(30))
+
+
 def test_neardup_store_single_signing_keys_identical(spark, tmp_path):
     """Round-14: `NearDupBandStore.apply_batch` signs each micro-batch
     ONCE and derives the admitted keys by restricting that same frame
