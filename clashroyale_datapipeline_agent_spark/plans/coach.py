@@ -14,19 +14,26 @@ Semantics preserved here without the graph framework:
 - ``ask_for_tag`` asks once; ``ensure_user`` runs the Phase-1 build ONCE
   per session (``:601-603`` — the reference keys on presence, not tag);
 - every question routes through the Phase-2 answer flow
-  (:mod:`qna_router`) over one memoized pair of table dicts;
+  (:mod:`qna_router`) over the session's one row snapshot;
 - ``stop`` / ``exit`` / ``quit`` (case-insensitive, stripped) end the
   loop BEFORE answering (``route_after_question``, ``:645-655``).
 
 The DataFrames are lazy, so memoizing the dicts alone would re-run each
-table's shuffles on every turn that ships it. ``ensure_user`` therefore
-marks every Phase-1 table it gets with ``.cache()`` (lazy: no build-time
-job), so each table is computed at most once per session and later
-turns read the cached rows. ``games_played`` for the enough-data check
-is read once, in ``ensure_user``: the tables cannot change within a
-session. ``close()`` unpersists the tables the session cached; the meta
-tables are shared across sessions and stay with their producer
-(``MetaDatasetBuilder.run`` caches the ones Q&A ships).
+table's plan on every turn that ships it. ``ensure_user`` therefore
+takes one row snapshot per session (:func:`qna_router.snapshot`): a
+single ``run_legs`` call, one concurrent ``collect()`` per leg, in the
+caller's job group. The legs are every table ``build_user`` returned
+under one of the five user-table names, ``meta_deck_summary`` and
+``meta_matchup_summary`` as far as ``ensure_meta`` memoized them (no
+other meta table: the Phase 0 catalog holds thousands of battles), and
+the two frames Spark renders, the summary lines and the top deck lines.
+Every turn then routes, slices, renders and serializes those rows and
+launches no Spark job. ``ensure_meta`` launches none either; only when
+``ensure_user`` ran first does it collect the meta legs.
+``games_played`` for the enough-data check is read from the snapshot's
+``user_summary`` rows (a caller's ``games_played_fn`` is called once,
+with the tables instead). The session caches nothing in Spark;
+``close()`` drops the snapshot.
 
 I/O and LLM calls are injected callables so the loop tests offline
 (FIXTURES.md §A6); nothing here touches stdin or the network.
@@ -37,10 +44,15 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-from clashroyale_datapipeline_agent_spark.plans.qna_router import answer_question
+from clashroyale_datapipeline_agent_spark.plans.qna_router import (
+    META_TABLES,
+    RENDERED,
+    USER_TABLES,
+    answer_question,
+    snapshot,
+)
 
 #: ``route_after_question`` stop tokens (``phase2_qna_workflow.py:650-652``).
 STOP_WORDS = frozenset({"stop", "exit", "quit"})
@@ -54,21 +66,22 @@ def is_stop(question: str | None) -> bool:
     return (question or "").strip().lower() in STOP_WORDS
 
 
-def default_games_played(user_tables: dict[str, DataFrame]) -> int:
-    """Games count for the enough-data check, read from the user summary
-    (collects at most one row — driver boundary, same as the reference
-    reading ``user_analytics['summary']``). Accepts both the wide 1-row
-    summary and the melted (metric, value) LLM table (A14)."""
-    from pyspark.sql import functions as F
+def summary_games_played(rows: list[dict]) -> int:
+    """Games count for the enough-data check, read from the user summary's
+    rows (same as the reference reading ``user_analytics['summary']``).
+    Accepts both the wide 1-row summary and the melted (metric, value)
+    LLM table (A14)."""
+    if not rows:
+        return 0
+    if {"metric", "value"} <= rows[0].keys():
+        values = [r["value"] for r in rows if r["metric"] == "games_played"]
+        return int(float(values[0])) if values else 0
+    return int(rows[0]["games_played"])
 
-    df = user_tables["user_summary"]
-    if {"metric", "value"} <= set(df.columns):
-        rows = (
-            df.filter(F.col("metric") == "games_played").select("value").collect()
-        )
-        return int(float(rows[0]["value"])) if rows else 0
-    rows = df.select("games_played").collect()
-    return int(rows[0]["games_played"]) if rows else 0
+
+def default_games_played(user_tables: dict[str, DataFrame]) -> int:
+    """:func:`summary_games_played` over a collect of ``user_summary``."""
+    return summary_games_played([r.asDict() for r in user_tables["user_summary"].collect()])
 
 
 @dataclass
@@ -77,15 +90,16 @@ class CoachSession:
 
     ``build_meta`` / ``build_user`` are the expensive phase builders
     (typically :mod:`plans.pipeline` wrappers); each runs AT MOST once per
-    session — the invocation counts are observable for tests. The user
-    tables are cached until :meth:`close`.
+    session — the invocation counts are observable for tests. Turns read
+    the row snapshot ``ensure_user`` takes, until :meth:`close`.
     """
 
     build_meta: Callable[[], dict[str, DataFrame]]
     build_user: Callable[[str], dict[str, DataFrame]]
     classify: Callable[[str], str]
     answer: Callable[[str, str], str]
-    games_played_fn: Callable[[dict[str, DataFrame]], int] = default_games_played
+    #: ``None`` reads games_played from the snapshot's user_summary rows
+    games_played_fn: Callable[[dict[str, DataFrame]], int] | None = None
 
     meta_builds: int = 0
     user_builds: int = 0
@@ -93,50 +107,54 @@ class CoachSession:
     games_played: int | None = None
     _meta_tables: dict[str, DataFrame] | None = field(default=None, repr=False)
     _user_tables: dict[str, DataFrame] | None = field(default=None, repr=False)
-    _cached: list[DataFrame] = field(default_factory=list, repr=False)
+    _rows: dict[str, list[dict]] | None = field(default=None, repr=False)
 
     def ensure_meta(self) -> dict[str, DataFrame]:
-        """Phase-0 memoization (``ensure_meta``, ``:557-560``)."""
+        """Phase-0 memoization (``ensure_meta``, ``:557-560``). Collects
+        the shipped meta tables only if ``ensure_user`` already took the
+        snapshot without them."""
         if self._meta_tables is None:
             self._meta_tables = self.build_meta()
             self.meta_builds += 1
+            if self._rows is not None:
+                self._rows.update(snapshot(self._meta_tables, META_TABLES))
         return self._meta_tables
 
     def ensure_user(self, player_tag: str) -> dict[str, DataFrame]:
         """Phase-1 memoization (``ensure_user``, ``:601-603``) — presence-
         keyed like the reference (a new tag mid-session does NOT rebuild).
 
-        Caches every table not cached already (those belong to whoever
-        cached them) and reads ``games_played`` from the cached tables."""
+        Takes the session's row snapshot and reads ``games_played``."""
         if self._user_tables is None:
             self.player_tag = player_tag
             tables = self.build_user(player_tag)
             self.user_builds += 1
-            for df in tables.values():
-                if df.storageLevel == StorageLevel.NONE:
-                    self._cached.append(df.cache())
-            self.games_played = self.games_played_fn(tables)
+            frames = {k: tables[k] for k in USER_TABLES if k in tables}
+            if self._meta_tables is not None:
+                frames.update(self._meta_tables)
+            self._rows = snapshot(frames, (*USER_TABLES, *RENDERED, *META_TABLES))
+            if self.games_played_fn is None:
+                self.games_played = summary_games_played(self._rows["user_summary"])
+            else:
+                self.games_played = self.games_played_fn(tables)
             self._user_tables = tables
         return self._user_tables
 
     def close(self) -> None:
-        """Release the tables this session cached (idempotent)."""
-        while self._cached:
-            self._cached.pop().unpersist()
+        """Drop the row snapshot (idempotent). The session caches nothing
+        in Spark, so nothing else needs releasing."""
+        self._rows = None
 
     def answer_one(self, question: str) -> dict:
-        """One qa_answer hop over the memoized tables."""
-        user_tables = self._user_tables
-        meta_tables = self._meta_tables
-        if user_tables is None or meta_tables is None:
+        """One qa_answer hop over the snapshot rows."""
+        if self._rows is None or self._meta_tables is None:
             raise RuntimeError("ensure_meta/ensure_user must run before answering")
         return answer_question(
             question,
             classify=self.classify,
             answer=self.answer,
-            user_tables=user_tables,
-            meta_tables=meta_tables,
             games_played=self.games_played,
+            rows=self._rows,
         )
 
 
@@ -152,8 +170,8 @@ def run_coach_loop(
     ``ask(prompt)`` supplies the human inputs (tag, then questions);
     ``emit(text)`` receives each answer. Returns the final state: the
     tag, per-question result dicts, and the build counts (which a test
-    asserts are exactly 1/1 after multiple questions). The session's
-    cached tables are released when the loop ends, however it ends.
+    asserts are exactly 1/1 after multiple questions). The session is
+    closed when the loop ends, however it ends.
     """
     session.ensure_meta()
     tag = ask(TAG_PROMPT)

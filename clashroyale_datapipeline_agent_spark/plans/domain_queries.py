@@ -1152,8 +1152,8 @@ def e2e_user_context_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline COMPOSES, not just its pieces: the staged battle store feeds
     the A1 global summary, the A14 metric/value melt, the A6 matchup
     matrix, the A12 user-deck re-aggregation, and the F7 engine-side
-    rendering (``render_deck_lines`` + the ``"%s: %s"`` summary form of
-    ``render_context_lines``, reference ``phase2_qna_workflow.py:68-86``)
+    rendering (``render_deck_lines`` + the ``"%s: %s"`` form of
+    ``qna_router.summary_lines``, reference ``phase2_qna_workflow.py:68-86``)
     — emitted as the ordered coach-context lines the QnA router ships to
     the LLM. Counter lines format via the melt's string values; win_rate
     renders ``%.4f`` over a pre-rounded value (the f7 engine-stability

@@ -41,7 +41,7 @@ class CoachServer:
 
     ``port=0`` binds an ephemeral port (tests); :attr:`port` reports the
     bound one. ``start()`` serves on a daemon thread; ``close()`` shuts
-    down, joins and releases the session's cached tables.
+    down, joins and closes the session (dropping its row snapshot).
     """
 
     def __init__(

@@ -137,6 +137,14 @@ def test_parse_classifier_fallbacks():
     assert c.category == "card" and c.data_needs == ["USER_CARD_SUMMARY"]
 
 
+@pytest.mark.parametrize("needs", [5, True, "USER_SUMMARY", {"USER_SUMMARY": 1}, None])
+def test_parse_classifier_non_list_needs_fall_back(needs):
+    """A data_needs that is not a list falls back to the category's
+    defaults instead of raising out of answer_question."""
+    c = qr.parse_classifier_output(json.dumps({"category": "user", "data_needs": needs}))
+    assert c.category == "user" and c.data_needs == ["USER_SUMMARY", "USER_DECK_SUMMARY"]
+
+
 def test_route_precedence_needs_over_category():
     c = qr.Classification("meta", ["USER_MATCHUP_SUMMARY"])
     assert qr.route_by_category(c) == "matchup"
@@ -402,6 +410,49 @@ def test_coach_session_computes_each_table_once(spark, meta_catalog):
         assert df.storageLevel != StorageLevel.NONE, name
 
 
+def _jobs_in_group(spark, group: str, fn) -> list[int]:
+    """The ids of the Spark jobs ``fn()`` launches under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("meta_first", [True, False], ids=["meta-first", "user-first"])
+def test_coach_turns_launch_no_spark_job(spark, meta_catalog, meta_first):
+    """The session's snapshot jobs all run in the caller's job group —
+    in ensure_user, or for the meta legs in ensure_meta when the user
+    snapshot came first — and no turn, first or repeated, launches a job."""
+    from clashroyale_datapipeline_agent_spark.plans.coach import CoachSession
+
+    session = CoachSession(
+        build_meta=lambda: _shipped_meta(meta_catalog),
+        build_user=lambda tag: _player_tables(spark, seed=13),
+        classify=_route_classify,
+        answer=lambda q, ctx: "ok",
+    )
+    tag = f"coach-{'meta' if meta_first else 'user'}-first"
+    ensure_meta = lambda: _jobs_in_group(spark, f"{tag}-meta", session.ensure_meta)  # noqa: E731
+    ensure_user = lambda: _jobs_in_group(  # noqa: E731
+        spark, f"{tag}-user", lambda: session.ensure_user("#TAG"))
+    if meta_first:
+        assert ensure_meta() == []
+        # five tables, two meta tables and two rendered frames: a job each
+        assert len(ensure_user()) >= 9
+    else:
+        assert len(ensure_user()) >= 7
+        assert len(ensure_meta()) >= 2
+    for round_no in range(2):
+        for route in _ROUTE_NEEDS:
+            group = f"{tag}-turn-{round_no}-{route}"
+            jobs = _jobs_in_group(spark, group, lambda: session.answer_one(f"{route}: hi"))
+            assert jobs == [], (round_no, route)
+    session.close()
+
+
 @pytest.mark.parametrize("stops", [True, False], ids=["stop-word", "input-ends"])
 def test_coach_loop_releases_the_session_cache(spark, meta_catalog, stops):
     """run_coach_loop closes its session when it ends, also when a turn
@@ -455,9 +506,9 @@ def test_rendered_context_matches_reference_fstrings(spark):
         "deck_type string, games long, wins long, win_rate double",
     )
     tables = {"user_summary": summary, "user_deck_summary": deck}
-    rendered = qr.render_context_lines(
-        "user", ["USER_SUMMARY", "USER_DECK_SUMMARY"], tables
-    )
+    needs = ["USER_SUMMARY", "USER_DECK_SUMMARY"]
+    rows = qr.snapshot(tables, qr.route_keys("user", needs))
+    rendered = qr.render_context_lines("user", needs, rows)
     expected_rows = [("games_played", "30"), ("wins", "17"), ("win_rate", "0.5667")]
     expected = [f"{m}: {v}" for m, v in expected_rows]
     expected.append("\nYour deck performance:")
@@ -467,11 +518,9 @@ def test_rendered_context_matches_reference_fstrings(spark):
     assert rendered == "\n".join(expected)
 
     # empty deck table -> the reference's fallback sentence
-    empty = deck.filter("games < 0")
-    rendered = qr.render_context_lines(
-        "user", ["USER_DECK_SUMMARY"], {"user_deck_summary": empty,
-                                        "user_summary": summary}
-    )
+    empty = {"user_deck_summary": deck.filter("games < 0"), "user_summary": summary}
+    rows = qr.snapshot(empty, qr.route_keys("user", ["USER_DECK_SUMMARY"]))
+    rendered = qr.render_context_lines("user", ["USER_DECK_SUMMARY"], rows)
     assert rendered == "\nNo deck statistics found for this user."
 
 

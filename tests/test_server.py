@@ -96,12 +96,14 @@ def test_error_paths(served):
 
 
 def test_close_releases_the_session_cache(spark):
-    """CoachServer.close() releases the tables the session cached."""
+    """The session leaves nothing it received cached: it answers from a
+    row snapshot, which CoachServer.close() drops (idempotently)."""
     from pyspark import StorageLevel
 
     user = {"user_summary": spark.range(2)}
+    meta = {"meta_deck_summary": spark.range(4)}
     session = CoachSession(
-        build_meta=lambda: {"meta_deck_summary": spark.range(4)},
+        build_meta=lambda: meta,
         build_user=lambda tag: user,
         classify=lambda q: json.dumps({"category": "meta", "data_needs": []}),
         answer=lambda q, ctx: f"A[{q}]",
@@ -110,7 +112,11 @@ def test_close_releases_the_session_cache(spark):
     srv = CoachServer(session).start()
     try:
         assert _call(srv.port, "/session", {"player_tag": "#ABC"})[0] == 200
-        assert user["user_summary"].storageLevel != StorageLevel.NONE
+        assert _call(srv.port, "/qna", {"question": "meta?"})[0] == 200
+        for df in (user["user_summary"], meta["meta_deck_summary"]):
+            assert df.storageLevel == StorageLevel.NONE
     finally:
         srv.close()
-    assert user["user_summary"].storageLevel == StorageLevel.NONE
+    session.close()
+    with pytest.raises(RuntimeError):
+        session.answer_one("meta?")

@@ -1,6 +1,6 @@
-"""Pure-Python tests for the repo tools (no Spark jobs): bench-artifact
-recovery in tools/bench_compare.py and plan-fact parsing in
-tools/explain_audit.py."""
+"""Tests for the repo tools: bench-artifact recovery in
+tools/bench_compare.py, plan-fact parsing in tools/explain_audit.py, and
+what the perfbench harness relies on of the engine."""
 
 from __future__ import annotations
 
@@ -270,3 +270,89 @@ def test_concurrent_legs_only_through_run_legs():
         and (pool.search(p.read_text()) or clear.search(p.read_text()))
     ]
     assert offenders == []
+
+
+def test_perfbench_coach_contract(spark, tmp_path):
+    """The coach path as perfbench/run.py drives it. The benchmark exits
+    non-zero only when an exception escapes an operation or its set-up,
+    so this pins what it relies on: the symbols run.py imports; the
+    router functions its traced runs wrap by name and a turn calls
+    through the module; a session whose ``build_meta`` returns only the
+    two shipped meta tables answering every route, with shipped names
+    and payloads its untimed check understands; and the Phase 0 tables
+    that check counts still counting after the sessions."""
+    import contextlib
+    from types import SimpleNamespace
+
+    root = Path(__file__).resolve().parents[1]
+    if str(root) not in sys.path:
+        sys.path.insert(0, str(root))
+    import bench as repo_bench
+    from perfbench import workloads as W
+    from tools.oracle_check import git_sha
+
+    from clashroyale_datapipeline_agent_spark.fixtures import generate_raw_battles
+    from clashroyale_datapipeline_agent_spark.plans import qna_router as qr
+    from clashroyale_datapipeline_agent_spark.plans.coach import CoachSession
+    from clashroyale_datapipeline_agent_spark.plans.pipeline import MetaDatasetBuilder
+
+    assert callable(repo_bench._host_snapshot) and callable(git_sha)
+
+    spans: list[str] = []
+
+    class Recorder:
+        @contextlib.contextmanager
+        def span(self, name, **_):
+            spans.append(name)
+            yield {"id": len(spans)}
+
+    fake = SimpleNamespace(spark=spark, rec=Recorder(), seed=101, smoke=False)
+    workload = W.CoachWorkload(fake)
+    wrapped = ("prep_context", "render_context_lines", "serialize_context")
+    originals = {name: getattr(qr, name) for name in wrapped}
+    try:
+        W.CoachWorkload.instrument(fake.rec)
+        assert all(getattr(qr, name) is not originals[name] for name in wrapped)
+        meta = MetaDatasetBuilder(
+            spark,
+            lambda tag: W._stub_fetch(tag, []),
+            staging_dir=str(tmp_path / "meta_staging"),
+            min_total_battles=10**9,
+            min_games_per_type=10**9,
+            max_loops=0,
+            initial_sample=6,
+            seed=101,
+            bucket_table=None,
+        ).run(workload.leaderboard)
+        shipped = {k: meta[k] for k in ("meta_deck_summary", "meta_matchup_summary")}
+        rec = {"raw": generate_raw_battles(
+            n_players=1, battles_per_player=W.BATTLES_PER_PLAYER, seed=7)}
+        contexts: list[str] = []
+        session = CoachSession(
+            build_meta=lambda: shipped,
+            build_user=lambda tag: workload._build_user(fake, rec),
+            classify=lambda q: json.dumps(
+                dict(zip(("category", "data_needs"), W.ROUTE_NEEDS[q.split(":", 1)[0]]))
+            ),
+            answer=lambda q, ctx: contexts.append(ctx) or "ok",
+        )
+        session.ensure_meta()
+        session.ensure_user("#COACH000")
+        known = set(W.USER_TABLES) | set(shipped)
+        n_rows = {**{k: df.count() for k, df in shipped.items()}, **rec["n_rows"]}
+        for route in W.ROUTE_NEEDS:
+            spans.clear()
+            state = session.answer_one(f"{route}:question")
+            assert spans == ["qna.prep", "qna.render", "qna.serialize"], route
+            assert set(state["context_tables"]) <= known, route
+            prefix = sum(
+                len(t) + 1 for t in (state["low_data_warning"], state["context_text"]) if t
+            )
+            payload = contexts.pop()[prefix:]
+            assert W._payload_failure(payload, state["context_tables"], n_rows) is None
+        session.close()
+        for name in ("battles", "participants", *shipped):
+            meta[name].count()
+    finally:
+        for name, fn in originals.items():
+            setattr(qr, name, fn)
