@@ -2,4 +2,5 @@ from clashroyale_datapipeline_agent_spark.fixtures.battles import (  # noqa: F40
     generate_leaderboard,
     generate_raw_battles,
     raw_battles_df,
+    stub_battlelog,
 )

@@ -10,6 +10,7 @@ most-recent-first per-player ordering. Seed-fixed → bitwise-stable fixtures.
 from __future__ import annotations
 
 import random
+import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -97,6 +98,23 @@ def generate_raw_battles(
 def raw_battles_df(spark: SparkSession, **kwargs) -> DataFrame:
     rows = generate_raw_battles(**kwargs)
     return spark.createDataFrame(rows, schema=schemas.RAW_BATTLE)
+
+
+def stub_battlelog(tag: str, battles_per_player: int = 25) -> list[dict]:
+    """Stand-in for GET /players/{tag}/battlelog: one player's battles,
+    seeded by ``crc32(tag)`` (the same in every process, unlike the
+    salted ``hash()``) and re-tagged to ``tag``, so every fetched player
+    contributes their own battles to Phase 0's per-player most-recent-k."""
+    battles = generate_raw_battles(
+        n_players=1,
+        battles_per_player=battles_per_player,
+        seed=zlib.crc32(tag.encode()),
+    )
+    for b in battles:
+        b["player_tag"] = tag
+        for member in b["team"]:
+            member["tag"] = tag
+    return battles
 
 
 def generate_leaderboard(n: int = 400, seed: int = 11) -> list[dict]:

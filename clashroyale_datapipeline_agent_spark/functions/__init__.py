@@ -1,7 +1,6 @@
 from clashroyale_datapipeline_agent_spark.functions.common import (  # noqa: F401
     advantage_label,
     flip_result,
-    normalize_tag,
     win_rate,
 )
 from clashroyale_datapipeline_agent_spark.functions.cards import classify_deck_col  # noqa: F401

@@ -38,18 +38,6 @@ def flip_result(result: str) -> Column:
     return F.expr(flip_result_sql(result))
 
 
-def normalize_tag(tag: Column, *, url: bool = False) -> Column:
-    """Canonical player tag: trim, uppercase, ensure one leading ``#``;
-    ``url=True`` emits the ``%23``-encoded form.
-
-    Parity: ``/root/reference/src/api/battles.py:6-17`` (strip/upper/
-    prepend-#) and ``:33-35`` (``#`` -> ``%23``).
-    """
-    bare = F.regexp_replace(F.upper(F.trim(tag)), "^#", "")
-    prefix = "%23" if url else "#"
-    return F.concat(F.lit(prefix), bare)
-
-
 def win_rate_sql(wins: str, games: str) -> str:
     """``wins/games`` over two SQL expressions, with the reference's
     divide-by-zero convention.

@@ -175,24 +175,6 @@ def deck_performance_sql(src: str, side: str, flip: bool, min_games: int) -> str
     )
 
 
-def compute_deck_performance(
-    battles: DataFrame, side: str = "my_cards", *, flip: bool | None = None,
-    min_games: int = 3,
-) -> DataFrame:
-    """A4 — exact-deck stats, deck key = sorted card array.
-
-    Parity: ``user_analytics.py:328-395``. The reference keys on
-    ``tuple(sorted(cards))`` with no 8-card guard (unlike deck-TYPE stats);
-    the opponent table flips win/loss. Spark groups directly on the
-    ``array<string>`` key (`array_sort`); no stringify round-trip.
-    """
-    if flip is None:
-        flip = side == "opp_cards"
-    return battles.sparkSession.sql(
-        deck_performance_sql("{battles}", side, flip, min_games), battles=battles
-    )
-
-
 @lru_cache(maxsize=16)
 def user_deck_matchups_sql(
     src: str, overall: str | float, min_games: int, winrate_delta: float
@@ -300,20 +282,6 @@ def deck_type_summary_sql(src: str, side: str) -> str:
             FROM {src} WHERE {col} IS NOT NULL
         ) GROUP BY `type`
     """
-
-
-def compute_deck_type_summary(
-    typed_battles: DataFrame, side: str = "my"
-) -> DataFrame:
-    """A5 — archetype stats for one side (``deck_type.py:192-274``).
-
-    ``side="opp"`` flips win/loss. Input must carry ``my_deck_type`` /
-    ``opp_deck_type`` (see :func:`with_deck_types`); null types (non-8-card
-    decks) are skipped exactly like the reference's ``my_type = None`` path.
-    """
-    return typed_battles.sparkSession.sql(
-        deck_type_summary_sql("{typed}", side), typed=typed_battles
-    )
 
 
 @lru_cache(maxsize=8)

@@ -50,14 +50,6 @@ def exact_dedup_groups(
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep exactly one row per identical text (the keeper = min id)."""
-    keepers = exact_dedup_groups(docs, text_col, id_col).select(
-        F.col("keeper_id").alias(id_col)
-    )
-    return docs.join(keepers, id_col, "left_semi")
-
-
 # ---------------------------------------------------------------------------
 # shingling + minhash
 # ---------------------------------------------------------------------------
@@ -343,55 +335,6 @@ def minhash_lsh_dedup(
 # simhash
 # ---------------------------------------------------------------------------
 
-def simhash_col(text: Column, bits: int = 64) -> Column:
-    """SimHash fingerprint: per-token xxhash64, bitwise majority vote.
-
-    Expressed as a fold over tokens accumulating ``bits`` counters (+1/-1
-    per bit), then re-packed into a long. Native expressions throughout —
-    at 64 bits this builds a 64-element accumulator array per row; cost is
-    O(tokens · bits) bit-ops inside codegen, still far cheaper than a
-    Python UDF round trip.
-    """
-    toks = F.filter(F.split(F.lower(F.trim(text)), r"\s+"), lambda t: t != "")
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    zero = F.array_repeat(F.lit(0), bits)
-    # per-bit vote array is built with STATIC shift amounts (shiftright takes
-    # a Python int, not a Column) — a 64-branch literal array per token,
-    # still fully codegen'd
-    counts = F.aggregate(
-        hashes,
-        zero,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-                    for i in range(bits)
-                ]
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    # distinct powers of two never overlap, so a sum assembles the word;
-    # the top bit uses the negative two's-complement literal
-    weights = F.array(
-        *[
-            F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long")
-            for i in range(bits)
-        ]
-    )
-    packed = F.aggregate(
-        F.zip_with(
-            counts,
-            weights,
-            lambda c, p: F.when(c > 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return packed
-
-
 def hamming_candidate_pairs(
     hashes: DataFrame,
     *,
@@ -491,29 +434,6 @@ def hamming_candidate_pairs(
     return pairs.distinct().filter(F.col("hamming") <= max_hamming)
 
 
-def simhash_candidate_pairs(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Pairs within ``max_hamming`` bit distance via 4-band banding.
-
-    Pigeonhole: any two 64-bit hashes within Hamming distance 3 agree on at
-    least one of four 16-bit bands. Join on (band, band_bits), then filter
-    by exact popcount distance. Delegates to the generic
-    :func:`hamming_candidate_pairs` (same plan shape as the historical
-    inline form).
-    """
-    sh = docs.select(
-        F.col(id_col).alias("id"), simhash_col(F.col(text_col)).alias("h")
-    )
-    return hamming_candidate_pairs(
-        sh, hash_col="h", id_col="id", bands=4, bits=64, max_hamming=max_hamming
-    )
-
-
 def ngram_contamination(
     train: DataFrame,
     eval_docs: DataFrame,
@@ -578,8 +498,7 @@ def ngram_contamination(
 
 
 def simhash_md5_col(text: Column, bits: int = 32) -> Column:
-    """Cross-engine SimHash: per-token **md5** bit voting (reference parity
-    for the xxhash64 fast path in :func:`simhash_col`, but oracle-able —
+    """Cross-engine SimHash: per-token **md5** bit voting (oracle-able:
     md5 hex digests are identical in Spark and DuckDB, while xxhash64
     seeds are engine-specific).
 
@@ -762,64 +681,6 @@ def dedup_incremental(
     return j.select(*batch.columns, status.alias("status"))
 
 
-def write_fingerprint_store(
-    fps: DataFrame,
-    table: str,
-    *,
-    fp_col: str = "fp",
-    num_buckets: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Persist the dedup history store bucketed+sorted by fingerprint.
-
-    The registry-maintenance layout for :func:`dedup_incremental` at
-    scale: with history bucketed on the fingerprint, every per-batch
-    membership join co-locates on the bucket key, so the (huge) history
-    side is read in place — no shuffle of 100 TB worth of fingerprints
-    per arriving batch; only the (small) batch hashes into the bucket
-    layout. ``mode='append'`` is the steady-state call: admitted rows'
-    fingerprints append into the same bucket layout.
-    """
-    from clashroyale_datapipeline_agent_spark.sources.sinks import (
-        write_bucketed_table,
-    )
-
-    write_bucketed_table(
-        fps.select(fp_col),
-        table,
-        bucket_by=[fp_col],
-        num_buckets=num_buckets,
-        sort_by=[fp_col],
-        mode=mode,
-    )
-
-
-def dedup_incremental_bucketed(
-    spark,
-    batch: DataFrame,
-    store_table: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fp_col: str = "fp",
-) -> DataFrame:
-    """:func:`dedup_incremental` against a bucketed history table
-    (:func:`write_fingerprint_store`).
-
-    The merge hint is deliberate: history is by definition the big side
-    (billions of fingerprints at corpus scale) — broadcast never
-    applies there, and SMJ against the bucketed store runs WITHOUT an
-    Exchange on the history side (plan-shape-pinned in
-    ``tests/test_skew_pruning.py``). The batch alone shuffles into the
-    store's bucket layout, and the within-batch first-wins window then
-    reuses that same partitioning — one exchange total per batch.
-    """
-    hist = spark.table(store_table).hint("merge")
-    return dedup_incremental(
-        batch, hist, text_col=text_col, id_col=id_col, fp_col=fp_col
-    )
-
-
 def band_keys_from_sigs(
     sigs: DataFrame, *, num_hashes: int = 8, bands: int = 4
 ) -> DataFrame:
@@ -904,10 +765,9 @@ def write_lsh_band_store(
     num_buckets: int = 64,
     mode: str = "overwrite",
 ) -> None:
-    """Persist the near-dup history store bucketed+sorted by band key —
-    the LSH sibling of :func:`write_fingerprint_store` (round-9 judge
-    ask #2). One row per distinct band key ever admitted; with history
-    bucketed on the key, each arriving batch's membership join
+    """Persist the near-dup history store bucketed+sorted by band key
+    (round-9 judge ask #2). One row per distinct band key ever admitted;
+    with history bucketed on the key, each arriving batch's membership join
     co-locates on the bucket layout and only the (small) batch side
     shuffles. ``mode='append'`` is the steady-state call with the
     admitted docs' keys."""
@@ -1030,8 +890,7 @@ def dedup_incremental_neardup_bucketed(
     table (:func:`write_lsh_band_store`). The merge hint keeps the
     membership join SMJ against the bucketed store — no Exchange on the
     (by-definition huge) history side; the batch alone hashes into the
-    bucket layout (plan-shape-pinned in ``tests/test_skew_pruning.py``,
-    same discipline as :func:`dedup_incremental_bucketed`)."""
+    bucket layout (plan-shape-pinned in ``tests/test_skew_pruning.py``)."""
     hist = spark.table(store_table).hint("merge")
     return dedup_incremental_neardup(batch, hist, **kwargs)
 
@@ -1352,22 +1211,6 @@ def dedup_incremental_hamming(
         )
         .select(*batch_hashes.columns, status.alias("status"))
     )
-
-
-def dedup_incremental_hamming_bucketed(
-    spark,
-    batch_hashes: DataFrame,
-    store_table: str,
-    **kwargs,
-) -> DataFrame:
-    """:func:`dedup_incremental_hamming` against a bucketed band-key
-    table (:func:`write_lsh_band_store` — the SAME store layout as the
-    text grain; a band_key column is a band_key column). The merge hint
-    keeps the membership join SMJ against the bucketed store — no
-    Exchange on the history side; only the batch hashes into the bucket
-    layout (plan-shape-pinned in ``tests/test_skew_pruning.py``)."""
-    hist = spark.table(store_table).hint("merge")
-    return dedup_incremental_hamming(batch_hashes, hist, **kwargs)
 
 
 def hamming_key_map(

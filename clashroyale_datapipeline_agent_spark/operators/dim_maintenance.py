@@ -24,7 +24,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clashroyale_datapipeline_agent_spark.sources import sinks
 from clashroyale_datapipeline_agent_spark.sources.readers import (
     CARD_METADATA_PATH,
     load_card_metadata,
@@ -94,7 +93,7 @@ def run_elixir_backfill(
     meta = load_card_metadata(spark, meta_path)
     raw = load_cards_raw(spark, raw_path)
     refreshed = backfill_elixir(meta, raw)
-    sinks.write_json(refreshed.drop("backfill_status"), str(out_path))
+    refreshed.drop("backfill_status").write.mode("overwrite").json(str(out_path))
     missing = [
         r["name"]
         for r in refreshed.filter(F.col("backfill_status") == "missing")

@@ -99,96 +99,3 @@ def classify_questions(
 
     return questions.mapInPandas(run, schema=CLASSIFIED_SCHEMA)
 
-
-#: Raw generation outcome per seed; hash/token enrichment happens JVM-side
-#: in :func:`generate_synthetic` (keep the Python batch loop minimal).
-GENERATED_RAW_SCHEMA = (
-    "seed_id long, prompt string, output string, reject_reason string"
-)
-
-
-def generate_synthetic(
-    seeds: DataFrame,
-    make_client: Callable[[], Callable[[str], str]],
-    *,
-    prompt_col: str = "prompt",
-    id_col: str = "seed_id",
-    validate: Callable[[str], str | None] | None = None,
-    max_retries: int = 0,
-    backoff_s: float = 1.0,
-    sleeper: Callable[[float], None] | None = None,
-) -> DataFrame:
-    """Synthetic-data generation at scale — the step between a seed/prompt
-    table and the curation pipeline.
-
-    Same execution contract as :func:`classify_questions` (one client per
-    task, Arrow batches, per-row retry/backoff, a failing row never kills
-    its batch), plus an injected ``validate(output) -> reject_reason |
-    None`` hook so schema/grounding checks run NEXT TO the generation
-    (rejecting inside the task avoids shipping garbage through the
-    shuffle). Failures record ``reject_reason`` (``llm_error:...`` or the
-    validator's reason) with a NULL output.
-
-    The returned frame adds JVM-side enrichment the downstream curation
-    ops key on — ``parsed_ok``, whitespace ``n_tokens``, and an md5
-    ``content_hash`` (the exact-dedup key: synthetic generators repeat
-    themselves, so generation composes with ``dedup.exact_dedup`` and
-    ``sampling.plan_source_mixture`` before anything trains on it).
-    """
-    from pyspark.sql import functions as F
-
-    from clashroyale_datapipeline_agent_spark.operators.text import tokens_col
-
-    do_sleep = sleeper if sleeper is not None else __import__("time").sleep
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = make_client()
-        for pdf in batches:
-            outs: list[str | None] = []
-            rejects: list[str | None] = []
-            for prompt in pdf[prompt_col]:
-                raw: str | None = None
-                err: str | None = None
-                for attempt in range(max_retries + 1):
-                    try:
-                        raw = client(prompt)
-                        err = None
-                        break
-                    except Exception as exc:  # per-row tolerance
-                        err = f"llm_error:{type(exc).__name__}: {exc}"[:500]
-                        if attempt < max_retries:
-                            do_sleep(backoff_s * (attempt + 1))
-                if err is None and validate is not None and raw is not None:
-                    err = validate(raw)
-                if err is not None:
-                    outs.append(None)
-                    rejects.append(err)
-                else:
-                    outs.append(raw)
-                    rejects.append(None)
-            yield pd.DataFrame(
-                {
-                    "seed_id": pdf[id_col],
-                    "prompt": pdf[prompt_col],
-                    "output": outs,
-                    "reject_reason": rejects,
-                }
-            )
-
-    raw = seeds.mapInPandas(run, schema=GENERATED_RAW_SCHEMA)
-    return raw.select(
-        "seed_id",
-        "prompt",
-        "output",
-        "reject_reason",
-        F.col("reject_reason").isNull().alias("parsed_ok"),
-        F.when(
-            F.col("output").isNotNull(), F.size(tokens_col(F.col("output")))
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
-        .alias("n_tokens"),
-        F.when(F.col("output").isNotNull(), F.md5("output")).alias(
-            "content_hash"
-        ),
-    )

@@ -323,13 +323,3 @@ def most_recent_per_player(battles: DataFrame, k: int = 10) -> DataFrame:
         .filter(F.col("_rn") <= k)
         .drop("_rn")
     )
-
-
-def anti_join_fetched(candidates: DataFrame, fetched: DataFrame, key: str = "tag") -> DataFrame:
-    """J3/J4 — drop candidates already used/fetched (left anti join).
-
-    Parity: the reference's driver-side ``set`` bookkeeping
-    (``meta_workflow.py:263-276``, ``:316-323``). The fetched side is small
-    (≤ thousands of tags) → broadcast anti join, no shuffle of candidates.
-    """
-    return candidates.join(F.broadcast(fetched), key, "left_anti")

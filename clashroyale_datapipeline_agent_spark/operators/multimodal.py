@@ -58,16 +58,6 @@ def _decode_stub(payload: bytes | None, media_type: str) -> list[float]:
     ]
 
 
-def pil_available() -> bool:
-    """True iff Pillow is importable (the ``multimodal`` extra)."""
-    try:
-        import PIL  # noqa: F401, PLC0415
-
-        return True
-    except ImportError:
-        return False
-
-
 def pil_image_features(payload: bytes | None, media_type: str) -> list[float]:
     """REAL image decoder (Pillow) with the same contract as
     ``_decode_stub`` — drop-in for ``extract_features(decoder=...)``.
@@ -898,9 +888,8 @@ def y4m_features(
     payload: bytes | None, media_type: str, *, every_n: int = 2
 ) -> list[float]:
     """REAL video decoder under the ``extract_features`` contract —
-    the executable form of ``frame_sample_plan``: blind-parse the y4m
-    container, SAMPLE every ``every_n``-th frame (frame 0 first, the
-    plan's convention), and aggregate sampled luma. Features: width,
+    blind-parse the y4m container, SAMPLE every ``every_n``-th frame
+    (frame 0 first), and aggregate sampled luma. Features: width,
     height, total frames, sampled frames, Σ of sampled-frame luma sums,
     fps numerator, first sampled frame's luma sum, payload bytes.
     Fixture magnitudes stay far under float32's 2^24 integer ceiling."""
@@ -1077,78 +1066,3 @@ def extract_features(assets: DataFrame, *, decoder=None) -> DataFrame:
 
     return assets.mapInPandas(run, schema=FEATURE_SCHEMA)
 
-
-def frame_sample_plan(assets: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan*: explodes per-asset frame indices from
-    metadata (``meta['n_frames']``) — the decode of each sampled frame is
-    the stubbed step. Demonstrates the explode-then-mapInPandas shape that
-    keeps frame fan-out distributed."""
-    n_frames = F.coalesce(
-        F.element_at(F.col("meta"), "n_frames").cast("int"), F.lit(0)
-    )
-    # Frameless assets (n_frames <= 0 or missing meta) contribute NO rows —
-    # without the filter, sequence(0, greatest(-1, 0)) would fabricate a
-    # phantom frame_idx 0 for them.
-    return (
-        assets.where(n_frames > 0)
-        .select(
-            "asset_id",
-            F.explode(
-                F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-            ).alias("frame_idx"),
-        )
-    )
-
-
-#: Output schema of resize — the MEDIA_ASSET shape plus an audit column.
-RESIZE_SCHEMA = (
-    "asset_id long, media_type string, payload binary, "
-    "meta map<string,string>, status string"
-)
-
-
-def resize_assets(assets: DataFrame, *, max_bytes: int = 256) -> DataFrame:
-    """Resize/transcode media payloads via ``mapInPandas`` — binary in,
-    binary out, metadata updated in place.
-
-    The codec call is STUBBED (a real deployment swaps the body for
-    PIL ``thumbnail`` / ffmpeg scale): payloads longer than ``max_bytes``
-    are deterministically truncated and tagged ``meta['resized']='true'``,
-    shorter ones pass through untouched. What is REAL — and what this
-    operator exists to pin — is the Spark-side shape a 100 TB media
-    pipeline needs: Arrow batches stream binary columns through Python
-    without per-row overhead, output payloads stay columnar (never
-    collected), per-asset failures land in ``status`` instead of killing
-    the stage, and the output schema is again MEDIA_ASSET-compatible so
-    resize chains with ``extract_features``/``frame_sample_plan``.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas, status = [], [], []
-            for payload, meta in zip(pdf["payload"], pdf["meta"]):
-                meta = dict(meta) if meta is not None else {}
-                try:
-                    if payload is None:
-                        raise NotImplementedError(
-                            "no payload; real codec would fetch/stream"
-                        )
-                    if len(payload) > max_bytes:
-                        payload = payload[:max_bytes]
-                        meta["resized"] = "true"
-                    status.append("ok")
-                except Exception as e:  # noqa: BLE001 — per-row tolerance
-                    status.append(f"error:{type(e).__name__}")
-                payloads.append(payload)
-                metas.append(meta)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "payload": payloads,
-                    "meta": metas,
-                    "status": status,
-                }
-            )
-
-    return assets.mapInPandas(run, schema=RESIZE_SCHEMA)

@@ -3,12 +3,6 @@
 The reference uses ``random.sample`` for exact-k without-replacement draws
 (``/root/reference/src/utils/sampling.py:5-31``). Distributed equivalents:
 
-- :func:`sample_exact_k` — exact-k via ``orderBy(rand(seed)).limit(k)``.
-  A full sort at leaderboard scale (≤ thousands of rows) is trivial; Spark
-  plans TakeOrderedAndProject, so only k rows survive per partition before
-  the single merge.
-- :func:`sample_approx` — ``df.sample`` for data-scale sampling: no sort,
-  no shuffle, approximate row count (binomial per partition).
 - :func:`sample_deterministic_mod` — seedless *deterministic* pseudo-sample
   on a key (hash-mod). Used where cross-engine reproducibility matters more
   than uniformity (e.g. the DuckDB oracle, which cannot reproduce either
@@ -23,86 +17,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-#: Above this row count ``sample_exact_k`` hands off to the reservoir
-#: implementation: the footgun (full ``orderBy(rand)`` of a fact table)
-#: cannot be pointed at anything bigger than a leaderboard.
-EXACT_K_SORT_CEILING = 100_000
-
-
-def sample_exact_k(df: DataFrame, k: int, seed: int | None = None, *, strict: bool = True) -> DataFrame:
-    """R1 — exact-k uniform without-replacement sample.
-
-    ``strict`` mirrors the reference's ``raise if n < k``; with
-    ``strict=False`` it degrades to min(n, k) rows like the call sites'
-    ``min(250, n)`` clamp (``meta_workflow.py:232``).
-
-    Inputs above :data:`EXACT_K_SORT_CEILING` rows delegate to
-    :func:`sample_exact_k_reservoir` (O(n) scan, O(k) memory per
-    partition) instead of the full sort — still exact-uniform, but the
-    seed maps onto the reservoir's per-partition RNG stream rather than
-    ``F.rand``, so the sampled *set* differs between the two paths.
-    """
-    n = df.count()
-    if strict and n < k:
-        raise ValueError(f"population smaller than sample size {k}")
-    if n > EXACT_K_SORT_CEILING:
-        if seed is None:
-            # Preserve the unseeded contract (fresh sample per call) across
-            # the delegation — a fixed fallback seed would make every
-            # unseeded large-input run return the identical sample.
-            import random as _random
-
-            seed = _random.randrange(1 << 31)
-        return sample_exact_k_reservoir(df, k, seed=seed)
-    r = F.rand(seed) if seed is not None else F.rand()
-    return df.orderBy(r.asc()).limit(k)
-
-
-def sample_approx(df: DataFrame, fraction: float, seed: int | None = None) -> DataFrame:
-    """Scale path: per-partition binomial sample, zero shuffle."""
-    return df.sample(withReplacement=False, fraction=fraction, seed=seed)
-
-
-def sample_exact_k_reservoir(df: DataFrame, k: int, seed: int = 42) -> DataFrame:
-    """R1 at scale: exact-k without the full sort.
-
-    ``orderBy(rand).limit(k)`` sorts everything; this keeps a size-k
-    reservoir per partition (`mapPartitions`, O(n) scan, O(k) memory) and
-    merges the ≤ p·k survivors with one tiny TakeOrdered. Each row carries
-    its uniform draw so the merge stays exact-uniform: the global sample is
-    the k rows with the smallest draws, and every partition's reservoir
-    provably contains its local smallest-k.
-    """
-    import heapq
-    import random as _random
-
-    schema = df.schema
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    keyed_schema = StructType([StructField("_draw", DoubleType(), False), *schema])
-
-    def reservoir(idx: int, rows):
-        rng = _random.Random((seed << 16) ^ idx)
-        heap: list[tuple[float, int, tuple]] = []  # max-heap via negation
-        for i, row in enumerate(rows):
-            d = rng.random()
-            item = (-d, i, tuple(row))
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif -heap[0][0] > d:
-                heapq.heapreplace(heap, item)
-        for negd, _, vals in heap:
-            yield (-negd, *vals)
-
-    spark = df.sparkSession
-    kept = spark.createDataFrame(
-        df.rdd.mapPartitionsWithIndex(reservoir, preservesPartitioning=False),
-        keyed_schema,
-    )
-    return (
-        kept.orderBy(F.asc("_draw")).limit(k).drop("_draw")
-    )
 
 
 def sample_deterministic_mod(key: Column, modulus: int, keep_below: int) -> Column:

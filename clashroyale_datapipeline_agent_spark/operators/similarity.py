@@ -1,17 +1,17 @@
 """Similarity search over embedding columns (BASELINE.json north star).
 
-Baseline: brute-force cosine top-k — a single scan with a native
-``zip_with``/``aggregate`` dot product (no UDF, no shuffle until the final
-top-k merge, which is TakeOrderedAndProject).
+Exact scoring: :func:`cosine_col` — a native ``zip_with``/``aggregate``
+dot product (no UDF); the registry's ``ann_cosine_topk`` is the
+brute-force top-k built on it.
 
-Scale path: LSH bucketing (random hyperplane signs) so each query probes
-only its bucket — turns the 100 TB scan into a bucket-pruned scan. An IVF
-variant (k-means-style coarse centroids) follows the same join shape.
+Scale path: :class:`IvfPqIndex` — k-means coarse cells
+(:func:`kmeans_lloyd_iter`) with product-quantized codes, persisted one
+partition per cell so a probe reads only the cells it names, refreshed
+and compacted cell by cell.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 
@@ -44,127 +44,6 @@ def cosine_col(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot_col(a, b) / denom).otherwise(F.lit(0.0))
 
 
-def brute_force_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    *,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Exact top-k by cosine to a literal query vector.
-
-    The query is folded into the plan as an array literal; scoring is one
-    codegen'd projection over the scan, and the top-k is
-    TakeOrderedAndProject (per-partition heaps, k rows to the driver).
-    """
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = embeddings.select(
-        F.col(id_col),
-        cosine_col(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
-    )
-    if exclude_id is not None:
-        scored = scored.filter(F.col(id_col) != exclude_id)
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random unit hyperplanes (LCG; no numpy needed
-    at plan-build time, reproducible across sessions)."""
-    state = seed
-    planes: list[list[float]] = []
-    for _ in range(n_planes):
-        v = []
-        for _ in range(dim):
-            state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-            # map to (-1, 1)
-            v.append((state >> 11) / float(1 << 53) * 2.0 - 1.0)
-        n = math.sqrt(sum(x * x for x in v)) or 1.0
-        planes.append([x / n for x in v])
-    return planes
-
-
-def lsh_bucket_col(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: sign bits packed into a long."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        pc = F.array(*[F.lit(x) for x in p])
-        bit = F.when(dot_col(vec, pc) >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseOR(bit)
-    return bucket
-
-
-def lsh_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    *,
-    k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: score only vectors in the query's LSH bucket.
-
-    With the bucket column precomputed and the table partitioned by it,
-    partition pruning reduces the scan to ~1/2^n_planes of the data. Recall
-    is tunable via n_planes (fewer planes -> bigger buckets -> higher
-    recall, more compute); multi-probe variants add neighbor buckets.
-    """
-    planes = _hyperplanes(len(query_vec), n_planes, seed)
-    qvec = F.array(*[F.lit(float(x)) for x in query_vec])
-    bucketed = embeddings.withColumn(
-        "_bucket", lsh_bucket_col(F.col(vec_col).cast("array<double>"), planes)
-    )
-    qbucket = (
-        bucketed.sparkSession.range(1)
-        .select(lsh_bucket_col(qvec, planes).alias("b"))
-        .collect()[0]["b"]
-    )
-    return (
-        bucketed.filter(F.col("_bucket") == qbucket)
-        .select(
-            F.col(id_col),
-            cosine_col(F.col(vec_col).cast("array<double>"), qvec).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def ivf_index(
-    embeddings: DataFrame,
-    *,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> tuple[DataFrame, list[list[float]]]:
-    """IVF coarse quantizer: k-means centroids + per-vector centroid
-    assignment (the ``_centroid`` column).
-
-    Training runs on MLlib KMeans (distributed Lloyd iterations); assignment
-    is a native argmin expression over the centroid literals, so the indexed
-    table needs no model object at query time. Partitioning/sorting the
-    stored table by ``_centroid`` turns queries into partition-pruned scans
-    of ~1/n_centroids of the data.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = embeddings.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=n_centroids, seed=seed, maxIter=20).fit(train)
-    centroids = [[float(x) for x in c] for c in model.clusterCenters()]
-    assigned = embeddings.withColumn(
-        "_centroid", nearest_centroid_col(F.col(vec_col), centroids)
-    )
-    return assigned, centroids
-
-
 def nearest_centroid_col(vec: Column, centroids: list[list[float]]) -> Column:
     """Argmin-by-L2 centroid id as a pure expression (no model, no UDF);
     exact ties break to the lowest id.
@@ -193,37 +72,6 @@ def nearest_centroid_col(vec: Column, centroids: list[list[float]]) -> Column:
     )["cluster"]
 
 
-def ivf_topk(
-    indexed: DataFrame,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    *,
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF query: score only vectors in the ``n_probe`` centroids nearest
-    the query. Recall/latency tradeoff via n_probe; with the table
-    partitioned by ``_centroid`` the filter is partition pruning."""
-    import math as _math
-
-    def dist(c: list[float]) -> float:
-        return _math.sqrt(sum((a - b) ** 2 for a, b in zip(query_vec, c)))
-
-    probes = sorted(range(len(centroids)), key=lambda i: dist(centroids[i]))[:n_probe]
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        indexed.filter(F.col("_centroid").isin(probes))
-        .select(
-            F.col(id_col),
-            cosine_col(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def cosine_all_pairs(
     embeddings: DataFrame,
     *,
@@ -234,9 +82,8 @@ def cosine_all_pairs(
     near-dup baseline.
 
     Inherently O(n²): the plan is a nested-loop self-join, so this is for
-    key-sampled slices / per-bucket verification only. The scale path for a
-    full corpus is :func:`cosine_near_dup_pairs` (LSH candidates + exact
-    verify — same output columns, recall-tested against this).
+    key-sampled slices / per-bucket verification only; the registry's
+    ``ann_signlsh_recall`` carries the LSH-candidate scale path.
     """
     # norms are per-ROW, so compute them before the pair join — inside the
     # join each norm would be folded O(n) times per vector. The arithmetic
@@ -258,189 +105,6 @@ def cosine_all_pairs(
     )
 
 
-def cosine_near_dup_pairs(
-    embeddings: DataFrame,
-    *,
-    threshold: float = 0.8,
-    n_planes: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    multi_probe: bool = True,
-) -> DataFrame:
-    """Embedding-cosine near-dup at scale: LSH-bucket the corpus, meet only
-    within (multi-probed) buckets, then exact-cosine verify against
-    ``threshold``.
-
-    Candidate generation is an equi-join on bucket id — O(collisions), never
-    n². Random-hyperplane LSH is angular, so high-cosine pairs collide with
-    high probability; ``multi_probe`` ORs in every Hamming-1 bucket of side
-    A, recovering pairs split by a single plane. Output matches
-    :func:`cosine_all_pairs` (id_a < id_b, exact cosine) minus pairs whose
-    buckets never met; recall vs exact is pinned in
-    ``tests/test_similarity_recall.py``.
-    """
-    planes = _hyperplanes(
-        len(embeddings.select(vec_col).head()[0]), n_planes, seed
-    )
-    e = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        norm_col(F.col(vec_col).cast("array<double>")).alias("n"),
-        lsh_bucket_col(F.col(vec_col).cast("array<double>"), planes).alias("_b0"),
-    )
-    if multi_probe:
-        probes = F.array(
-            F.col("_b0"),
-            *[
-                F.col("_b0").bitwiseXOR(F.lit(1 << i).cast("long"))
-                for i in range(n_planes)
-            ],
-        )
-        a = e.select("id", "v", "n", F.explode(probes).alias("_bucket"))
-    else:
-        a = e.select("id", "v", "n", F.col("_b0").alias("_bucket"))
-    b = e.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("v_b"),
-        F.col("n").alias("n_b"),
-        F.col("_b0").alias("_bucket"),
-    )
-    denom = F.col("n") * F.col("n_b")
-    return (
-        a.join(b, "_bucket")
-        .filter(F.col("id") < F.col("id_b"))
-        .select(
-            F.col("id").alias("id_a"),
-            "id_b",
-            F.when(denom > 0, dot_col(F.col("v"), F.col("v_b")) / denom)
-            .otherwise(F.lit(0.0))
-            .alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-def pairwise_topk_join(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
-) -> DataFrame:
-    """Batch ANN: top-k corpus neighbors per query row via broadcast
-    cross-join + per-query ranking window. Queries side must be small
-    (broadcast); for query sets beyond broadcast size, pre-bucket both
-    sides with :func:`lsh_bucket_col` and join on bucket instead.
-    """
-    from pyspark.sql import Window
-
-    # per-row norms precomputed on each side: inside the cross join a
-    # corpus norm would otherwise be folded once per query (and vice versa)
-    corpus = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("_cv"),
-        norm_col(F.col(vec_col).cast("array<double>")).alias("_cn"),
-    )
-    qs = queries.select(
-        F.col(qid_col),
-        F.col(qvec_col).cast("array<double>").alias("_qv"),
-        norm_col(F.col(qvec_col).cast("array<double>")).alias("_qn"),
-    )
-    denom = F.col("_cn") * F.col("_qn")
-    scored = corpus.crossJoin(F.broadcast(qs)).select(
-        F.col(qid_col),
-        F.col(id_col),
-        F.when(denom > 0, dot_col(F.col("_cv"), F.col("_qv")) / denom)
-        .otherwise(F.lit(0.0))
-        .alias("cosine"),
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def bucketed_pairwise_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    n_planes: int = 6,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
-    multi_probe: bool = True,
-) -> DataFrame:
-    """Batch ANN for query sets too big to broadcast: LSH-bucket BOTH
-    sides and equi-join on the bucket id — a plain shuffle hash join, never
-    a crossJoin, so the candidate set is O(collisions) instead of
-    O(|corpus|·|queries|).
-
-    Approximate by construction: a corpus vector is a candidate only if it
-    lands in a probed bucket. ``multi_probe`` additionally probes every
-    bucket at Hamming distance 1 from the query's own bucket (``n_planes``
-    extra probes), which recovers near-boundary neighbors at
-    ``(n_planes+1)×`` query-side fan-out — the fan-out is on the smaller
-    side and each (query, corpus) pair still matches at most once because
-    the probe ids are distinct. Recall is tuned with ``n_planes`` (fewer
-    planes → bigger buckets → higher recall) and ``multi_probe``;
-    ``tests/test_similarity_recall.py`` pins the floor vs brute force.
-    """
-    from pyspark.sql import Window
-
-    dim = len(queries.select(qvec_col).head()[0])
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    corpus = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("_cv"),
-        norm_col(F.col(vec_col).cast("array<double>")).alias("_cn"),
-        lsh_bucket_col(F.col(vec_col).cast("array<double>"), planes).alias("_bucket"),
-    )
-    probed = queries.select(
-        F.col(qid_col),
-        F.col(qvec_col).cast("array<double>").alias("_qv"),
-        norm_col(F.col(qvec_col).cast("array<double>")).alias("_qn"),
-        lsh_bucket_col(F.col(qvec_col).cast("array<double>"), planes).alias(
-            "_qbucket"
-        ),
-    )
-    if multi_probe:
-        flips = F.array(
-            F.col("_qbucket"),
-            *[
-                F.col("_qbucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                for i in range(n_planes)
-            ],
-        )
-        probed = probed.withColumn("_bucket", F.explode(flips))
-    else:
-        probed = probed.withColumn("_bucket", F.col("_qbucket"))
-
-    denom = F.col("_cn") * F.col("_qn")
-    scored = corpus.join(probed.drop("_qbucket"), "_bucket").select(
-        F.col(qid_col),
-        F.col(id_col),
-        F.when(denom > 0, dot_col(F.col("_cv"), F.col("_qv")) / denom)
-        .otherwise(F.lit(0.0))
-        .alias("cosine"),
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
 def kmeans_lloyd_iter(
     vectors: DataFrame,
     centroids: list[list[float]],
@@ -457,7 +121,7 @@ def kmeans_lloyd_iter(
     the iteration. Returns (assigned, new_centroid_dims) where
     ``new_centroid_dims`` is the (cluster, dim, m) mean table — callers
     iterating collect it as the next round's literal constants (k x dim
-    scalars, the same driver boundary as ``ivf_index``).
+    scalars, the same driver boundary as :class:`IvfPqIndex`).
     """
     assigned = vectors.withColumn(
         "_cluster", nearest_centroid_col(F.col(vec_col), centroids)
@@ -467,40 +131,6 @@ def kmeans_lloyd_iter(
     ).toDF("_cluster", "dim", "v")
     means = dims.groupBy("_cluster", "dim").agg(F.avg("v").alias("m"))
     return assigned, means
-
-
-def kmeans_lloyd(
-    vectors: DataFrame,
-    *,
-    k: int = 4,
-    n_iter: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> tuple[DataFrame, list[list[float]]]:
-    """Deterministic Lloyd k-means: init = the vectors with the k lowest
-    ids (no RNG), then ``n_iter`` relational iterations. Per round only
-    the k x dim mean table crosses the driver boundary (constants for the
-    next assignment expression) — the same per-round-scalar discipline as
-    the connected-components loop."""
-    init_rows = (
-        vectors.orderBy(F.asc(id_col))
-        .limit(k)
-        .select(F.col(vec_col).cast("array<double>").alias("c"))
-        .collect()
-    )
-    cents = [list(r["c"]) for r in init_rows]
-    assigned = None
-    for _ in range(n_iter):
-        assigned, means = kmeans_lloyd_iter(vectors, cents, vec_col=vec_col)
-        rows = means.collect()
-        by_c: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_c.setdefault(r["_cluster"], {})[r["dim"]] = r["m"]
-        cents = [
-            [by_c[ci][d] for d in sorted(by_c[ci])] if ci in by_c else cents[ci]
-            for ci in range(k)
-        ]
-    return assigned, cents
 
 
 def pq_assign(
@@ -517,7 +147,7 @@ def pq_assign(
 
     ``codebooks[g][c]`` is codeword ``c`` of subspace ``g``. The
     codebooks enter the plan as LITERALS (k*dim scalars — the same
-    driver boundary as ``kmeans_lloyd``/``ivf_index``), so assignment is
+    driver boundary as :func:`kmeans_lloyd_iter`), so assignment is
     a pure map-side argmin expression: per row, one array-of-structs
     ``(d2, code)`` per subspace, ``array_min`` for the lexicographic
     argmin (exact ties break to the lowest code), then one ``posexplode``
@@ -1227,8 +857,6 @@ class IvfPqIndex:
         # unless deleted here (on Delta/Iceberg this is the REPLACE WHERE
         # / overwriteByFilter leg of the same commit)
         for c in empty_cells or []:
-            import shutil
-
             shutil.rmtree(f"{self.root}/rows/cell={c}", ignore_errors=True)
         # refresh per-cell stats for touched cells only; a touched cell
         # with no remaining rows has NO stats row and must record n=0 —
@@ -1310,9 +938,7 @@ class IvfPqIndex:
         bin-packing job of any partitioned table (OPTIMIZE on Delta,
         rewrite_data_files on Iceberg); stats/centroids don't change,
         so only the rows manifest is touched."""
-        import glob as _glob
-        import json as _json
-        import uuid as _uuid
+        import uuid
 
         from clashroyale_datapipeline_agent_spark.operators import (
             store_maint as sm,
@@ -1321,74 +947,44 @@ class IvfPqIndex:
         base = os.path.join(self.root, "rows")
         with self._lock():
             sm.recover(base)
-            os.makedirs(sm._tmp_dir(base), exist_ok=True)
             stats = {
                 r["cell"]: r["n_files"] for r in self.file_stats().collect()
             }
             todo = sorted(c for c, nf in stats.items() if nf > max_files)
             skipped = sorted(c for c in stats if c not in todo)
 
-            # two-phase (round-13, guide §2.6): stage every cell's
-            # replacement file CONCURRENTLY — each staging is one tiny
-            # independent Spark job with no durable effect, and the old
-            # serial loop paid full job latency per cell — then commit
-            # serially under the one-journal crash protocol. Any staging
-            # failure raises before the first commit.
-            def stage(c: int) -> tuple[int, list[str], str]:
+            def old_files(c: int) -> list[str]:
                 part = os.path.join(base, f"cell={c}")
-                old = sorted(
+                return sorted(
                     os.path.join(part, f)
                     for f in os.listdir(part)
                     if f.endswith(".parquet")
                 )
-                expected = sum(sm._footer_rows(f) for f in old)
-                staging = os.path.join(sm._tmp_dir(base), f"c{c}")
-                shutil.rmtree(staging, ignore_errors=True)
-                self.spark.read.parquet(*old).coalesce(1).write.parquet(
-                    staging
-                )
-                parts = _glob.glob(os.path.join(staging, "part-*.parquet"))
-                if len(parts) != 1:
-                    raise RuntimeError(
-                        f"cell {c} staging produced {len(parts)} files, "
-                        "expected 1"
-                    )
-                got = sm._footer_rows(parts[0])
-                if got != expected:
-                    raise RuntimeError(
-                        f"cell {c} compaction row mismatch: staged {got} "
-                        f"vs expected {expected} — partition untouched, "
-                        f"staging kept at {staging}"
-                    )
-                return c, old, parts[0]
 
+            # two-phase, as in store_maint.store_compact: stage every
+            # cell's replacement concurrently, then commit serially under
+            # the one-journal crash protocol. Any staging failure raises
+            # before the first commit.
+            old = {c: old_files(c) for c in todo}
             staged = run_legs(
                 self.spark,
                 {
                     f"IvfPqIndex.compact: stage cell {c}": (
-                        lambda c=c: stage(c)
+                        lambda c=c: sm._stage_bucket(
+                            self.spark,
+                            base,
+                            c,
+                            self.spark.read.parquet(*old[c]),
+                            sum(sm._footer_rows(f) for f in old[c]),
+                            [],
+                        )
                     )
                     for c in todo
                 },
             )
-            for c, old, staged_part in staged:
-                new_rel = (
-                    f"cell={c}/part-00000-{_uuid.uuid4()}.c000.snappy.parquet"
-                )
-                with open(sm._journal_path(base), "w") as fh:
-                    _json.dump(
-                        {
-                            "bucket": c,
-                            "old_files": old,
-                            "new_file": new_rel,
-                        },
-                        fh,
-                    )
-                os.rename(staged_part, os.path.join(base, new_rel))
-                for f in old:
-                    sm._rm_with_crc(f)
-                os.remove(sm._journal_path(base))
-                shutil.rmtree(os.path.dirname(staged_part), ignore_errors=True)
+            for c, staged_part in zip(todo, staged):
+                new_name = f"cell={c}/part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+                sm._commit_bucket(base, c, old[c], staged_part, new_name)
             return {"compacted": todo, "skipped": skipped}
 
 

@@ -135,17 +135,25 @@ CMS_DEPTH = 4
 CMS_WIDTH = 4096
 
 
-def cms_bucket(value: Column, salt: int) -> Column:
-    """Bucket in [0, 4096) from the first 3 hex digits of the salted md5.
+def md5_position(value: Column, salt: int, size: int = CMS_WIDTH) -> Column:
+    """Position in [0, ``size``) for one salted hash of ``value`` — the
+    one hash primitive of the CMS rows and the Bloom filters.
 
-    ``md5('<salt>:' || value)`` gives CMS_DEPTH independent hash rows
-    from one primitive; pure string/integer expressions, replayable
-    verbatim in DuckDB (strpos/substr) — same discipline as
-    :func:`hll_register_cols`.
+    ``md5('<salt>:' || value)``'s leading hex digits (as many as
+    ``size`` needs: 3 for 4096, 4 for 16384) read as a base-16 integer,
+    modulo ``size`` unless ``size`` is a power of 16. Pure
+    string/integer expressions, replayable verbatim in DuckDB
+    (strpos/substr) — same discipline as :func:`hll_register_cols`.
     """
+    digits = 1
+    while 16**digits < size:
+        digits += 1
     h = F.md5(F.concat(F.lit(f"{salt}:"), value.cast("string")))
     d = lambda i: F.instr(F.lit(HEX), F.substring(h, i, 1)) - 1  # noqa: E731
-    return d(1) * 256 + d(2) * 16 + d(3)
+    pos = d(1)
+    for i in range(2, digits + 1):
+        pos = pos * 16 + d(i)
+    return pos if 16**digits == size else pos % size
 
 
 def cms_counters(df: DataFrame, value_col: str, depth: int = CMS_DEPTH) -> DataFrame:
@@ -161,7 +169,7 @@ def cms_counters(df: DataFrame, value_col: str, depth: int = CMS_DEPTH) -> DataF
             *[
                 F.struct(
                     F.lit(j).alias("row_id"),
-                    cms_bucket(F.col(value_col), j).alias("bucket"),
+                    md5_position(F.col(value_col), j).alias("bucket"),
                 )
                 for j in range(depth)
             ]
@@ -190,7 +198,7 @@ def cms_estimate(
                 *[
                     F.struct(
                         F.lit(j).alias("row_id"),
-                        cms_bucket(F.col(value_col), j).alias("bucket"),
+                        md5_position(F.col(value_col), j).alias("bucket"),
                     )
                     for j in range(depth)
                 ]
@@ -218,49 +226,41 @@ def cms_estimate(
 # Bloom filter (set membership)
 # ---------------------------------------------------------------------------
 
-#: Bloom geometry: BLOOM_HASHES md5-salted positions into BLOOM_BITS
-#: bits. State is the DISTINCT set-bit table — at most BLOOM_BITS rows
-#: regardless of key volume, the same bounded-state discipline as the
-#: HLL register and CMS counter tables above.
+#: Default Bloom geometry: BLOOM_HASHES salted positions into BLOOM_BITS
+#: bits. State is the DISTINCT set-bit table — at most ``bits`` rows
+#: regardless of key volume, the same bounded-state discipline as the HLL
+#: register and CMS counter tables above.
 BLOOM_BITS = 4096
 BLOOM_HASHES = 4
 
 
-def bloom_bit(value: Column, salt: int) -> Column:
-    """Bit position in [0, BLOOM_BITS) — first 3 hex digits of the
-    salted md5, same cross-engine-replayable primitive as
-    :func:`cms_bucket` (DuckDB twin: strpos/substr arithmetic)."""
-    h = F.md5(F.concat(F.lit(f"{salt}:"), value.cast("string")))
-    d = lambda i: F.instr(F.lit(HEX), F.substring(h, i, 1)) - 1  # noqa: E731
-    return d(1) * 256 + d(2) * 16 + d(3)
+def bloom_bit_cols(
+    value: Column, *, hashes: int = BLOOM_HASHES, bits: int = BLOOM_BITS
+) -> list[Column]:
+    """The ``hashes`` bit positions of ``value`` (salts 0..hashes-1)."""
+    return [md5_position(value, j, bits) for j in range(hashes)]
 
 
 def bloom_bits(
-    df: DataFrame, value_col: str, *, hashes: int = BLOOM_HASHES
+    df: DataFrame, value_col: str, *, hashes: int = BLOOM_HASHES,
+    bits: int = BLOOM_BITS,
 ) -> DataFrame:
-    """Build the filter: one row per DISTINCT set bit.
+    """Build the filter: one row per DISTINCT set bit (column ``bit``).
 
     The explode is map-side (×hashes rows, no shuffle); the distinct's
-    partial aggregation collapses each partition to ≤ BLOOM_BITS rows
+    partial aggregation collapses each partition to ≤ ``bits`` rows
     before the exchange — the shuffle moves filter-sized state. The
     result broadcasts to any probe side, which is the operational point:
     membership pre-filtering a 100 TB scan against a key set built
     elsewhere costs one broadcast, no key-set shuffle.
     """
-    return (
-        df.select(
-            F.explode(
-                F.array(
-                    *[bloom_bit(F.col(value_col), j) for j in range(hashes)]
-                )
-            ).alias("bit")
-        )
-        .distinct()
-    )
+    cols = bloom_bit_cols(F.col(value_col), hashes=hashes, bits=bits)
+    return df.select(F.explode(F.array(*cols)).alias("bit")).distinct()
 
 
 def bloom_probe(
-    bloom: DataFrame, keys: DataFrame, value_col: str, *, hashes: int = BLOOM_HASHES
+    bloom: DataFrame, keys: DataFrame, value_col: str, *,
+    hashes: int = BLOOM_HASHES, bits: int = BLOOM_BITS,
 ) -> DataFrame:
     """Probe keys against the filter: ``maybe_present`` iff ALL
     ``hashes`` bit positions are set (the one-sided Bloom contract — no
@@ -276,12 +276,8 @@ def bloom_probe(
     collide on one bit position.
     """
     others = [c for c in keys.columns if c != value_col]
-    probes = keys.select(
-        "*",
-        F.explode(
-            F.array(*[bloom_bit(F.col(value_col), j) for j in range(hashes)])
-        ).alias("bit"),
-    )
+    cols = bloom_bit_cols(F.col(value_col), hashes=hashes, bits=bits)
+    probes = keys.select("*", F.explode(F.array(*cols)).alias("bit"))
     marked = bloom.select("bit", F.lit(1).alias("_hit"))
     return (
         probes.join(F.broadcast(marked), "bit", "left")

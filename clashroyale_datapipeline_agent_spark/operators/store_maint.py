@@ -4,7 +4,7 @@ compaction, and a retention sweep for superseded entries — the
 ``IvfPqIndex.file_stats``/``compact`` discipline
 (``operators/similarity.py``) applied to the bucketed band-key /
 fingerprint tables (``operators/dedup.py:write_lsh_band_store``,
-``write_fingerprint_store``, ``write_hamming_key_map_store``).
+``write_hamming_key_map_store``).
 
 Why this plane exists: the stores only ever GROW — every admitted batch
 appends band keys (the reference's Phase-0 accumulate loop,
@@ -325,12 +325,22 @@ def _stage_bucket(
 
 
 def _commit_bucket(
-    location: str, bucket: int, old_files: list[str], staged_part: str
+    location: str,
+    bucket: int,
+    old_files: list[str],
+    staged_part: str,
+    new_name: str | None = None,
 ) -> None:
     """Journal → rename in → delete old → clear journal, for one staged
-    bucket. STRICTLY SERIAL (one journal file per store is the crash-
-    safety protocol); a crash at any step is healed by :func:`recover`."""
-    new_name = f"part-00000-{uuid.uuid4()}_{bucket:05d}.c000.snappy.parquet"
+    bucket. ``new_name`` is the replacement file's path relative to
+    ``location`` (default: a part file carrying the bucket suffix, as
+    Spark's bucketed writer names them). STRICTLY SERIAL (one journal
+    file per store is the crash-safety protocol); a crash at any step is
+    healed by :func:`recover`. Shared by :func:`store_compact`,
+    :func:`store_retention_sweep` and ``IvfPqIndex.compact``."""
+    new_name = new_name or (
+        f"part-00000-{uuid.uuid4()}_{bucket:05d}.c000.snappy.parquet"
+    )
     with open(_journal_path(location), "w") as fh:
         json.dump(
             {"bucket": bucket, "old_files": old_files, "new_file": new_name},

@@ -2,8 +2,10 @@
 star; SURVEY.md §7.3 M7). All native column expressions — these run over the
 ``documents`` table at 100 TB, so nothing here leaves the JVM.
 
-Operators: tokenization + token stats, quality scoring, stopword-based
-language scoring, document fingerprinting (rolling/content hash).
+Operators: tokenization, TF-IDF / BM25 / n-gram statistics, unigram LM
+scoring, content fingerprinting (md5), chunking, PII scrubbing and the
+filter funnel. ``STOPWORDS`` feeds the registry's stopword language
+scorers (``plans/text_queries.py``).
 """
 
 from __future__ import annotations
@@ -29,77 +31,6 @@ def tokens_col(text: Column) -> Column:
     path vs any UDF tokenizer.
     """
     return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token estimate: count alternating letter/digit/punct
-    runs (a cheap BPE proxy: ~1 token per word piece + punctuation)."""
-    pieces = F.filter(
-        F.split(text, r"(?<=[a-zA-Z])(?=[^a-zA-Z\s])|(?<=[^a-zA-Z\s])(?=[a-zA-Z])|\s+"),
-        lambda t: t != "",
-    )
-    return F.size(pieces)
-
-
-def with_token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-doc token statistics (token counting operator)."""
-    toks = tokens_col(F.col(text_col))
-    return docs.withColumns(
-        {
-            "n_tokens": F.size(toks),
-            "n_unique_tokens": F.size(F.array_distinct(toks)),
-            "avg_token_len": F.when(
-                F.size(toks) > 0,
-                F.aggregate(
-                    toks, F.lit(0.0), lambda acc, t: acc + F.length(t)
-                )
-                / F.size(toks),
-            ).otherwise(F.lit(0.0)),
-        }
-    )
-
-
-def quality_score_cols(text: Column) -> dict[str, Column]:
-    """Heuristic quality signals: length, punctuation density, alpha ratio,
-    token-repetition ratio. Each is a pure expression; compose freely."""
-    toks = tokens_col(text)
-    n_chars = F.length(text)
-    n_punct = n_chars - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
-    n_alpha = F.length(F.regexp_replace(text, r"[^a-zA-Z]", ""))
-    n_tokens = F.size(toks)
-    uniq = F.size(F.array_distinct(toks))
-    return {
-        "n_chars": n_chars,
-        "punct_ratio": F.when(n_chars > 0, n_punct / n_chars).otherwise(0.0),
-        "alpha_ratio": F.when(n_chars > 0, n_alpha / n_chars).otherwise(0.0),
-        "repetition_ratio": F.when(
-            n_tokens > 0, 1.0 - uniq / n_tokens
-        ).otherwise(0.0),
-    }
-
-
-def stopword_hits(text: Column, lang: str) -> Column:
-    """Number of tokens that are stopwords of ``lang``."""
-    words = STOPWORDS[lang]
-    return F.size(F.filter(tokens_col(F.lower(text)), lambda t: t.isin(*words)))
-
-
-def with_language_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Language-ID heuristic: stopword-hit counts per candidate language +
-    argmax guess (``lang_guess``). Docs with no hits anywhere guess null."""
-    out = docs
-    hit_cols = []
-    for lang in STOPWORDS:
-        col = f"sw_{lang}"
-        out = out.withColumn(col, stopword_hits(F.col(text_col), lang))
-        hit_cols.append(col)
-    best = F.greatest(*[F.col(c) for c in hit_cols])
-    guess = F.when(best > 0, F.lit(None).cast("string"))
-    # build argmax cascade: first language reaching the max wins (stable)
-    expr = F.lit(None).cast("string")
-    for lang in reversed(list(STOPWORDS)):
-        expr = F.when(F.col(f"sw_{lang}") == best, F.lit(lang)).otherwise(expr)
-    return out.withColumn("lang_guess", F.when(best > 0, expr))
 
 
 def tf_idf(
@@ -177,14 +108,6 @@ def top_ngram_stats(
             "top_ngram_frac"
         ),
     )
-
-
-def fingerprint_col(text: Column, *, normalize: bool = True) -> Column:
-    """Deterministic 64-bit content fingerprint (xxhash64 of normalized
-    text). For cross-engine oracles use ``md5`` (hex string) instead —
-    xxhash64 seeds differ per engine."""
-    t = F.regexp_replace(F.lower(text), r"\s+", " ") if normalize else text
-    return F.xxhash64(t)
 
 
 def md5_fingerprint_col(text: Column, *, normalize: bool = True) -> Column:

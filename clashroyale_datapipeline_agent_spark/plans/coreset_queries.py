@@ -45,8 +45,8 @@ House determinism discipline (SCALE.md "Float-ROUND ledger"):
 - Adamic-Adar weights are 1e9-quantized inverse-log-degrees summed as
   BIGINT; top-k orders by (aa9 DESC, part_a, part_b).
 
-Scale shape: k-center is k bounded-literal scans (k×dim carrier, the
-``kmeans_lloyd`` convention); MMR touches only a top-20 pool after one
+Scale shape: k-center is k bounded-literal scans (k×dim carrier, as in
+``kmeans_lloyd_iter``); MMR touches only a top-20 pool after one
 TakeOrderedAndProject scan; Kneser-Ney scores the DISTINCT-bigram grain
 (multiplicity-weighted, corpus tokenized once — the
 ``docs_bigram_lm_surprisal_by_source`` shape); Adamic-Adar prunes to
@@ -185,8 +185,8 @@ def embeddings_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence a curator reads to choose k. All distances are exact BIGINT
     sums over 1e6-quantized components, so the greedy recursion is
     engine-free; ties break on vec_id. Scale: k−1 linear scans, each an
-    in-row ``least`` over ≤k literal vectors (k×dim bounded carrier, the
-    ``kmeans_lloyd`` convention) feeding one TakeOrderedAndProject — no
+    in-row ``least`` over ≤k literal vectors (k×dim bounded carrier, as in
+    ``kmeans_lloyd_iter``) feeding one TakeOrderedAndProject — no
     pair join, no quadratic term anywhere."""
     from clashroyale_datapipeline_agent_spark.sources.readers import (
         spread_if_narrow,

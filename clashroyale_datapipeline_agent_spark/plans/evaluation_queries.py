@@ -2136,7 +2136,7 @@ def ann_ivf_index_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag itself, not just the diagnostics, is hash-compared across
     engines. Scale: one assignment scan (map-side argmin over centroid
     literals) + one 8-row rollup; this is the preflight that schedules
-    ``kmeans_lloyd`` retraining, far cheaper than retraining on
+    Lloyd retraining, far cheaper than retraining on
     suspicion."""
     from clashroyale_datapipeline_agent_spark.plans.coreset_queries import (
         _vq_col,

@@ -559,6 +559,9 @@ def orders_merge_upsert_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bloom-filter semi-join pruning
 # ---------------------------------------------------------------------------
 
+#: Bloom geometry of ``bloom_filter_semi_join_stats``, pinned by its
+#: oracle SQL: 4 hex digits of each salted md5, modulo 16384.
+_SEMI_JOIN_BLOOM_M = 16384
 _BPOS = (
     f"((strpos({HEXP}, substr({{h}}, 1, 1)) - 1) * 4096"
     f" + (strpos({HEXP}, substr({{h}}, 2, 1)) - 1) * 256"
@@ -602,42 +605,41 @@ _BLOOM_SQL = f"""
 
 @register("bloom_filter_semi_join_stats", _BLOOM_SQL)
 def bloom_filter_semi_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runtime-filter pruning (`operators/bloom.py`): a deterministic
-    md5 Bloom filter (K=4, M=16384) built over the BUILDING-segment
-    customer keys, probed by orders as K chained broadcast semi-joins —
-    the fact table is filtered MAP-SIDE, no fact shuffle, which is the
+    """Runtime-filter pruning (`operators/sketches.py:bloom_bits`): a
+    deterministic md5 Bloom filter (K=4, M=16384) built over the
+    BUILDING-segment customer keys, probed by orders through K broadcast
+    joins — the fact table is filtered MAP-SIDE, no fact shuffle, which is the
     whole economics of runtime filters at 100 TB (kilobytes of bit
     positions replace a dimension broadcast or a key shuffle). Output
     pins the no-false-negative guarantee (bloom_pass ≥ exact_matches)
     and the measured false-positive rate; the oracle replays bit
     positions verbatim."""
-    from clashroyale_datapipeline_agent_spark.operators.bloom import (
-        BLOOM_K,
-        bloom_build,
-        bloom_position,
+    from clashroyale_datapipeline_agent_spark.operators.sketches import (
+        bloom_bit_cols,
+        bloom_bits,
     )
 
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     dim = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey").distinct()
-    bits = bloom_build(dim, "c_custkey")
+    bits = bloom_bits(dim, "c_custkey", bits=_SEMI_JOIN_BLOOM_M)
     # One pass over the fact side computes BOTH verdicts per row — the
     # K membership tests as broadcast left joins against hit markers and
     # the exact semi as a broadcast left join against the dim — then a
-    # single aggregate. (bloom_probe's chained-semi form is the
-    # production filter; here both paths must be measured side by side,
-    # and fusing them halves the probe work and collapses five
-    # aggregate jobs into three.)
+    # single aggregate: both paths are measured side by side, and fusing
+    # them halves the probe work and collapses five aggregate jobs into
+    # three.
     flagged = o
     hit_flags = []
     # the SAME marker DF for every j keeps the four broadcast subtrees
     # identical, so ReusedExchange materializes the bit set once
-    marker = bits.select("_pos", F.lit(True).alias("_hit"))
-    for j in range(BLOOM_K):
+    marker = bits.select("bit", F.lit(True).alias("_hit"))
+    positions = bloom_bit_cols(F.col("o_custkey"), bits=_SEMI_JOIN_BLOOM_M)
+    for j, pos in enumerate(positions):
         flagged = (
-            flagged.withColumn("_pos", bloom_position(F.col("o_custkey"), j))
-            .join(F.broadcast(marker), "_pos", "left")
-            .drop("_pos")
+            flagged.withColumn("bit", pos)
+            .join(F.broadcast(marker), "bit", "left")
+            .drop("bit")
             .withColumnRenamed("_hit", f"_hit{j}")
         )
         hit_flags.append(F.col(f"_hit{j}").isNotNull())
@@ -3010,6 +3012,11 @@ def events_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bloom-filter membership audit
 # ---------------------------------------------------------------------------
 
+#: Bloom geometry of ``orders_bloom_membership_audit``, pinned by its
+#: oracle SQL: 3 hex digits of each salted md5, i.e. 4096 bits.
+_AUDIT_BLOOM_M = 4096
+
+
 def _bloom_bit_sql(j: int, col: str) -> str:
     h = f"md5('{j}:' || CAST({col} AS VARCHAR))"
     return (
@@ -3077,9 +3084,10 @@ def orders_bloom_membership_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         .select(F.col("o_custkey").alias("k"))
         .distinct()
     )
-    bloom = bloom_bits(member, "k")
+    bloom = bloom_bits(member, "k", bits=_AUDIT_BLOOM_M)
     probed = bloom_probe(
-        bloom, cust.select(F.col("c_custkey").alias("k"), "c_mktsegment"), "k"
+        bloom, cust.select(F.col("c_custkey").alias("k"), "c_mktsegment"), "k",
+        bits=_AUDIT_BLOOM_M,
     )
     truth = member.select("k", F.lit(True).alias("is_member"))
     bits_set = F.broadcast(bloom.agg(F.count(F.lit(1)).cast("bigint").alias("bits_set")))

@@ -386,7 +386,7 @@ def docs_span_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     text past the row (only 32-char fingerprints are exploded), the
     census groupBy and the join back both key on the fingerprint — at
     100 TB both land on the same hash partitioning, and writing the
-    fingerprint store bucketed (operators/dedup.write_fingerprint_store
+    fingerprint store bucketed (sources/sinks.write_bucketed_table
     pattern) makes the second an exchange-free bucket join. Counts are
     exact ints; the one division per source is on exact sums."""
     d = _t(spark, sf_dir, "documents")

@@ -293,8 +293,9 @@ def embeddings_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 to the vec_id=0 query vector: one scan,
-    codegen'd dot product, TakeOrderedAndProject top-k. The LSH-bucketed
-    scale path is pytest-covered (bucket membership is engine-determined)."""
+    codegen'd dot product, TakeOrderedAndProject top-k. The scale paths
+    are ``ann_signlsh_recall`` (LSH buckets) and ``ann_ivfadc_topk``
+    (IVF+PQ)."""
     e = _t(spark, sf_dir, "embeddings")
     qvec = [
         float(x)
@@ -429,9 +430,8 @@ def dedup_embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤512 vectors, ≤131k pairs regardless of corpus size), so the
     nested-loop pair join cannot grow with the data — a proportional slice
     would make the pair count grow quadratically with scale. The
-    full-corpus scale path is ``similarity.cosine_near_dup_pairs``
-    (LSH-bucketed candidates + exact verify), recall-pinned against this
-    exact operator in ``tests/test_similarity_recall.py``."""
+    full-corpus scale path buckets candidates first (the LSH recall
+    trade-off is ``ann_signlsh_recall``) and verifies them exactly."""
     from clashroyale_datapipeline_agent_spark.operators.similarity import (
         cosine_all_pairs,
     )
@@ -967,8 +967,7 @@ def multimodal_y4m_frame_sample_stats(
     ``mapInPandas`` stage (``synthesize_y4m_assets`` — per-frame row
     gradients so sampling is observable) and blind-decoded in the next
     (``y4m_features``: header token parse, C420 plane walk with exact
-    length validation, every-2nd-frame sampling — the executable form
-    of ``frame_sample_plan``). The oracle recomputes sampled-luma sums,
+    length validation, every-2nd-frame sampling). The oracle recomputes sampled-luma sums,
     first-frame luma, and the EXACT container byte length (header
     string + per-frame 6 + wh + 2·(w/2)(h/2)) in closed form — a
     mis-parsed header, off-by-one frame walk, or wrong sampling phase
@@ -3055,8 +3054,7 @@ def embeddings_minibatch_kmeans_readout(
 ) -> DataFrame:
     """The batch anchor of the streaming mini-batch k-means store
     (``streaming/embed_stream.py``): assignment to the deterministic
-    init centroids (the 8 lowest vec_ids — the ``kmeans_lloyd`` no-RNG
-    convention), then the store's EXACT sufficient statistics — counts
+    init centroids (the 8 lowest vec_ids, no RNG), then the store's EXACT sufficient statistics — counts
     and 1e6-quantized per-dimension integer sums — read out through the
     same ``centroid_readout`` epilogue the streamed store uses. Because
     the statistics are int64 sums, the streamed fold over any

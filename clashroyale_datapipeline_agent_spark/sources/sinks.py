@@ -10,26 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_json(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
-    """S4 — JSON lines sink (dimension-maintenance jobs)."""
-    df.write.mode(mode).json(path)
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    *,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Partitioned parquet sink. Partition columns should be low-cardinality
-    scan predicates (e.g. date, lang) so partition pruning applies."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def write_bucketed_table(
     df: DataFrame,
     table: str,

@@ -15,7 +15,7 @@ exist here. The readout (``centroid_readout``) is shared verbatim by
 the batch twin (``minibatch_kmeans_readout``), so stream ≡ batch by
 shared code AND exact arithmetic.
 
-This is the streaming half of the IVF story (`similarity.ivf_index`):
+This is the streaming half of the IVF story (`similarity.IvfPqIndex`):
 at 100 TB the reference centroids come from a bounded training slice,
 new embeddings stream in, and this store maintains live cluster
 populations and updated means (a mini-batch Lloyd update per trigger)

@@ -205,12 +205,6 @@ class _BatchLogStore:
     def _pq_files(path: Path) -> list[Path]:
         return sorted(path.rglob("*.parquet"))
 
-    @staticmethod
-    def _footer_rows(paths: list[Path]) -> int:
-        import pyarrow.parquet as pq
-
-        return sum(pq.ParquetFile(str(p)).metadata.num_rows for p in paths)
-
     def _recover_segments(self) -> None:
         """Heal a crashed :meth:`compact`: finish the rename/delete legs
         of a committed fold, roll back an uncommitted one. Idempotent;
@@ -257,8 +251,12 @@ class _BatchLogStore:
         import shutil
 
         from clashroyale_datapipeline_agent_spark.operators.store_maint import (
+            _footer_rows,
             maintenance_lock,
         )
+
+        def footer_rows(paths: list[Path]) -> int:
+            return sum(_footer_rows(str(p)) for p in paths)
 
         with maintenance_lock(str(self.root), what=f"compaction of {self.root}"):
             self._recover_segments()
@@ -290,11 +288,11 @@ class _BatchLogStore:
                 if not files:
                     # zero rows: a segment with no files IS the fold
                     return None
-                before = self._footer_rows(files)
+                before = footer_rows(files)
                 self.spark.read.parquet(
                     *[str(f) for f in files]
                 ).write.parquet(str(tmp))
-                after = self._footer_rows(self._pq_files(tmp))
+                after = footer_rows(self._pq_files(tmp))
                 if after != before:
                     shutil.rmtree(tmp, ignore_errors=True)
                     raise RuntimeError(

@@ -12,15 +12,14 @@ from __future__ import annotations
 import json
 import sys
 import tempfile
-import zlib
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from clashroyale_datapipeline_agent_spark.fixtures import (
     generate_leaderboard,
-    generate_raw_battles,
     raw_battles_df,
+    stub_battlelog,
 )
 from clashroyale_datapipeline_agent_spark.plans import qna_router as qr
 from clashroyale_datapipeline_agent_spark.plans.pipeline import (
@@ -41,16 +40,9 @@ def main() -> None:
     # ---- Phase 0: meta dataset (iterative sampling loop) -----------------
     print("Phase 0: building the meta dataset …")
 
-    def fetch_battlelog(tag: str) -> list[dict]:
-        # stands in for GET /players/{tag}/battlelog; crc32, unlike the
-        # per-process salted hash(), seeds the same battles in every run
-        return generate_raw_battles(
-            n_players=1, battles_per_player=25, seed=zlib.crc32(tag.encode())
-        )
-
     builder = MetaDatasetBuilder(
         spark,
-        fetch_battlelog,
+        stub_battlelog,
         staging_dir=tempfile.mkdtemp(prefix="meta_staging_"),
         min_total_battles=300,
         min_games_per_type=20,

@@ -74,7 +74,9 @@ def test_deck_performance(battles, norm_rows):
     want = oracle.counter_table(
         [(tuple(sorted(r["my_cards"])), r["result"]) for r in norm_rows], min_games=3
     )
-    got = ba.compute_deck_performance(battles, "my_cards").collect()
+    got = battles.sparkSession.sql(
+        ba.deck_performance_sql("{b}", "my_cards", False, 3), b=battles
+    ).collect()
     got = [{**r.asDict(), "deck": tuple(r["deck"])} for r in got]
     _check(want, got, ["deck"])
 
@@ -95,8 +97,9 @@ def test_deck_type_summary_both_sides(spark, battles, norm_rows):
             if len(r["opp_cards"]) == 8
         ]
     )
-    _check(my_want, ba.compute_deck_type_summary(typed, "my").collect(), ["type"])
-    _check(opp_want, ba.compute_deck_type_summary(typed, "opp").collect(), ["type"])
+    for side, want in (("my", my_want), ("opp", opp_want)):
+        got = spark.sql(ba.deck_type_summary_sql("{t}", side), t=typed).collect()
+        _check(want, got, ["type"])
 
 
 def test_deck_type_matchups(battles, norm_rows):

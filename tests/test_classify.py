@@ -93,21 +93,3 @@ def test_every_card_in_the_dimension(spark):
     }
     for i, deck in enumerate(decks):
         assert got[i] == classify_deck_oracle(deck), f"deck {i}: {deck}"
-
-
-def test_join_classifier_matches_expression(spark, classified):
-    """The broadcast-join classifier (big-dimension path) agrees with the
-    literal-expression classifier on every deck."""
-    from clashroyale_datapipeline_agent_spark.operators.classify_join import (
-        classify_with_dimension_join,
-    )
-    from clashroyale_datapipeline_agent_spark.sources.readers import load_card_metadata
-
-    decks, got = classified
-    df = spark.createDataFrame(
-        [(i, d) for i, d in enumerate(decks)], "idx int, cards array<string>"
-    )
-    dim = load_card_metadata(spark)
-    out = classify_with_dimension_join(df, dim, cards_col="cards", out_col="a")
-    join_got = {r["idx"]: r["a"] for r in out.collect()}
-    assert join_got == got

@@ -193,20 +193,6 @@ def test_hamming_pairs_star_divert(spark):
     assert full == 28 + 1
 
 
-def test_simhash_delegation_unchanged(spark):
-    """simhash_candidate_pairs now delegates to the generic banding —
-    same results as the historical inline form on a known corpus."""
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox"), (2, "the quick brown fox"), (3, "xyzzy plugh")],
-        "doc_id long, text string",
-    )
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in D.simhash_candidate_pairs(docs, max_hamming=3).collect()
-    }
-    assert got == {(1, 2): 0}
-
-
 def test_wav_delta_hash_closed_form_and_stereo_mix():
     """Audio delta hash equals the independent closed-form recompute,
     and the mono mix is interleave-aware (a channel-unaware hash would

@@ -152,15 +152,3 @@ def test_most_recent_per_player(battles):
     # the newest battle of every player must be in the top-5
     newest_kept = joined.filter(F.col("battle_ts") == F.col("mx")).select("player_tag").distinct().count()
     assert newest_kept == battles.select("player_tag").distinct().count()
-
-
-def test_anti_join_fetched(spark, battles):
-    fetched = spark.createDataFrame(
-        [("#PLAYER000",), ("#PLAYER001",)], "player_tag string"
-    )
-    remaining = M.anti_join_fetched(
-        battles.select("player_tag").distinct(), fetched, "player_tag"
-    )
-    tags = {r["player_tag"] for r in remaining.collect()}
-    assert "#PLAYER000" not in tags and "#PLAYER001" not in tags
-    assert len(tags) == battles.select("player_tag").distinct().count() - 2

@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 import json
-import zlib
 
 import pytest
 
@@ -12,6 +11,7 @@ from clashroyale_datapipeline_agent_spark.fixtures import (
     generate_leaderboard,
     generate_raw_battles,
     raw_battles_df,
+    stub_battlelog,
 )
 from clashroyale_datapipeline_agent_spark.plans import qna_router as qr
 from clashroyale_datapipeline_agent_spark.plans.pipeline import (
@@ -58,21 +58,35 @@ def test_summary_melt_is_stringly(catalog):
 # Phase-0 loop
 # ---------------------------------------------------------------------------
 
-def _mk_fetcher(n_per_player: int = 25):
-    """Scripted battlelog source keyed by tag (deterministic: crc32 is not
-    salted per process the way hash() is)."""
-    def fetch(tag: str) -> list[dict]:
-        idx = zlib.crc32(tag.encode()) % 1000
-        return generate_raw_battles(
-            n_players=1, battles_per_player=n_per_player, seed=idx
-        )
-    return fetch
+def test_meta_keeps_battles_of_every_fetched_player(spark, tmp_path):
+    """One Phase 0 pass over k players keeps each player's own most
+    recent battles: k distinct ``player_tag``s, at most ``per_player``
+    battles each."""
+    b = MetaDatasetBuilder(
+        spark,
+        stub_battlelog,
+        str(tmp_path / "staging"),
+        min_total_battles=10_000_000,
+        min_games_per_type=0,
+        initial_sample=8,
+        max_loops=0,
+        seed=3,
+        bucket_table=None,
+    )
+    b.run(generate_leaderboard(40))
+    per_tag = {
+        r["player_tag"]: r["count"]
+        for r in b.staged_battles().groupBy("player_tag").count().collect()
+    }
+    assert len(b.fetched_tags) == 8
+    assert set(per_tag) == set(b.fetched_tags)
+    assert all(0 < n <= b.per_player for n in per_tag.values())
 
 
 def test_meta_loop_stops_enough(spark, tmp_path):
     b = MetaDatasetBuilder(
         spark,
-        _mk_fetcher(),
+        stub_battlelog,
         str(tmp_path / "staging"),
         min_total_battles=50,
         min_games_per_type=0,
@@ -90,7 +104,7 @@ def test_meta_loop_stops_enough(spark, tmp_path):
 def test_meta_loop_stops_by_exhaustion(spark, tmp_path):
     b = MetaDatasetBuilder(
         spark,
-        _mk_fetcher(),
+        stub_battlelog,
         str(tmp_path / "staging2"),
         min_total_battles=10_000_000,  # unreachable
         min_games_per_type=0,
@@ -109,7 +123,7 @@ def test_meta_loop_stops_by_exhaustion(spark, tmp_path):
 def test_meta_loop_stops_by_max_loops(spark, tmp_path):
     b = MetaDatasetBuilder(
         spark,
-        _mk_fetcher(),
+        stub_battlelog,
         str(tmp_path / "staging3"),
         min_total_battles=10_000_000,
         initial_sample=2,
@@ -313,7 +327,7 @@ def meta_catalog(spark, tmp_path_factory):
     """One-pass Phase 0 over a plain parquet staging dir."""
     return MetaDatasetBuilder(
         spark,
-        _mk_fetcher(),
+        stub_battlelog,
         str(tmp_path_factory.mktemp("meta") / "staging"),
         min_total_battles=10_000_000,
         min_games_per_type=0,
@@ -614,7 +628,7 @@ def test_meta_loop_bucketed_store_no_exchange(spark, tmp_path):
 
     b = MetaDatasetBuilder(
         spark,
-        _mk_fetcher(),
+        stub_battlelog,
         str(tmp_path / "staging-unused"),
         min_total_battles=50,
         min_games_per_type=0,

@@ -14,7 +14,6 @@ Regenerate (through ``answer_question``) with:
 from __future__ import annotations
 
 import json
-import zlib
 from pathlib import Path
 
 import pytest
@@ -49,30 +48,18 @@ def classify(question: str) -> str:
     return json.dumps({"category": category, "data_needs": needs})
 
 
-def _fetch(tag: str) -> list[dict]:
-    """Stub battlelog seeded by a stable hash of the tag and re-tagged to
-    the requested player, so every player's battles are distinct."""
-    from clashroyale_datapipeline_agent_spark.fixtures import generate_raw_battles
-
-    battles = generate_raw_battles(
-        n_players=1, battles_per_player=25, seed=zlib.crc32(tag.encode())
-    )
-    for b in battles:
-        b["player_tag"] = tag
-        for member in b["team"]:
-            member["tag"] = tag
-    return battles
-
-
 def meta_tables(spark, staging: Path) -> dict:
     """The two shipped meta tables of a one-pass Phase 0 over a plain
     parquet staging dir."""
-    from clashroyale_datapipeline_agent_spark.fixtures import generate_leaderboard
+    from clashroyale_datapipeline_agent_spark.fixtures import (
+        generate_leaderboard,
+        stub_battlelog,
+    )
     from clashroyale_datapipeline_agent_spark.plans.pipeline import MetaDatasetBuilder
 
     catalog = MetaDatasetBuilder(
         spark,
-        _fetch,
+        stub_battlelog,
         str(staging),
         min_total_battles=10_000_000,
         min_games_per_type=0,

@@ -158,27 +158,6 @@ def test_cms_estimate_unseen_key_is_zero(spark):
     assert rows[0].cms_estimate == 0
 
 
-def test_bloom_no_false_negatives(spark):
-    from clashroyale_datapipeline_agent_spark.operators.bloom import (
-        BLOOM_M,
-        bloom_build,
-        bloom_probe,
-    )
-
-    c = load_star_table(spark, SF_DIR, "customer")
-    dim = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey").distinct()
-    bits = bloom_build(dim, "c_custkey")
-    assert bits.count() <= BLOOM_M
-    o = load_star_table(spark, SF_DIR, "orders").select("o_orderkey", "o_custkey")
-    passed = bloom_probe(o, bits, "o_custkey")
-    exact = o.join(dim, F.col("o_custkey") == F.col("c_custkey"), "left_semi")
-    # every true match must pass the filter
-    assert exact.join(passed, "o_orderkey", "left_anti").count() == 0
-    # and the probe side never shuffles: no Exchange above the scans
-    plan = passed._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
 def test_zvalue_locality(spark):
     from clashroyale_datapipeline_agent_spark.operators.layout import z_value
 

@@ -1,38 +1,13 @@
-"""S4/S6 sinks, batched LLM classify, and IVF similarity tests."""
+"""S6 plot sinks and batched LLM classify tests."""
 
 from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
 from clashroyale_datapipeline_agent_spark.operators import plots as P
 from clashroyale_datapipeline_agent_spark.operators.llm_batch import classify_questions
-from clashroyale_datapipeline_agent_spark.operators.similarity import (
-    brute_force_topk,
-    ivf_index,
-    ivf_topk,
-)
-from clashroyale_datapipeline_agent_spark.sources import sinks
-from clashroyale_datapipeline_agent_spark.sources.readers import load_star_table
-
-
-def test_write_json_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    sinks.write_json(df, str(tmp_path / "j"))
-    back = spark.read.schema("id long, v string").json(str(tmp_path / "j"))
-    assert {(r["id"], r["v"]) for r in back.collect()} == {(1, "a"), (2, "b")}
-
-
-def test_write_parquet_partitioned(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, "en"), (2, "de"), (3, "en")], "id long, lang string"
-    )
-    sinks.write_parquet(df, str(tmp_path / "p"), partition_by=["lang"])
-    assert (tmp_path / "p" / "lang=en").exists()
-    back = spark.read.parquet(str(tmp_path / "p"))
-    assert back.filter(F.col("lang") == "en").count() == 2
 
 
 def test_plot_sinks_degrade_without_matplotlib(spark, tmp_path):
@@ -131,96 +106,3 @@ def test_classify_questions_flaky_client_per_row_fallback(spark):
         ).collect()
     }
     assert out0[3]["category"] == "other" and "429" in out0[3]["llm_error"]
-
-
-def test_ivf_topk_matches_bruteforce_for_probed_ids(spark, sf_dir):
-    emb = load_star_table(spark, sf_dir, "embeddings").cache()
-    indexed, centroids = ivf_index(emb, n_centroids=8)
-    qvec = [float(x) for x in emb.filter("vec_id = 3").collect()[0]["embedding"]]
-    approx = ivf_topk(indexed, centroids, qvec, k=5, n_probe=8)  # all probes = exact
-    exact = brute_force_topk(emb, qvec, k=5)
-    assert [r["vec_id"] for r in approx.collect()] == [
-        r["vec_id"] for r in exact.collect()
-    ]
-    # fewer probes returns a subset scored identically
-    small = ivf_topk(indexed, centroids, qvec, k=5, n_probe=2).collect()
-    exact_scores = {r["vec_id"]: r["cosine"] for r in brute_force_topk(emb, qvec, k=10**6).collect()}
-    for r in small:
-        assert r["cosine"] == pytest.approx(exact_scores[r["vec_id"]])
-    # self vector must be found (its own centroid is always probed first)
-    assert small[0]["vec_id"] == 3
-
-
-def test_generate_synthetic_validates_and_enriches(spark):
-    from clashroyale_datapipeline_agent_spark.operators.llm_batch import (
-        generate_synthetic,
-    )
-
-    seeds = spark.createDataFrame(
-        [
-            (1, "rewrite: alpha beta"),
-            (2, "rewrite: FAIL now"),
-            (3, "rewrite: too short"),
-        ],
-        "seed_id long, prompt string",
-    ).coalesce(1)
-
-    def make_client():
-        def client(prompt: str) -> str:
-            if "FAIL" in prompt:
-                raise RuntimeError("LLM API error 500")
-            # deterministic fake generator: echo payload twice
-            payload = prompt.split("rewrite: ", 1)[1]
-            return f"{payload} {payload}" if "short" not in payload else "x"
-
-        return client
-
-    def validate(out: str) -> str | None:
-        return "too_few_tokens" if len(out.split()) < 2 else None
-
-    rows = {
-        r["seed_id"]: r
-        for r in generate_synthetic(
-            seeds, make_client, validate=validate
-        ).collect()
-    }
-    ok = rows[1]
-    assert ok["parsed_ok"] and ok["reject_reason"] is None
-    assert ok["output"] == "alpha beta alpha beta"
-    assert ok["n_tokens"] == 4
-    assert ok["content_hash"] is not None and len(ok["content_hash"]) == 32
-    # llm failure: per-row reject, batch survives
-    assert not rows[2]["parsed_ok"]
-    assert rows[2]["reject_reason"].startswith("llm_error:RuntimeError")
-    assert rows[2]["output"] is None and rows[2]["n_tokens"] == 0
-    # validator rejection is distinct from llm error
-    assert rows[3]["reject_reason"] == "too_few_tokens"
-
-
-def test_generate_synthetic_composes_with_exact_dedup(spark):
-    """A repetitive generator's output flows straight into the exact-dedup
-    keep-first policy on content_hash — the generate -> dedup -> train
-    curation chain."""
-    from clashroyale_datapipeline_agent_spark.operators.llm_batch import (
-        generate_synthetic,
-    )
-
-    seeds = spark.createDataFrame(
-        [(i, f"say: {'same' if i % 2 else 'uniq' + str(i)}") for i in range(6)],
-        "seed_id long, prompt string",
-    )
-
-    def make_client():
-        return lambda p: p.split("say: ", 1)[1]
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    gen = generate_synthetic(seeds, make_client).filter("parsed_ok")
-    w = Window.partitionBy("content_hash").orderBy("seed_id")
-    kept = (
-        gen.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .count()
-    )
-    assert gen.count() == 6 and kept == 4  # 3x 'same' collapse to 1

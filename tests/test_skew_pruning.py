@@ -169,15 +169,15 @@ def test_incremental_dedup_bucketed_history_no_history_shuffle(spark):
     that partitioning, adding none)."""
     import re
 
-    from clashroyale_datapipeline_agent_spark.operators.dedup import (
-        dedup_incremental_bucketed,
-        write_fingerprint_store,
-    )
+    from clashroyale_datapipeline_agent_spark.operators.dedup import dedup_incremental
+    from clashroyale_datapipeline_agent_spark.sources.sinks import write_bucketed_table
 
     hist_docs = spark.range(500).select(
         F.md5(F.concat(F.lit("doc-"), F.col("id").cast("string"))).alias("fp")
     )
-    write_fingerprint_store(hist_docs, "t_fp_store", num_buckets=8)
+    write_bucketed_table(
+        hist_docs, "t_fp_store", bucket_by=["fp"], num_buckets=8, sort_by=["fp"]
+    )
     try:
         # store holds md5("doc-<k>") for k<500: batch texts "doc-<k>" are
         # history dups, "fresh-*" are new; the two clones of doc 1's text
@@ -187,7 +187,7 @@ def test_incremental_dedup_bucketed_history_no_history_shuffle(spark):
             + [(1000, "fresh-1"), (1001, "fresh-1")],
             "doc_id long, text string",
         )
-        out = dedup_incremental_bucketed(spark, batch, "t_fp_store")
+        out = dedup_incremental(batch, spark.table("t_fp_store").hint("merge"))
         plan = spark.sparkContext._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
             out._jdf.queryExecution(), "formatted"
         )
@@ -280,7 +280,7 @@ def test_incremental_hamming_bucketed_store_and_replay(spark):
     keys and replaying the SAME batch flips every keyed row to
     dup_history — replay idempotence at the multimodal grain."""
     from clashroyale_datapipeline_agent_spark.operators.dedup import (
-        dedup_incremental_hamming_bucketed,
+        dedup_incremental_hamming,
         hamming_band_keys,
         write_lsh_band_store,
     )
@@ -311,8 +311,8 @@ def test_incremental_hamming_bucketed_store_and_replay(spark):
             ],
             "id long, h long",
         )
-        out = dedup_incremental_hamming_bucketed(
-            spark, batch, "t_ham_store", prefix="img"
+        out = dedup_incremental_hamming(
+            batch, spark.table("t_ham_store").hint("merge"), prefix="img"
         )
         counts = {
             r["status"]: r["n"]
@@ -336,8 +336,8 @@ def test_incremental_hamming_bucketed_store_and_replay(spark):
             hamming_band_keys(kept, prefix="img"), "t_ham_store",
             num_buckets=8, mode="append",
         )
-        out2 = dedup_incremental_hamming_bucketed(
-            spark, batch, "t_ham_store", prefix="img"
+        out2 = dedup_incremental_hamming(
+            batch, spark.table("t_ham_store").hint("merge"), prefix="img"
         )
         statuses = {r["id"]: r["status"] for r in out2.collect()}
         assert all(s == "dup_history" for s in statuses.values()), statuses

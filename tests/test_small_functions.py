@@ -6,32 +6,11 @@ import threading
 import time
 
 import pytest
-from pyspark.sql import functions as F
 
-from clashroyale_datapipeline_agent_spark.functions.common import normalize_tag
 from clashroyale_datapipeline_agent_spark.operators.llm_tables import (
     reconcile_column_aliases,
 )
-from clashroyale_datapipeline_agent_spark.operators.text import bpe_ish_token_count
 from clashroyale_datapipeline_agent_spark.session import run_legs
-
-
-def test_normalize_tag(spark):
-    df = spark.createDataFrame(
-        [(" #abc123 ",), ("xyz",), ("#ALready",)], "t string"
-    )
-    got = [
-        (r["plain"], r["url"])
-        for r in df.select(
-            normalize_tag(F.col("t")).alias("plain"),
-            normalize_tag(F.col("t"), url=True).alias("url"),
-        ).collect()
-    ]
-    assert got == [
-        ("#ABC123", "%23ABC123"),
-        ("#XYZ", "%23XYZ"),
-        ("#ALREADY", "%23ALREADY"),
-    ]
 
 
 def test_reconcile_column_aliases(spark):
@@ -45,16 +24,6 @@ def test_reconcile_column_aliases(spark):
     )
     out2 = reconcile_column_aliases(df2, "deck_type", ["deck_type", "type"])
     assert out2.collect()[0]["deck_type"] == "FromType"
-
-
-def test_bpe_ish_token_count(spark):
-    df = spark.createDataFrame(
-        [("hello world",), ("don't stop-me now2day",), ("",)], "t string"
-    )
-    got = [r["n"] for r in df.select(bpe_ish_token_count(F.col("t")).alias("n")).collect()]
-    assert got[0] == 2           # two plain words
-    assert got[1] >= 6           # apostrophe/hyphen/digit boundaries split pieces
-    assert got[2] == 0
 
 
 def _props(spark):

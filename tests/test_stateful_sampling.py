@@ -1,50 +1,14 @@
-"""applyInPandasWithState operators + reservoir sampling tests."""
+"""applyInPandasWithState operators + deterministic sampling tests."""
 
 from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
-from clashroyale_datapipeline_agent_spark.operators.sampling import (
-    sample_exact_k,
-    sample_exact_k_reservoir,
-)
 from clashroyale_datapipeline_agent_spark.streaming.stateful import (
     archetype_floor_monitor,
 )
-
-
-def test_reservoir_exact_k(spark):
-    df = spark.range(0, 10_000, 1, 8).withColumn("v", F.col("id") * 2)
-    s = sample_exact_k_reservoir(df, 100, seed=7)
-    rows = s.collect()
-    assert len(rows) == 100
-    ids = [r["id"] for r in rows]
-    assert len(set(ids)) == 100  # without replacement
-    assert all(0 <= i < 10_000 for i in ids)
-    # deterministic under a fixed seed + partitioning
-    again = [r["id"] for r in sample_exact_k_reservoir(df, 100, seed=7).collect()]
-    assert sorted(ids) == sorted(again)
-    # different seed -> different sample (overwhelmingly)
-    other = [r["id"] for r in sample_exact_k_reservoir(df, 100, seed=8).collect()]
-    assert sorted(ids) != sorted(other)
-
-
-def test_reservoir_uniformity_rough(spark):
-    # mean of a uniform sample of 0..N-1 should be near N/2
-    df = spark.range(0, 50_000, 1, 16)
-    s = sample_exact_k_reservoir(df, 2_000, seed=3)
-    mean = s.agg(F.avg("id")).collect()[0][0]
-    assert 22_000 < mean < 28_000
-
-
-def test_exact_k_strict_raises(spark):
-    df = spark.range(5)
-    with pytest.raises(ValueError):
-        sample_exact_k(df, 10)
-    assert sample_exact_k(df, 10, strict=False).count() == 5
 
 
 def test_archetype_floor_monitor_stream(spark, tmp_path):

@@ -277,26 +277,24 @@ def test_maintenance_lock_owner_and_stale_handling(tmp_path):
     assert sm.break_stale_lock(root) is False
 
 
-def test_journal_crash_recovery_both_windows(spark):
+def test_journal_crash_recovery_both_windows(spark, tmp_path):
     """The two crash windows of the journaled rewrite heal without row
     loss: (a) crash BEFORE the rename — journal + staging leftovers are
     rolled back, store untouched; (b) crash AFTER the rename but before
     the deletes — recovery finishes deleting the replaced files, so the
-    transient old+new duplication disappears."""
+    transient old+new duplication disappears. Both users of the rewrite
+    are inputs: a bucketed band-key store and an ``IvfPqIndex``'s cell
+    partitions (whose new file is named relative to the rows root)."""
     from clashroyale_datapipeline_agent_spark.operators.dedup import (
         lsh_band_keys,
         write_lsh_band_store,
     )
-
-    write_lsh_band_store(
-        lsh_band_keys(_hist_docs(spark)), "t_maint_crash", num_buckets=8
+    from clashroyale_datapipeline_agent_spark.operators.similarity import (
+        IvfPqIndex,
     )
-    try:
-        lay = sm.table_layout(spark, "t_maint_crash")
-        loc = lay["location"]
-        rows0 = spark.table("t_maint_crash").count()
-        files = sm._bucket_files(loc)
-        b, bfiles = next((b, fs) for b, fs in sorted(files.items()) if fs)
+
+    def both_windows(loc, b, bfiles, new_name, count):
+        rows0 = count()
 
         # (a) pre-rename crash: journal names a new file that never landed
         os.makedirs(sm._tmp_dir(loc), exist_ok=True)
@@ -310,28 +308,62 @@ def test_journal_crash_recovery_both_windows(spark):
         sm.recover(loc)
         assert not os.path.exists(sm._journal_path(loc))
         assert all(os.path.exists(f) for f in bfiles)
-        spark.sql("REFRESH TABLE t_maint_crash")
-        assert spark.table("t_maint_crash").count() == rows0
+        assert count() == rows0
 
         # (b) post-rename crash: the "new" file is a byte-copy of the
-        # bucket's single file; old still present -> duplicated rows
+        # bucket's first file; old still present -> duplicated rows
         one = bfiles[0]
         dup_rows = sm._footer_rows(one)
-        new_name = f"part-00000-deadbeef_{b:05d}.c000.snappy.parquet"
         shutil.copyfile(one, os.path.join(loc, new_name))
         with open(sm._journal_path(loc), "w") as fh:
             json.dump(
                 {"bucket": b, "old_files": [one], "new_file": new_name}, fh
             )
-        spark.sql("REFRESH TABLE t_maint_crash")
-        assert spark.table("t_maint_crash").count() == rows0 + dup_rows
+        assert count() == rows0 + dup_rows
         sm.recover(loc)
         assert not os.path.exists(one)
         assert os.path.exists(os.path.join(loc, new_name))
-        spark.sql("REFRESH TABLE t_maint_crash")
-        assert spark.table("t_maint_crash").count() == rows0
+        assert count() == rows0
+
+    write_lsh_band_store(
+        lsh_band_keys(_hist_docs(spark)), "t_maint_crash", num_buckets=8
+    )
+    try:
+        loc = sm.table_layout(spark, "t_maint_crash")["location"]
+        b, bfiles = next(
+            (b, fs) for b, fs in sorted(sm._bucket_files(loc).items()) if fs
+        )
+
+        def table_rows():
+            spark.sql("REFRESH TABLE t_maint_crash")
+            return spark.table("t_maint_crash").count()
+
+        both_windows(
+            loc, b, bfiles,
+            f"part-00000-deadbeef_{b:05d}.c000.snappy.parquet", table_rows,
+        )
     finally:
         spark.sql("DROP TABLE IF EXISTS t_maint_crash")
+
+    idx = IvfPqIndex(spark, str(tmp_path / "ivf_crash"))
+    idx.build(
+        spark.createDataFrame(
+            [(i, [i % 2 * 100, 0]) for i in range(8)],
+            "vec_id long, vq array<long>",
+        ).repartition(2),
+        [[0.0, 0.0], [100.0, 0.0]],
+        [[[0.0], [100.0]], [[0.0], [100.0]]],
+    )
+    rows_root = os.path.join(idx.root, "rows")
+    cell = os.path.join(rows_root, "cell=0")
+    cfiles = sorted(
+        os.path.join(cell, f) for f in os.listdir(cell) if f.endswith(".parquet")
+    )
+    both_windows(
+        rows_root, 0, cfiles,
+        "cell=0/part-00000-deadbeef.c000.snappy.parquet",
+        lambda: spark.read.parquet(rows_root).count(),
+    )
 
 
 def test_streaming_store_compaction_mid_stream(spark, tmp_path):
