@@ -12,24 +12,22 @@ construction once the same data has flowed through.
 
 State is calendar-bounded (one row per day) however long the stream
 runs; per-batch work is one partial-agg shuffle to day grain plus a
-days-sized epilogue. Replay safety reuses the marker-commit chain of
-``incremental.py``/``drift_stream.py``: the marker is written before
-the version repoint, so a Structured Streaming replay of a processed
-batch never double-merges. The reading log itself is at-least-once
-(the append precedes the marker), so ``readings()`` deduplicates by
-batch_id — safe because a pre-marker replay recomputes the identical
-row from the unchanged store version.
+days-sized epilogue. Versioning, replay safety and the at-least-once
+reading log with its deduplicated read are
+``incremental._VersionedStore``'s.
 """
 
 from __future__ import annotations
 
-from pathlib import Path
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clashroyale_datapipeline_agent_spark.plans.control_queries import (
     ewma_readout,
+)
+from clashroyale_datapipeline_agent_spark.streaming.incremental import (
+    _foreach_batch,
+    _VersionedStore,
 )
 
 #: (d, n, sq) day-grain sufficient statistics
@@ -58,42 +56,16 @@ def day_batch_agg(df: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
-class ControlMonitorStore:
+class ControlMonitorStore(_VersionedStore):
     """Versioned day-grain store + chart-reading log on plain parquet."""
 
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        self.spark = spark
-        self.root = Path(root)
-        self.root.mkdir(parents=True, exist_ok=True)
-
-    def _version_file(self) -> Path:
-        return self.root / "_VERSION"
-
-    def current_version(self) -> int:
-        vf = self._version_file()
-        return int(vf.read_text()) if vf.exists() else -1
+    _schema = DAY_STORE_SCHEMA
 
     def daily(self) -> DataFrame:
-        v = self.current_version()
-        if v < 0:
-            return self.spark.createDataFrame([], DAY_STORE_SCHEMA)
-        return self.spark.read.schema(DAY_STORE_SCHEMA).parquet(
-            str(self.root / f"v{v}")
-        )
+        return self._state()
 
     def readings(self) -> DataFrame:
-        log = self.root / "control_log"
-        if not log.exists():
-            return self.spark.createDataFrame([], CONTROL_LOG_SCHEMA)
-        # A crash between the log append and the marker commit makes the
-        # replayed batch re-append its reading; the replay recomputes from
-        # the SAME store version (the repoint happens after the marker), so
-        # the duplicate row is bit-identical and batch_id dedup is exact.
-        return (
-            self.spark.read.schema(CONTROL_LOG_SCHEMA)
-            .parquet(str(log))
-            .dropDuplicates(["batch_id"])
-        )
+        return self._log("control_log", CONTROL_LOG_SCHEMA, ["batch_id"])
 
     def chart(self) -> DataFrame:
         """The full control chart over accumulated state — equals the
@@ -104,14 +76,7 @@ class ControlMonitorStore:
         """Fold the batch's day-grain stats into the store, then log
         the chart reading for the batch's newest day. Marker-committed:
         a replayed batch is a no-op on both store and log."""
-        applied = self.root / "_applied"
-        applied.mkdir(exist_ok=True)
-        marker = applied / str(batch_id)
-        target = self.current_version() + 1
-        if marker.exists():
-            committed = int(marker.read_text())
-            if self.current_version() < committed:
-                self._version_file().write_text(str(committed))
+        if self._replayed(batch_id):
             return
         batch_daily = batch_daily.localCheckpoint(eager=True)
         merged = (
@@ -140,9 +105,7 @@ class ControlMonitorStore:
             reading.write.mode("append").parquet(
                 str(self.root / "control_log")
             )
-        merged.write.mode("overwrite").parquet(str(self.root / f"v{target}"))
-        marker.write_text(str(target))
-        self._version_file().write_text(str(target))
+        self._commit(batch_id, merged)
 
 
 def start_streaming_control(
@@ -151,7 +114,6 @@ def start_streaming_control(
     *,
     value_col: str = "value",
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Continuous EWMA control gate: per micro-batch, aggregate to day
     grain (one partial-agg shuffle), fold into the store, log the
@@ -161,9 +123,4 @@ def start_streaming_control(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         store.merge_and_read(day_batch_agg(batch_df, value_col), batch_id)
 
-    writer = events.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(events, handle, checkpoint_dir)

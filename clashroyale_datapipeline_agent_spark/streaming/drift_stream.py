@@ -10,18 +10,20 @@ continuously in front of a training-data ingest.
 
 State is histogram-sized (types × 10 bins) however long the stream
 runs; the PSI epilogue is a spine join over those rows, so scoring adds
-no per-event work beyond the binning agg. Versioning and replay safety
-reuse the marker-commit chain of ``incremental.py`` (marker written
-before the repoint; a replayed batch neither rescores nor double-merges
-— idempotent on both the log and the reference).
+no per-event work beyond the binning agg. Versioning, replay safety
+and the at-least-once score log with its deduplicated read are
+``incremental._VersionedStore``'s.
 """
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from clashroyale_datapipeline_agent_spark.streaming.incremental import (
+    _foreach_batch,
+    _VersionedStore,
+)
 
 #: (event_type, bin, cnt) reference histogram rows
 PSI_STORE_SCHEMA = "event_type string, bin bigint, cnt bigint"
@@ -110,55 +112,22 @@ def psi_score(ref: DataFrame, batch: DataFrame, spark: SparkSession) -> DataFram
     )
 
 
-class PsiMonitorStore:
+class PsiMonitorStore(_VersionedStore):
     """Versioned reference histogram + PSI score log on plain parquet."""
 
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        self.spark = spark
-        self.root = Path(root)
-        self.root.mkdir(parents=True, exist_ok=True)
-
-    def _version_file(self) -> Path:
-        return self.root / "_VERSION"
-
-    def current_version(self) -> int:
-        vf = self._version_file()
-        return int(vf.read_text()) if vf.exists() else -1
+    _schema = PSI_STORE_SCHEMA
 
     def reference(self) -> DataFrame:
-        v = self.current_version()
-        if v < 0:
-            return self.spark.createDataFrame([], PSI_STORE_SCHEMA)
-        return self.spark.read.schema(PSI_STORE_SCHEMA).parquet(
-            str(self.root / f"v{v}")
-        )
+        return self._state()
 
     def scores(self) -> DataFrame:
-        log = self.root / "psi_log"
-        if not log.exists():
-            return self.spark.createDataFrame([], PSI_LOG_SCHEMA)
-        # Crash between log append and marker commit → the replay
-        # re-scores against the SAME reference version (repoint is last),
-        # so duplicates are bit-identical; (batch_id, event_type) dedup
-        # restores exactly-once reads over an at-least-once log.
-        return (
-            self.spark.read.schema(PSI_LOG_SCHEMA)
-            .parquet(str(log))
-            .dropDuplicates(["batch_id", "event_type"])
-        )
+        return self._log("psi_log", PSI_LOG_SCHEMA, ["batch_id", "event_type"])
 
     def score_and_merge(self, batch_bins: DataFrame, batch_id: int) -> None:
         """Score the batch against the current reference, append to the
         log, then fold the batch into the reference — marker-committed
         so a Structured Streaming replay is a no-op."""
-        applied = self.root / "_applied"
-        applied.mkdir(exist_ok=True)
-        marker = applied / str(batch_id)
-        target = self.current_version() + 1
-        if marker.exists():
-            committed = int(marker.read_text())
-            if self.current_version() < committed:
-                self._version_file().write_text(str(committed))
+        if self._replayed(batch_id):
             return
         ref = self.reference()
         if ref.limit(1).count() > 0:  # first batch only seeds, no score
@@ -175,9 +144,7 @@ class PsiMonitorStore:
             .groupBy("event_type", "bin")
             .agg(F.sum("cnt").cast("bigint").alias("cnt"))
         )
-        merged.write.mode("overwrite").parquet(str(self.root / f"v{target}"))
-        marker.write_text(str(target))
-        self._version_file().write_text(str(target))
+        self._commit(batch_id, merged)
 
 
 def start_streaming_psi(
@@ -186,7 +153,6 @@ def start_streaming_psi(
     value_col: str,
     *,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Continuous PSI drift gate: per micro-batch, bin the batch (one
     partial-agg shuffle), score it against the accumulated reference,
@@ -197,9 +163,4 @@ def start_streaming_psi(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         store.score_and_merge(psi_batch_bins(batch_df, value_col), batch_id)
 
-    writer = events.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(events, handle, checkpoint_dir)

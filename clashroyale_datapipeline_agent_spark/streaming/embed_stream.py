@@ -22,22 +22,21 @@ populations and updated means (a mini-batch Lloyd update per trigger)
 without ever rescanning history — per batch one (k × dim)-row
 aggregate, state bounded at k × dim rows however long the stream runs.
 
-Replay safety reuses the marker-commit chain: the marker is written
-before the version repoint, so a Structured Streaming replay never
-double-merges; the per-batch assignment log is at-least-once and
-``assignments()`` dedups by batch_id at read time (the replayed row is
-bit-identical — the store version only repoints after the marker).
+Versioning, replay safety and the at-least-once assignment log with
+its deduplicated read are ``incremental._VersionedStore``'s.
 """
 
 from __future__ import annotations
 
-from pathlib import Path
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clashroyale_datapipeline_agent_spark.operators.similarity import (
     nearest_centroid_col,
+)
+from clashroyale_datapipeline_agent_spark.streaming.incremental import (
+    _foreach_batch,
+    _VersionedStore,
 )
 
 #: quantization scale for per-dimension sums (1e6 ~ float32's precision
@@ -110,42 +109,17 @@ def minibatch_kmeans_readout(
     )
 
 
-class EmbeddingAssignStore:
+class EmbeddingAssignStore(_VersionedStore):
     """Versioned (cluster, dim) sufficient-statistics store + per-batch
     assignment log on plain parquet (lakehouse mapping: SCALE.md r9)."""
 
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        self.spark = spark
-        self.root = Path(root)
-        self.root.mkdir(parents=True, exist_ok=True)
-
-    def _version_file(self) -> Path:
-        return self.root / "_VERSION"
-
-    def current_version(self) -> int:
-        vf = self._version_file()
-        return int(vf.read_text()) if vf.exists() else -1
+    _schema = ASSIGN_STORE_SCHEMA
 
     def stats(self) -> DataFrame:
-        v = self.current_version()
-        if v < 0:
-            return self.spark.createDataFrame([], ASSIGN_STORE_SCHEMA)
-        return self.spark.read.schema(ASSIGN_STORE_SCHEMA).parquet(
-            str(self.root / f"v{v}")
-        )
+        return self._state()
 
     def assignments(self) -> DataFrame:
-        log = self.root / "assign_log"
-        if not log.exists():
-            return self.spark.createDataFrame([], ASSIGN_LOG_SCHEMA)
-        # at-least-once log, exactly-once reads: a pre-marker replay
-        # re-appends a bit-identical census (same store version), so
-        # (batch_id, cluster) dedup is exact — the control_stream rule.
-        return (
-            self.spark.read.schema(ASSIGN_LOG_SCHEMA)
-            .parquet(str(log))
-            .dropDuplicates(["batch_id", "cluster"])
-        )
+        return self._log("assign_log", ASSIGN_LOG_SCHEMA, ["batch_id", "cluster"])
 
     def chart(self) -> DataFrame:
         """Live centroid readout over accumulated state — equals
@@ -156,14 +130,7 @@ class EmbeddingAssignStore:
         """Fold a batch's (cluster, dim) statistics into the store and
         log its per-cluster assignment census. Marker-committed: a
         replayed batch is a no-op on the store."""
-        applied = self.root / "_applied"
-        applied.mkdir(exist_ok=True)
-        marker = applied / str(batch_id)
-        target = self.current_version() + 1
-        if marker.exists():
-            committed = int(marker.read_text())
-            if self.current_version() < committed:
-                self._version_file().write_text(str(committed))
+        if self._replayed(batch_id):
             return
         batch_stats = batch_stats.localCheckpoint(eager=True)
         census = batch_stats.groupBy("cluster").agg(
@@ -181,9 +148,7 @@ class EmbeddingAssignStore:
                 F.sum("sq").cast("bigint").alias("sq"),
             )
         )
-        merged.write.mode("overwrite").parquet(str(self.root / f"v{target}"))
-        marker.write_text(str(target))
-        self._version_file().write_text(str(target))
+        self._commit(batch_id, merged)
 
 
 def start_streaming_assign(
@@ -193,7 +158,6 @@ def start_streaming_assign(
     *,
     vec_col: str = "embedding",
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Continuous mini-batch k-means maintenance: per micro-batch one
     map-side assignment + one k×dim aggregate folded into the store.
@@ -206,12 +170,7 @@ def start_streaming_assign(
             batch_id,
         )
 
-    writer = vectors.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(vectors, handle, checkpoint_dir)
 
 
 def start_streaming_ivf_refresh(
@@ -228,8 +187,7 @@ def start_streaming_ivf_refresh(
     cells, rewrite only touched partitions. foreachBatch serializes
     cycles, so each batch sees the centroids the previous batch left
     behind — the streaming form of the standing maintenance job a
-    billion-vector index runs on its ingest feed. ``availableNow`` so
-    tests drain deterministically.
+    billion-vector index runs on its ingest feed.
 
     Replay note: refresh is NOT naturally idempotent (a replayed batch
     appends again), so exactly-once here relies on the checkpoint's
@@ -242,9 +200,4 @@ def start_streaming_ivf_refresh(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         index.refresh(batch_df, codebooks)
 
-    return (
-        vec_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(vec_stream, handle, checkpoint)

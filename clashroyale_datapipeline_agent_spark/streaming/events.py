@@ -111,25 +111,19 @@ def interval_join(
     ).select("l_key", "l_event_id", "l_ts", "r_event_id", "r_ts")
 
 
-def accumulate_stream_to_parquet(
-    events: DataFrame,
-    path: str,
-    checkpoint: str,
-    *,
-    trigger_once: bool = True,
-):
+def accumulate_stream_to_parquet(events: DataFrame, path: str, checkpoint: str):
     """U4's streaming form: append-only accumulation into a parquet/Delta
     staging table via ``writeStream`` (the Phase-0 ``meta_raw.extend`` loop
-    without driver-held state). Returns the started query."""
-    writer = (
+    without driver-held state). Drains what has landed (``availableNow``)
+    and returns the started query."""
+    return (
         events.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def enrich_with_dim(

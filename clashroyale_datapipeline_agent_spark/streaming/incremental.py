@@ -4,15 +4,26 @@
 
 Each micro-batch contributes per-archetype counter DELTAS (a few rows);
 the merge reads the previous compact state, sums, and writes a new
-version — O(|archetypes|) work per batch regardless of history size. With
-Delta/Iceberg the versioning collapses to a MERGE INTO; on plain parquet we
-keep an explicit version chain (write-new → marker-commit → repoint; the
-marker is the commit point, so a crash at any step either replays the merge
-against the old version or completes the repoint — never double-applies).
+version — O(|archetypes|) work per batch regardless of history size.
+
+This module also holds the streaming plane's two shared commit
+protocols and its one stream starter:
+
+- :class:`_VersionedStore` — the write-new → marker-commit → repoint
+  chain of every store whose state MUTATES per batch (the counter,
+  control, PSI, assignment, CMS and Misra-Gries stores). With
+  Delta/Iceberg it collapses to a MERGE INTO.
+- :class:`_BatchLogStore` — the append-only batch-partitioned logs of
+  the near-dup admission stores and their segment fold.
+- :func:`_foreach_batch` — the one ``writeStream.foreachBatch`` chain.
+
+Both protocols commit through :func:`_write_small`, one temp-file +
+``os.replace`` write, so a crash never leaves a torn marker.
 """
 
 from __future__ import annotations
 
+import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,49 +34,118 @@ from clashroyale_datapipeline_agent_spark.session import run_legs
 COUNTER_SCHEMA = "deck_type string, games bigint, wins bigint, losses bigint, draws bigint"
 
 
-class IncrementalCounterStore:
-    """Versioned compact counter table on plain parquet."""
+def _read_small(path: Path) -> str | None:
+    """Text of a marker file, or None when it does not exist."""
+    return path.read_text() if path.exists() else None
+
+
+def _write_small(path: Path, text: str) -> None:
+    """Replace a marker file atomically: a reader (or a replay after a
+    crash) sees the old content or the new one, never a torn write. A
+    crash inside leaves at most the hidden ``.<name>.tmp`` sibling,
+    which the next write overwrites."""
+    tmp = path.with_name(f".{path.name}.tmp")
+    tmp.write_text(text)
+    os.replace(tmp, path)
+
+
+def _foreach_batch(stream: DataFrame, handle, checkpoint: str):
+    """Start ``handle(batch_df, batch_id)`` on every micro-batch of
+    ``stream``; returns the started query. ``foreachBatch`` plus the
+    checkpoint gives at-least-once delivery per batch id, and each
+    store's replay rule turns that into exactly-once state.
+    ``availableNow`` drains what has landed and stops, so a caller
+    (a test, a scheduled job) gets deterministic batches."""
+    return (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+class _VersionedStore:
+    """One compact table per version, ``v<N>/`` on plain parquet, with
+    ``_VERSION`` naming the current one and ``_applied/<batch_id>``
+    recording the version each batch produced.
+
+    A subclass merges a batch into :meth:`_state` and hands the result
+    to :meth:`_commit`, after returning early when :meth:`_replayed`.
+    The *marker* is the commit point, written BEFORE the ``_VERSION``
+    repoint. Crash cases on replay: data written but no marker → the
+    old version is still current, the merge recomputes and overwrites
+    ``v<N+1>``; marker written but ``_VERSION`` stale → the replay
+    completes the repoint and skips the merge. Either way a batch
+    applies exactly once.
+
+    Stores that also keep a per-batch log append it BEFORE the commit,
+    so the log is at-least-once: a crash after the append makes the
+    replay append again. The replay recomputes from the SAME version
+    (the repoint comes last), so the duplicate rows are bit-identical
+    and :meth:`_log`'s dedup by batch key is exact."""
+
+    #: DDL of the versioned table
+    _schema: str
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
 
-    def _version_file(self) -> Path:
-        return self.root / "_VERSION"
-
     def current_version(self) -> int:
-        vf = self._version_file()
-        return int(vf.read_text()) if vf.exists() else -1
+        text = _read_small(self.root / "_VERSION")
+        return -1 if text is None else int(text)
 
-    def read(self) -> DataFrame:
+    def _state(self) -> DataFrame:
+        """The current version (an empty frame before the first commit)."""
         v = self.current_version()
         if v < 0:
-            return self.spark.createDataFrame([], COUNTER_SCHEMA)
-        return self.spark.read.schema(COUNTER_SCHEMA).parquet(
+            return self.spark.createDataFrame([], self._schema)
+        return self.spark.read.schema(self._schema).parquet(
             str(self.root / f"v{v}")
         )
 
-    def merge_deltas(self, deltas: DataFrame, batch_id: int) -> None:
-        """Sum deltas into the state; idempotent per batch_id.
+    def _replayed(self, batch_id: int) -> bool:
+        """True when ``batch_id`` already committed; finishes a pending
+        repoint first."""
+        committed = _read_small(self.root / "_applied" / str(batch_id))
+        if committed is None:
+            return False
+        if self.current_version() < int(committed):
+            _write_small(self.root / "_VERSION", committed)
+        return True
 
-        The *marker* (recording the target version) is the commit point,
-        written BEFORE the ``_VERSION`` repoint. Crash cases on replay:
-        data written but no marker → old version still current, the merge
-        recomputes and overwrites; marker written but ``_VERSION`` stale →
-        the replay completes the repoint and skips the merge. Either way
-        deltas apply exactly once.
-        """
-        applied = self.root / "_applied"
-        applied.mkdir(exist_ok=True)
-        marker = applied / str(batch_id)
-        if marker.exists():
-            committed = int(marker.read_text())
-            if self.current_version() < committed:
-                self._version_file().write_text(str(committed))
+    def _commit(self, batch_id: int, merged: DataFrame) -> None:
+        nxt = str(self.current_version() + 1)
+        merged.write.mode("overwrite").parquet(str(self.root / f"v{nxt}"))
+        (self.root / "_applied").mkdir(exist_ok=True)
+        _write_small(self.root / "_applied" / str(batch_id), nxt)
+        _write_small(self.root / "_VERSION", nxt)
+
+    def _log(self, name: str, schema: str, keys: list[str]) -> DataFrame:
+        """A per-batch log, deduplicated on its batch key."""
+        log = self.root / name
+        if not log.exists():
+            return self.spark.createDataFrame([], schema)
+        return (
+            self.spark.read.schema(schema).parquet(str(log)).dropDuplicates(keys)
+        )
+
+
+class IncrementalCounterStore(_VersionedStore):
+    """Versioned compact counter table on plain parquet."""
+
+    _schema = COUNTER_SCHEMA
+
+    def read(self) -> DataFrame:
+        return self._state()
+
+    def merge_deltas(self, deltas: DataFrame, batch_id: int) -> None:
+        """Sum deltas into the state; idempotent per batch_id."""
+        if self._replayed(batch_id):
             return
         merged = (
-            self.read()
+            self._state()
             .unionByName(deltas)
             .groupBy("deck_type")
             .agg(
@@ -75,10 +155,7 @@ class IncrementalCounterStore:
                 F.sum("draws").cast("bigint").alias("draws"),
             )
         )
-        nxt = self.current_version() + 1
-        merged.write.mode("overwrite").parquet(str(self.root / f"v{nxt}"))
-        marker.write_text(str(nxt))
-        self._version_file().write_text(str(nxt))
+        self._commit(batch_id, merged)
 
 
 def participant_counter_deltas(battles: DataFrame) -> DataFrame:
@@ -103,23 +180,13 @@ def start_incremental_meta_counters(
     store: IncrementalCounterStore,
     checkpoint: str,
 ):
-    """Attach the incremental maintenance to a normalized-battle stream.
-
-    ``foreachBatch`` gives exactly-once per batch id together with the
-    store's idempotence marker. Returns the started query
-    (``availableNow`` so tests drain deterministically).
-    """
+    """Attach the incremental maintenance to a normalized-battle stream;
+    returns the started query."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        deltas = participant_counter_deltas(batch_df)
-        store.merge_deltas(deltas, batch_id)
+        store.merge_deltas(participant_counter_deltas(batch_df), batch_id)
 
-    return (
-        battles_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(battles_stream, handle, checkpoint)
 
 
 class _BatchLogStore:
@@ -142,11 +209,11 @@ class _BatchLogStore:
       against its own keys and reject everything. A replay of an
       already-FOLDED batch id would be a checkpoint contract breach,
       and ``_parts`` raises instead of computing a wrong screen.
-    - commit discipline mirrors ``IncrementalCounterStore``: write the
+    - commit discipline mirrors :class:`_VersionedStore`: write the
       new segment to a hidden temp dir, verify row conservation from
-      parquet footers, atomically replace the ``_seg_state.json``
-      marker (THE commit point), then rename the segment in and delete
-      the folded dirs. A crash at any step is healed by
+      parquet footers, replace the ``_seg_state.json`` marker through
+      :func:`_write_small` (THE commit point), then rename the segment
+      in and delete the folded dirs. A crash at any step is healed by
       :meth:`_recover_segments` at the next maintenance call, and
       ``_parts`` reads marker-consistent state throughout (the worst
       crash window serves the temp path of a committed segment).
@@ -164,16 +231,23 @@ class _BatchLogStore:
     _subs: tuple[str, ...] = ()
 
     def _seg_state(self) -> dict | None:
-        p = self.root / "_seg_state.json"
-        if not p.exists():
-            return None
+        """The committed segment marker, or None before the first fold.
+        A marker that does not parse raises: the folded ``batch=*`` dirs
+        are gone, so reading on without it would drop their rows, and
+        :meth:`_recover_segments` would delete the segment holding them."""
         import json
 
+        p = self.root / "_seg_state.json"
+        text = _read_small(p)
+        if text is None:
+            return None
         try:
-            return json.loads(p.read_text())
-        except ValueError:
-            return None  # torn write of the tmp-replace protocol: impossible
-        # via os.replace, but never let a bad marker take reads down
+            return json.loads(text)
+        except ValueError as e:
+            raise RuntimeError(
+                f"corrupt segment marker {p}: {e} — the folded batches "
+                "live only in the segment it names; restore the marker"
+            ) from e
 
     def _parts(self, sub: str, exclude_batch: int | None = None) -> list[Path]:
         st = self._seg_state()
@@ -247,7 +321,6 @@ class _BatchLogStore:
         micro-batches of a live ``availableNow`` stream — admission
         reads marker-consistent state before and after."""
         import json
-        import os
         import shutil
 
         from clashroyale_datapipeline_agent_spark.operators.store_maint import (
@@ -321,11 +394,10 @@ class _BatchLogStore:
             staged: list[tuple[Path, Path]] = [r for r in results if r]
             # COMMIT: atomically replace the marker; everything after
             # this line is completed by _recover_segments if we crash
-            marker_tmp = self.root / "_seg_state.json.tmp"
-            marker_tmp.write_text(
-                json.dumps({"hi": new_hi, "folded": sorted(folded + fold_ids)})
+            _write_small(
+                self.root / "_seg_state.json",
+                json.dumps({"hi": new_hi, "folded": sorted(folded + fold_ids)}),
             )
-            os.replace(marker_tmp, self.root / "_seg_state.json")
             for tmp, seg in staged:
                 tmp.rename(seg)
             for sub in self._subs:
@@ -435,18 +507,12 @@ def start_streaming_neardup_dedup(
     micro-batch is screened against everything admitted so far (band
     keys only — history text is never rescanned) and the keepers extend
     the store. foreachBatch + per-batch-partition overwrites give
-    exactly-once admission. ``availableNow`` so tests drain
-    deterministically."""
+    exactly-once admission."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         store.apply_batch(batch_df, batch_id, **lsh_kwargs)
 
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(docs_stream, handle, checkpoint)
 
 
 class HammingBandStore(_BatchLogStore):
@@ -632,16 +698,10 @@ def start_streaming_hamming_neardup(
     ``lambda df: dhash_assets(synthesize_gradient_png_assets(df))``
     renamed to ``(id, h)`` — then screened against everything admitted
     so far and the keepers extend the store. foreachBatch + per-batch
-    partition overwrites give exactly-once admission; ``availableNow``
-    so tests drain deterministically."""
+    partition overwrites give exactly-once admission."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         hashes = to_hashes(batch_df) if to_hashes is not None else batch_df
         store.apply_batch(hashes, batch_id)
 
-    return (
-        assets_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(assets_stream, handle, checkpoint)

@@ -10,72 +10,43 @@ a 100 TB/day stream can keep per-hour sketch partitions and answer
 top-k/frequency queries over any window by summing kilobytes, never
 replaying events.
 
-Crash semantics are inherited from the marker-commit protocol
-(`incremental.py:merge_deltas` — marker written before the version
-repoint, so a replayed batch either recomputes against the old version
-or completes the repoint; deltas apply exactly once).
+Versioning and replay safety of both stores are
+``incremental._VersionedStore``'s.
 """
 
 from __future__ import annotations
-
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clashroyale_datapipeline_agent_spark.operators.sketches import cms_counters
+from clashroyale_datapipeline_agent_spark.streaming.incremental import (
+    _foreach_batch,
+    _VersionedStore,
+)
 
 CMS_STORE_SCHEMA = "row_id int, bucket int, cnt bigint"
 
 
-class CmsCounterStore:
-    """Versioned (row_id, bucket, cnt) sketch store on plain parquet.
+class CmsCounterStore(_VersionedStore):
+    """Versioned (row_id, bucket, cnt) sketch store on plain parquet;
+    merge is a SUM per (row_id, bucket) — the CMS merge operator."""
 
-    Same write-new → marker-commit → repoint chain as
-    ``IncrementalCounterStore``; merge is a SUM per (row_id, bucket) —
-    the CMS merge operator.
-    """
-
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        self.spark = spark
-        self.root = Path(root)
-        self.root.mkdir(parents=True, exist_ok=True)
-
-    def _version_file(self) -> Path:
-        return self.root / "_VERSION"
-
-    def current_version(self) -> int:
-        vf = self._version_file()
-        return int(vf.read_text()) if vf.exists() else -1
+    _schema = CMS_STORE_SCHEMA
 
     def read(self) -> DataFrame:
-        v = self.current_version()
-        if v < 0:
-            return self.spark.createDataFrame([], CMS_STORE_SCHEMA)
-        return self.spark.read.schema(CMS_STORE_SCHEMA).parquet(
-            str(self.root / f"v{v}")
-        )
+        return self._state()
 
     def merge_deltas(self, deltas: DataFrame, batch_id: int) -> None:
-        applied = self.root / "_applied"
-        applied.mkdir(exist_ok=True)
-        marker = applied / str(batch_id)
-        target = self.current_version() + 1
-        if marker.exists():
-            # batch already merged; at most the repoint is outstanding
-            committed = int(marker.read_text())
-            if self.current_version() < committed:
-                self._version_file().write_text(str(committed))
+        if self._replayed(batch_id):
             return
         merged = (
-            self.read()
+            self._state()
             .unionByName(deltas)
             .groupBy("row_id", "bucket")
             .agg(F.sum("cnt").cast("bigint").alias("cnt"))
         )
-        merged.write.mode("overwrite").parquet(str(self.root / f"v{target}"))
-        marker.write_text(str(target))
-        self._version_file().write_text(str(target))
+        self._commit(batch_id, merged)
 
 
 def start_streaming_cms(
@@ -84,7 +55,6 @@ def start_streaming_cms(
     value_col: str,
     *,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Maintain a CMS over a stream: per batch, sketch the batch
     (map-side explode + partial agg → ≤ DEPTH·WIDTH delta rows) and
@@ -100,12 +70,7 @@ def start_streaming_cms(
         )
         store.merge_deltas(deltas, batch_id)
 
-    writer = events.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(events, handle, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -172,12 +137,10 @@ def mg_reduce(counts: DataFrame, k: int = MG_K) -> tuple[DataFrame, DataFrame]:
     return kept, thresh
 
 
-class MgCounterStore:
+class MgCounterStore(_VersionedStore):
     """Versioned Misra-Gries summary store on plain parquet: ≤ k counter
     rows plus one NULL-key error row per bucket — O(buckets·k) state
-    however many keys the stream has seen. Same write-new →
-    marker-commit → repoint chain as :class:`CmsCounterStore`, so batch
-    replays apply exactly once.
+    however many keys the stream has seen.
 
     Contract (the deterministic MG guarantee, additive across merges):
     for every key, ``est ≤ exact`` and ``exact − est ≤ err(bucket)``;
@@ -185,46 +148,24 @@ class MgCounterStore:
     error row makes the bound REPORTED, not assumed — the streaming
     mirror of the batch query's measured-underestimate column."""
 
+    _schema = MG_STORE_SCHEMA
+
     def __init__(self, spark: SparkSession, root: str, k: int = MG_K) -> None:
-        self.spark = spark
-        self.root = Path(root)
+        super().__init__(spark, root)
         self.k = k
-        self.root.mkdir(parents=True, exist_ok=True)
-
-    def _version_file(self) -> Path:
-        return self.root / "_VERSION"
-
-    def current_version(self) -> int:
-        vf = self._version_file()
-        return int(vf.read_text()) if vf.exists() else -1
-
-    def _read_all(self) -> DataFrame:
-        v = self.current_version()
-        if v < 0:
-            return self.spark.createDataFrame([], MG_STORE_SCHEMA)
-        return self.spark.read.schema(MG_STORE_SCHEMA).parquet(
-            str(self.root / f"v{v}")
-        )
 
     def read(self) -> DataFrame:
         """Counter rows only (bucket, key, est)."""
-        return self._read_all().filter(F.col("key").isNotNull())
+        return self._state().filter(F.col("key").isNotNull())
 
     def errors(self) -> DataFrame:
         """Per-bucket accumulated underestimate bound (bucket, err)."""
-        return self._read_all().filter(F.col("key").isNull()).select(
+        return self._state().filter(F.col("key").isNull()).select(
             "bucket", F.col("cnt").alias("err")
         )
 
     def merge_deltas(self, deltas: DataFrame, batch_id: int) -> None:
-        applied = self.root / "_applied"
-        applied.mkdir(exist_ok=True)
-        marker = applied / str(batch_id)
-        target = self.current_version() + 1
-        if marker.exists():
-            committed = int(marker.read_text())
-            if self.current_version() < committed:
-                self._version_file().write_text(str(committed))
+        if self._replayed(batch_id):
             return
         merged = (
             self.read()
@@ -240,10 +181,7 @@ class MgCounterStore:
             .agg(F.sum("err").cast("bigint").alias("cnt"))
             .select("bucket", F.lit(None).cast("bigint").alias("key"), "cnt")
         )
-        out = kept.unionByName(err)
-        out.write.mode("overwrite").parquet(str(self.root / f"v{target}"))
-        marker.write_text(str(target))
-        self._version_file().write_text(str(target))
+        self._commit(batch_id, kept.unionByName(err))
 
 
 def start_streaming_mg(
@@ -252,7 +190,6 @@ def start_streaming_mg(
     value_col: str,
     *,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Maintain a Misra-Gries heavy-hitter summary over a stream: per
     micro-batch, count the batch exactly (one partial-agg shuffle to
@@ -265,9 +202,4 @@ def start_streaming_mg(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         store.merge_deltas(mg_batch_counts(batch_df, value_col), batch_id)
 
-    writer = events.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(events, handle, checkpoint_dir)

@@ -94,11 +94,14 @@ def test_meta_loop_stops_enough(spark, tmp_path):
         increment_sample=3,
         seed=1,
     )
-    tables = b.run(generate_leaderboard(40))
-    assert b.notes[-1].split("decision=")[1].startswith("enough")
-    assert tables["battles"].count() >= 50
-    # participant table doubles rows
-    assert tables["participants"].count() == 2 * tables["battles"].count()
+    try:
+        tables = b.run(generate_leaderboard(40))
+        assert b.notes[-1].split("decision=")[1].startswith("enough")
+        assert tables["battles"].count() >= 50
+        # participant table doubles rows
+        assert tables["participants"].count() == 2 * tables["battles"].count()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {b.bucket_table}")
 
 
 def test_meta_loop_stops_by_exhaustion(spark, tmp_path):
@@ -113,11 +116,14 @@ def test_meta_loop_stops_by_exhaustion(spark, tmp_path):
         max_loops=50,
         seed=2,
     )
-    b.run(generate_leaderboard(12))
-    assert "decision=stop" in b.notes[-1]
-    # every usable tag fetched
-    usable = sum(1 for p in generate_leaderboard(12) if p.get("tag"))
-    assert len(b.fetched_tags) == usable
+    try:
+        b.run(generate_leaderboard(12))
+        assert "decision=stop" in b.notes[-1]
+        # every usable tag fetched
+        usable = sum(1 for p in generate_leaderboard(12) if p.get("tag"))
+        assert len(b.fetched_tags) == usable
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {b.bucket_table}")
 
 
 def test_meta_loop_stops_by_max_loops(spark, tmp_path):
@@ -131,9 +137,12 @@ def test_meta_loop_stops_by_max_loops(spark, tmp_path):
         max_loops=3,
         seed=3,
     )
-    b.run(generate_leaderboard(200))
-    assert b.loop_count == 3
-    assert "decision=stop" in b.notes[-1]
+    try:
+        b.run(generate_leaderboard(200))
+        assert b.loop_count == 3
+        assert "decision=stop" in b.notes[-1]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {b.bucket_table}")
 
 
 # ---------------------------------------------------------------------------

@@ -494,3 +494,123 @@ def test_hamming_store_compaction_verified_mode(spark, tmp_path):
     # newest-batch replay stays idempotent post-compaction
     store.apply_batch(b2, 2)
     assert {r["id"] for r in store.admitted().collect()} == got
+
+
+def _fold_batches(spark):
+    PAT = 0x0001000100010001
+    return [
+        spark.createDataFrame(rows, "id long, h long")
+        for rows in (
+            [(i, i * PAT) for i in range(1, 5)],
+            [(10, 20 * PAT), (11, 2 * PAT ^ 1)],  # 11 near-dups 2
+            [(20, 30 * PAT), (21, 31 * PAT)],
+            [(30, 40 * PAT)],
+        )
+    ]
+
+
+@pytest.fixture(scope="module")
+def fold_store_template(spark, tmp_path_factory):
+    """A HammingBandStore with batches 0..3 applied and batch 0 already
+    folded into seg=0, so the next compact() folds the old segment plus
+    batches 1 and 2 into seg=2."""
+    from clashroyale_datapipeline_agent_spark.streaming.incremental import (
+        HammingBandStore,
+    )
+
+    root = tmp_path_factory.mktemp("fold") / "s"
+    store = HammingBandStore(spark, str(root))
+    batches = _fold_batches(spark)
+    for b in (0, 1):
+        store.apply_batch(batches[b], b)
+    assert store.compact() == {"folded": [0], "hi": 0}
+    for b in (2, 3):
+        store.apply_batch(batches[b], b)
+    return root
+
+
+def _log_rows(store):
+    return (
+        sorted(tuple(r) for r in store.admitted().collect()),
+        sorted(tuple(r) for r in store.read_keys().collect()),
+    )
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("window", ["staging_leg", "after_marker", "before_deletes"])
+def test_batch_log_compact_crash_windows(spark, tmp_path, monkeypatch, fold_store_template, window):
+    """Kill ``_BatchLogStore.compact`` in each window of its segment
+    fold: a staging leg raising (nothing committed), after the
+    ``_seg_state.json`` replace but before the ``.tmp_seg_*`` renames,
+    and after the renames but before the folded ``batch=*`` deletes.
+    The admitted rows and band keys read the same in the crashed state
+    and after the next compact() heals it, which leaves no temp dir."""
+    from clashroyale_datapipeline_agent_spark.streaming import incremental
+
+    shutil.copytree(fold_store_template, tmp_path / "s")
+    store = incremental.HammingBandStore(spark, str(tmp_path / "s"))
+    before = _log_rows(store)
+    assert len(before[0]) == 8
+
+    if window == "staging_leg":
+        real_rows = sm._footer_rows
+
+        def crashing(path):
+            if "/hashes/.tmp_seg_" in path:
+                raise _Crash(window)
+            return real_rows(path)
+
+        monkeypatch.setattr(sm, "_footer_rows", crashing)
+    elif window == "after_marker":
+        real_write = incremental._write_small
+
+        def crashing(path, text):
+            real_write(path, text)
+            raise _Crash(window)
+
+        monkeypatch.setattr(incremental, "_write_small", crashing)
+    else:
+        real_rmtree = shutil.rmtree
+
+        def crashing(path, *a, **k):
+            if os.path.basename(path).startswith("batch="):
+                raise _Crash(window)
+            real_rmtree(path, *a, **k)
+
+        monkeypatch.setattr(shutil, "rmtree", crashing)
+    with pytest.raises(_Crash):
+        store.compact()
+    monkeypatch.undo()
+
+    assert _log_rows(store) == before
+    committed = window != "staging_leg"
+    assert store.compact() == (
+        {"folded": [], "hi": 2} if committed else {"folded": [1, 2], "hi": 2}
+    )
+    assert _log_rows(store) == before
+    for sub in ("keys", "hashes"):
+        names = sorted(p.name for p in (tmp_path / "s" / sub).iterdir())
+        assert names == ["batch=3", "seg=2"], names
+
+
+def test_batch_log_corrupt_segment_marker_raises(spark, tmp_path, fold_store_template):
+    """A segment marker that does not parse fails reads and compaction
+    loudly, naming the file, instead of reading as 'no segment' (which
+    drops every folded batch from reads and lets compact() delete the
+    segment)."""
+    from clashroyale_datapipeline_agent_spark.streaming.incremental import (
+        HammingBandStore,
+    )
+
+    shutil.copytree(fold_store_template, tmp_path / "s")
+    store = HammingBandStore(spark, str(tmp_path / "s"))
+    marker = tmp_path / "s" / "_seg_state.json"
+    marker.write_text(marker.read_text()[:5])
+    with pytest.raises(RuntimeError, match="corrupt segment marker .*_seg_state.json"):
+        store.admitted()
+    with pytest.raises(RuntimeError, match="_seg_state.json"):
+        store.compact()
+    assert (tmp_path / "s" / "keys" / "seg=0").exists()

@@ -217,29 +217,232 @@ def test_incremental_counters_match_full_recompute(spark, tmp_path):
     assert got == want and sum(v[0] for v in got.values()) > 0
 
 
-def test_merge_deltas_marker_is_commit_point(spark, tmp_path):
-    """Replay after a crash between marker write and _VERSION repoint must
-    complete the repoint and NOT re-apply the deltas (ADVICE.md round-1:
-    the old code repointed first, so that crash window double-counted)."""
-    from clashroyale_datapipeline_agent_spark.streaming.incremental import (
-        IncrementalCounterStore,
-    )
+# ---------------------------------------------------------------------------
+# Crash matrix of the versioned stores (incremental._VersionedStore)
+# ---------------------------------------------------------------------------
 
-    store = IncrementalCounterStore(spark, str(tmp_path / "state"))
-    deltas = spark.createDataFrame(
-        [("Cycle", 10, 6, 3, 1)],
+
+def _local(spark, rows, schema):
+    """A DataFrame over ``rows`` built through Arrow: a local relation in
+    the JVM, so the merges' jobs start no Python worker to read it."""
+    import pandas as pd
+
+    names = [c.split()[0] for c in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
+
+
+def _counter_batch(spark, b):
+    return _local(
+        spark,
+        [("Cycle", 10, 6, 3, 1), ("Hog", b + 1, b, 1, 0)],
         "deck_type string, games bigint, wins bigint, losses bigint, draws bigint",
     )
-    store.merge_deltas(deltas, batch_id=0)
-    committed = store.current_version()
 
-    # simulate the crash window: marker for batch 0 exists, _VERSION stale
-    (store.root / "_VERSION").write_text(str(committed - 1))
-    store.merge_deltas(deltas, batch_id=0)  # replay
 
-    assert store.current_version() == committed  # repoint completed
-    row = {r["deck_type"]: r["games"] for r in store.read().collect()}
-    assert row == {"Cycle": 10}  # applied exactly once, not doubled
+def _control_batch(spark, b):
+    from clashroyale_datapipeline_agent_spark.streaming.control_stream import (
+        day_batch_agg,
+    )
+
+    return day_batch_agg(
+        _local(
+            spark,
+            [(f"2024-03-{b + 1:02d} 09:{i:02d}:00", 10.0 + b * (i % 3)) for i in range(12)],
+            "ts string, value double",
+        ).withColumn("ts", F.to_timestamp("ts"))
+    )
+
+
+def _psi_batch(spark, b):
+    from clashroyale_datapipeline_agent_spark.streaming.drift_stream import (
+        psi_batch_bins,
+    )
+
+    return psi_batch_bins(
+        _local(
+            spark,
+            [("x", float((i * 37 + b * 150) % 500)) for i in range(40)],
+            "event_type string, value double",
+        ),
+        "value",
+    )
+
+
+def _assign_batch(spark, b):
+    from clashroyale_datapipeline_agent_spark.streaming.embed_stream import (
+        batch_cluster_stats,
+    )
+
+    return batch_cluster_stats(
+        _local(
+            spark,
+            [([(i % 2) + 0.1 * b + 0.013 * i, (i % 2) - 0.007 * i],) for i in range(8)],
+            "embedding array<double>",
+        ),
+        [[0.0, 0.0], [1.0, 1.0]],
+    )
+
+
+def _cms_batch(spark, b):
+    return _local(spark, [(0, 1, 5), (1, 2, 7)], "row_id int, bucket int, cnt bigint")
+
+
+def _mg_batch(spark, b):
+    return _local(spark, [("a", 1, 5), ("a", 2, 7)], "bucket string, key bigint, cnt bigint")
+
+
+def _versioned_specs():
+    """kind -> (store class, merge method, batch builder, state read,
+    log read or None, expected state after batches 0, 1, 2 or None)."""
+    from clashroyale_datapipeline_agent_spark.streaming import (
+        control_stream,
+        drift_stream,
+        embed_stream,
+        incremental,
+        sketch_stream,
+    )
+
+    grow = [[(0, 1, k * 5), (1, 2, k * 7)] for k in (1, 2, 3)]
+    counters = [
+        [("Cycle", 10 * k, 6 * k, 3 * k, k), ("Hog", k * (k + 1) // 2, k * (k - 1) // 2, k, 0)]
+        for k in (1, 2, 3)
+    ]
+    return {
+        "counter": (incremental.IncrementalCounterStore, "merge_deltas",
+                    _counter_batch, "read", None, counters),
+        "control": (control_stream.ControlMonitorStore, "merge_and_read",
+                    _control_batch, "daily", "readings", None),
+        "psi": (drift_stream.PsiMonitorStore, "score_and_merge",
+                _psi_batch, "reference", "scores", None),
+        "assign": (embed_stream.EmbeddingAssignStore, "merge_and_log",
+                   _assign_batch, "stats", "assignments", None),
+        "cms": (sketch_stream.CmsCounterStore, "merge_deltas",
+                _cms_batch, "read", None, grow),
+        "mg": (sketch_stream.MgCounterStore, "merge_deltas", _mg_batch, "read",
+               None, [[("a", k, c) for _, k, c in g] for g in grow]),
+    }
+
+
+def _snapshot(spec, store):
+    _, _, _, state, log, _ = spec
+    rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
+    return (
+        store.current_version(),
+        rows(getattr(store, state)()),
+        rows(getattr(store, log)()) if log else [],
+    )
+
+
+@pytest.fixture(scope="module")
+def clean_versioned_runs(spark, tmp_path_factory):
+    """kind -> (snapshots after clean batches 0, 1, 2; a copy of the
+    store as batch 0 left it). Built once per kind."""
+    import shutil
+
+    specs, cache = _versioned_specs(), {}
+
+    def get(kind):
+        if kind not in cache:
+            cls, merge, batch, _, log, expect = spec = specs[kind]
+            root = tmp_path_factory.mktemp(f"clean_{kind}")
+            store = cls(spark, str(root / "s"))
+            snaps = []
+            for b in range(3):
+                getattr(store, merge)(batch(spark, b), b)
+                snaps.append(_snapshot(spec, store))
+                if b == 0:
+                    shutil.copytree(root / "s", root / "after_b0")
+            assert [s[0] for s in snaps] == [0, 1, 2]
+            assert all(s[1] for s in snaps) and (not log or snaps[2][2])
+            if expect:
+                assert [s[1] for s in snaps] == [sorted(e) for e in expect]
+            cache[kind] = (snaps, root / "after_b0")
+        return cache[kind]
+
+    return get
+
+
+class _Crash(Exception):
+    pass
+
+
+#: window -> (what raises, on which of the commit's two marker writes):
+#: the marker write is the first, the ``_VERSION`` repoint the second
+_CRASH_WINDOWS = {
+    "before_marker": ("write", 1),   # v<N+1> written, no marker
+    "in_marker_replace": ("replace", 1),
+    "before_repoint": ("write", 2),  # marker written, _VERSION stale
+    "in_repoint_replace": ("replace", 2),
+}
+
+
+@pytest.mark.parametrize("window", list(_CRASH_WINDOWS))
+@pytest.mark.parametrize("kind", ["counter", "control", "psi", "assign", "cms", "mg"])
+def test_versioned_store_crash_matrix(spark, tmp_path, monkeypatch, clean_versioned_runs, kind, window):
+    """Kill batch 1's commit in each window of the write-new →
+    marker → repoint chain. Reads then show batch 0's state (a per-batch
+    log may already hold batch 1's rows: it is appended before the
+    commit, at-least-once); replaying batch 1 gives what one clean apply
+    gives, log included; replaying a committed batch again is a no-op;
+    batch 2 still merges. A crash inside a marker's ``os.replace`` leaves
+    only the temp file, never a torn marker."""
+    import os
+    import shutil
+
+    from clashroyale_datapipeline_agent_spark.streaming import incremental
+
+    spec = _versioned_specs()[kind]
+    cls, merge, batch, _, _, _ = spec
+    snaps, after_b0 = clean_versioned_runs(kind)
+    shutil.copytree(after_b0, tmp_path / "s")
+    store = cls(spark, str(tmp_path / "s"))
+
+    what, k = _CRASH_WINDOWS[window]
+    calls = []
+    if what == "write":
+        real = incremental._write_small
+
+        def crashing(path, text):
+            calls.append(path)
+            if len(calls) == k:
+                raise _Crash(window)
+            real(path, text)
+
+        monkeypatch.setattr(incremental, "_write_small", crashing)
+    else:
+        real = os.replace
+
+        def crashing(src, dst):
+            if str(dst).startswith(str(store.root)):
+                calls.append(dst)
+                if len(calls) == k:
+                    raise _Crash(window)
+            real(src, dst)
+
+        monkeypatch.setattr(os, "replace", crashing)
+    with pytest.raises(_Crash):
+        getattr(store, merge)(batch(spark, 1), 1)
+    monkeypatch.undo()
+
+    marker = store.root / "_applied" / "1"
+    if window in ("before_marker", "in_marker_replace"):
+        assert not marker.exists()
+    else:
+        assert marker.read_text() == "1"
+    version, state, log = _snapshot(spec, store)
+    assert (version, state) == snaps[0][:2]
+    assert set(snaps[0][2]) <= set(log) <= set(snaps[1][2])
+
+    getattr(store, merge)(batch(spark, 1), 1)  # the replay
+    assert _snapshot(spec, store) == snaps[1]
+    files = lambda: sorted(map(str, store.root.rglob("*")))  # noqa: E731
+    before = files()
+    for b in (1, 0):  # replays of committed batches write nothing
+        getattr(store, merge)(batch(spark, b), b)
+    assert files() == before
+
+    getattr(store, merge)(batch(spark, 2), 2)
+    assert _snapshot(spec, store) == snaps[2]
 
 
 def test_interval_join_stream_matches_batch(spark, tmp_path):
@@ -326,22 +529,6 @@ def test_streaming_cms_equals_batch_sketch(spark, tmp_path, event_rows):
     }
     got = {(r.row_id, r.bucket): r.cnt for r in store.read().collect()}
     assert got == expect
-
-
-def test_cms_store_merge_idempotent(spark, tmp_path):
-    from clashroyale_datapipeline_agent_spark.streaming.sketch_stream import (
-        CmsCounterStore,
-    )
-
-    store = CmsCounterStore(spark, str(tmp_path / "s"))
-    d = spark.createDataFrame([(0, 1, 5), (1, 2, 7)], "row_id int, bucket int, cnt bigint")
-    store.merge_deltas(d, batch_id=0)
-    store.merge_deltas(d, batch_id=0)  # replay must not double-apply
-    got = {(r.row_id, r.bucket): r.cnt for r in store.read().collect()}
-    assert got == {(0, 1): 5, (1, 2): 7}
-    store.merge_deltas(d, batch_id=1)
-    got = {(r.row_id, r.bucket): r.cnt for r in store.read().collect()}
-    assert got == {(0, 1): 10, (1, 2): 14}
 
 
 def test_stream_static_enrichment_matches_batch(spark, tmp_path, event_rows):
@@ -788,24 +975,6 @@ def test_streaming_mg_bound_and_membership(spark, tmp_path):
 
     per_bucket = Counter(b for (b, _) in est.values())
     assert max(per_bucket.values()) <= store.k
-
-
-def test_mg_store_merge_idempotent(spark, tmp_path):
-    from clashroyale_datapipeline_agent_spark.streaming.sketch_stream import (
-        MgCounterStore,
-    )
-
-    store = MgCounterStore(spark, str(tmp_path / "mgs"))
-    d = spark.createDataFrame(
-        [("a", 1, 5), ("a", 2, 7)], "bucket string, key bigint, cnt bigint"
-    )
-    store.merge_deltas(d, batch_id=0)
-    store.merge_deltas(d, batch_id=0)  # replay must not double-apply
-    got = {(r.bucket, r.key): r.cnt for r in store.read().collect()}
-    assert got == {("a", 1): 5, ("a", 2): 7}
-    store.merge_deltas(d, batch_id=1)
-    got = {(r.bucket, r.key): r.cnt for r in store.read().collect()}
-    assert got == {("a", 1): 10, ("a", 2): 14}
 
 
 def test_streaming_psi_scores_drifted_batch(spark, tmp_path):

@@ -112,6 +112,24 @@ def test_determinism_sweep_rejects_unknown_names(spark, monkeypatch):
         determinism_sweep.main()
 
 
+def test_oracle_check_rejects_unknown_names(monkeypatch):
+    """A misspelled name in a subset run exits before any Spark session
+    starts, instead of being skipped and the rest reported as a pass."""
+    import pytest as _pytest
+
+    from clashroyale_datapipeline_agent_spark import session
+    from tools import oracle_check
+
+    def no_session(*a, **k):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with _pytest.raises(SystemExit, match="unknown query names.*no_such_query_xyz"):
+        oracle_check.run_check(
+            "/root/testdata/sf0.001", ["events_mg_heavy_hitters", "no_such_query_xyz"]
+        )
+
+
 def test_bench_local_emits_reversed_registry_order():
     """Rotation discipline guard: the driver keeps only a front-truncated
     TAIL of bench.py's line, so the queries map MUST be emitted in
@@ -270,6 +288,28 @@ def test_concurrent_legs_only_through_run_legs():
         and (pool.search(p.read_text()) or clear.search(p.read_text()))
     ]
     assert offenders == []
+
+
+def test_streaming_commits_only_through_incremental():
+    """One versioned-store commit and one stream starter: the
+    ``_VERSION``/``_applied`` protocol files and ``foreachBatch`` appear
+    in package code only in ``streaming/incremental.py``
+    (``_VersionedStore``, ``_foreach_batch``). Docstrings and comments
+    do not count."""
+    import ast
+
+    pkg = Path(__file__).resolve().parents[1] / "clashroyale_datapipeline_agent_spark"
+    offenders = set()
+    for p in sorted(pkg.rglob("*.py")):
+        rel = p.relative_to(pkg).as_posix()
+        if rel == "streaming/incremental.py":
+            continue
+        for n in ast.walk(ast.parse(p.read_text())):
+            if (isinstance(n, ast.Attribute) and n.attr == "foreachBatch") or (
+                isinstance(n, ast.Constant) and n.value in ("_VERSION", "_applied")
+            ):
+                offenders.add(f"{rel}:{n.lineno}")
+    assert offenders == set()
 
 
 #: Package definitions no non-test root reaches that stay anyway, each

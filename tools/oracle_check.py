@@ -4,7 +4,10 @@ Runs every registered query through BOTH engines at a given sf dir, sorts
 columns by name and rows by value, and compares cell-by-cell (exact for
 strings/ints/bools, 1e-9-relative for floats). Usage:
 
-    python tools/oracle_check.py [sf_dir]
+    python tools/oracle_check.py [sf_dir] [name1,name2,...]
+
+A name the registry does not know exits with an error before any
+Spark session starts.
 """
 
 from __future__ import annotations
@@ -81,8 +84,12 @@ def run_check(sf_dir: str, names: list[str] | None = None) -> dict[str, str | No
     import __spark_entry__ as entrymod
     from clashroyale_datapipeline_agent_spark.session import get_spark
 
-    spark = get_spark("oracle-check")
     qs = entrymod.queries()
+    if names:
+        unknown = [n for n in names if n not in qs]
+        if unknown:
+            raise SystemExit(f"unknown query names (not in registry): {unknown}")
+    spark = get_spark("oracle-check")
     sqls = entrymod.oracle_sql()
 
     con = duckdb.connect()
